@@ -183,8 +183,8 @@ object Bench {
     // — "eagerly computes every column of every row and discards the
     // result". Both actions run back-to-back per query (same cache/memo
     // state, same host window), reps and median discipline identical.
-    // BASELINE_anchors.json gains anchors for the noop entries (band_class
-    // "noop_action") without touching the old ones. SPARK_GRAFT_BENCH_NOOP=0
+    // BASELINE_anchors.json has no anchors for the noop entries, so they
+    // take no recovery rep and no violation bar. SPARK_GRAFT_BENCH_NOOP=0
     // restores the r18 entry set for A/B runs; the driver sets no env, so
     // the contract run carries both measurement sets.
     val noopAction = !sys.env.get("SPARK_GRAFT_BENCH_NOOP").contains("0")

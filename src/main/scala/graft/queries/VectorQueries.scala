@@ -409,12 +409,6 @@ object VectorQueries {
   private[graft] def quantizerRows(spark: SparkSession, dir: String,
       cells: Int = IvfCells,
       sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] = {
-    import spark.implicits._
-    val e = emb(spark, dir)
-    def toLocal(c: DataFrame): DataFrame =
-      c.select(col("cell").cast("bigint"), col("cvec"))
-        .as[(Long, Seq[Double])].collect().toSeq
-        .toDF("cell", "cvec")
     quantizers.synchronized(quantizers.get((dir, cells, sampleTarget))).getOrElse {
       val rows = quantizerRowsUnmemoized(spark, dir, cells, sampleTarget)
       quantizers.synchronized(quantizers.getOrElseUpdate((dir, cells, sampleTarget), rows))
@@ -431,10 +425,17 @@ object VectorQueries {
       k1Shape: K1Shape = K1Expr): Seq[(Long, Seq[Double])] = {
     import spark.implicits._
     val e = emb(spark, dir)
-    def toLocal(c: DataFrame): DataFrame =
-      c.select(col("cell").cast("bigint"), col("cvec"))
+    // every centroid frame assignCells sees passes through here (the
+    // seeds, each Lloyd pass, and so the memoized rows trainedCentroids
+    // serves): the k=1 shapes agree only on a non-empty frame — on an
+    // empty one the per-row argmax (K1Expr) emits every vector with a
+    // null cell, while the join shapes emit no rows
+    def toLocal(c: DataFrame): DataFrame = {
+      val rows = c.select(col("cell").cast("bigint"), col("cvec"))
         .as[(Long, Seq[Double])].collect().toSeq
-        .toDF("cell", "cvec")
+      require(rows.nonEmpty, "IVF quantizer has no centroids")
+      rows.toDF("cell", "cvec")
+    }
     val seeds = e.filter(col("vec_id") < cells)
       .select(col("vec_id").as("cell"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cvec"))

@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.streaming.CheckpointLog
+
 /** Exactly-once parquet LANDING ZONE for streaming survivors — the link
   * between the ingest front door and the batch compaction loop: the
   * front door's accepted (annotated) documents land here continuously,
@@ -188,15 +190,15 @@ object LandingSink {
   def start(survivors: DataFrame, root: String, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("60 seconds")): StreamingQuery = {
     sweepOrphans(root)
-    survivors.writeStream
-      .outputMode("append")
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        landBatch(b, root, id)
-        ()
-      }
-      .start()
+    CheckpointLog.configure(survivors.sparkSession,
+      survivors.writeStream
+        .outputMode("append")
+        .trigger(trigger)
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          landBatch(b, root, id)
+          ()
+        },
+      Some(checkpoint)).start()
   }
 
   /** ONE catch-up landing run: start under Trigger.AvailableNow, wait

@@ -43,17 +43,17 @@ object AlertSink {
   def start(events: Dataset[StatusEvent], table: AlertTable,
       trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
       checkpoint: Option[String] = None): StreamingQuery = {
-    val spark = events.sparkSession
-    import spark.implicits._
     val writer = events.writeStream
       .outputMode(OutputMode.Append)
       .trigger(trigger)
       .foreachBatch { (batch: Dataset[StatusEvent], batchId: Long) =>
-        batch.filter(col("status").like("%Error%")).as[StatusEvent]
+        // the batch already carries the query's StatusEvent encoder: an
+        // `.as` here would derive it by reflection again on every trigger
+        batch.filter(col("status").like("%Error%"))
           .collect()
           .foreach(e => table.upsert(Alert(e.job_id, e.status, e.ts, batchId)))
         ()
       }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+    CheckpointLog.configure(events.sparkSession, writer, checkpoint).start()
   }
 }

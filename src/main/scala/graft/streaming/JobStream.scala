@@ -15,9 +15,10 @@ import graft.exec.{CommandRunner, Loudness, Progress}
   * '<server> - Waiting' (ST2), hands them to a worker pool (ST5), and every
   * stage of the worker writes a status UPDATE back (ST6). Here the poll
   * loop is a micro-batch trigger, the claim is an idempotent per-batch
-  * ledger write, the worker pool is partition parallelism inside
-  * foreachBatch, and the status writes are an append-only event stream
-  * consumed by the latest-per-key view (StatusQueries).
+  * ledger write, the worker pool is up to 8 Spark tasks over the claimed
+  * jobs, one single-stage job inside foreachBatch, and the status writes
+  * are an append-only event stream consumed by the latest-per-key view
+  * (StatusQueries).
   */
 object JobStream {
 
@@ -214,7 +215,7 @@ object JobStream {
   }
 
   /** The full streaming pipeline: job-request stream → per-trigger claim →
-    * partition-parallel dispatch → status-event collector. The trigger
+    * task-parallel dispatch → status-event collector. The trigger
     * interval reproduces the reference's 60 s poll (ST1); tests run
     * availableNow. `collect` receives each batch's events (a cluster
     * deployment appends them to the status table instead). */
@@ -224,7 +225,6 @@ object JobStream {
       trigger: Trigger = Trigger.ProcessingTime("60 seconds"),
       checkpoint: Option[String] = None): StreamingQuery = {
     val spark = requests.sparkSession
-    import spark.implicits._
     val writer = requests.writeStream
       .outputMode(OutputMode.Append)
       .trigger(trigger)
@@ -234,22 +234,25 @@ object JobStream {
         // synchronous foreachBatch finishes the previous batch's jobs before
         // the next fires), and the ledger — not a queued-count — prevents
         // re-claims of already-dispatched jobs, so trigger N+1 claims
-        // exactly the unclaimed remainder (StreamingSpec pins this).
+        // exactly the unclaimed remainder (StreamingSpec pins this). The
+        // batch already carries the query's JobRequest encoder: an `.as`
+        // here would derive it by reflection again on every trigger.
         val picked = batch
           .orderBy(col("priority").desc, col("id").asc)
           .limit(dequeueLimit(capacity, 0))
-          .as[JobRequest].collect()
+          .collect()
           .filter(j => ledger.tryClaim(j.id, batchId))
         val claimEvents = picked.map(j =>
           StatusEvent(j.id, "encsrv01 - Waiting", new Timestamp(System.currentTimeMillis()), batchId))
-        // ST5 worker pool = partition parallelism across claimed jobs
-        val runEvents = spark.createDataset(picked.toIndexedSeq)
-          .repartition(math.max(1, math.min(picked.length, 8)))
+        // ST5 worker pool: the claimed jobs are driver-local, so they ship
+        // straight to up to 8 tasks — one stage, no exchange
+        val runEvents = spark.sparkContext
+          .parallelize(picked.toIndexedSeq, math.max(1, math.min(picked.length, 8)))
           .mapPartitions(_.flatMap(j => runJob(j, runner, batchId)))
           .collect()
         collect((claimEvents ++ runEvents).toSeq)
         ()
       }
-    checkpoint.fold(writer)(c => writer.option("checkpointLocation", c)).start()
+    CheckpointLog.configure(spark, writer, checkpoint).start()
   }
 }

@@ -2,16 +2,19 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.exec.{Loudness, MockRunner, Progress}
-import graft.streaming.{AlertSink, FailureWatermark, JobStream}
+import graft.streaming.{AlertSink, CheckpointLog, FailureWatermark, JobStream, LocalCheckpointFileManager}
 import graft.streaming.JobStream.{JobRequest, StatusEvent}
 
 class StreamingSpec extends AnyFunSuite {
   import TestSpark._
+
+  private val renameManager = classOf[LocalCheckpointFileManager].getName
 
   test("dequeueLimit clamps the reference's negative-LIMIT quirk (W1)") {
     assert(JobStream.dequeueLimit(1, 0) == 1)
@@ -245,6 +248,9 @@ class StreamingSpec extends AnyFunSuite {
     }
     spark.createDataset(mkJobs(1 to 2)).write.mode("append").parquet(dir.toString)
     runOnce()
+    // the start went through CheckpointLog: the restart below reads a
+    // checkpoint the rename-based manager wrote
+    assert(spark.conf.get(CheckpointLog.ManagerKey) == renameManager)
     assert(events.filter(_.status == "Done").map(_.job_id).toSet == Set(1L, 2L))
     // new files arrive; restart from the checkpoint sees ONLY the new ones
     spark.createDataset(mkJobs(3 to 4)).write.mode("append").parquet(dir.toString)
@@ -254,6 +260,107 @@ class StreamingSpec extends AnyFunSuite {
       Set(1L, 2L, 3L, 4L))
     assert(events.count(e => e.job_id == 1L && e.status == "Done") == 1,
       "restart must not re-dispatch committed arrivals")
+  }
+
+  test("checkpoint helper: a local checkpoint selects the rename-based manager; a set value stands") {
+    import org.apache.spark.sql.Dataset
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val key = CheckpointLog.ManagerKey
+    val prev = spark.conf.getOption(key)
+    def runOnce(): Unit = {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-helper-ckpt")
+      val ms = MemoryStream[Long]
+      ms.addData(1L, 2L)
+      val q = CheckpointLog.configure(spark,
+        ms.toDS().writeStream.trigger(Trigger.AvailableNow())
+          .foreachBatch { (_: Dataset[Long], _: Long) => () },
+        Some(ckpt.toString)).start()
+      TestSpark.drainAndStop(q, 120000)
+      assert(java.nio.file.Files.exists(ckpt.resolve("offsets/0")) &&
+        java.nio.file.Files.exists(ckpt.resolve("commits/0")),
+        "the batch must be logged and committed in the given checkpoint")
+    }
+    try {
+      spark.conf.unset(key)
+      runOnce()
+      assert(spark.conf.get(key) == renameManager)
+      val userChoice = classOf[FileContextBasedCheckpointFileManager].getName
+      spark.conf.set(key, userChoice)
+      runOnce()
+      assert(spark.conf.get(key) == userChoice, "a value the user set must win")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("local checkpoint manager: atomic, refuses to replace, cancels cleanly, overwrites like FileContext") {
+    import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
+    import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    val dir = java.nio.file.Files.createTempDirectory("graft-local-ckpt")
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(dir.toUri)
+    val fm = new LocalCheckpointFileManager(root, conf)
+    val fc = new FileContextBasedCheckpointFileManager(root, conf)
+    def write(m: CheckpointFileManager, name: String, text: String, overwrite: Boolean): Unit = {
+      val before = java.nio.file.Files.exists(dir.resolve(name))
+      val out = m.createAtomic(new Path(root, name), overwrite)
+      out.write(text.getBytes("UTF-8"))
+      assert(java.nio.file.Files.exists(dir.resolve(name)) == before, "nothing changes before close")
+      out.close()
+    }
+    def read(m: CheckpointFileManager, name: String): String = {
+      val in = m.open(new Path(root, name))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    write(fm, "0", "v1", overwrite = false)
+    assert(read(fm, "0") == "v1" && read(fc, "0") == "v1")
+    intercept[FileAlreadyExistsException](write(fm, "0", "v2", overwrite = false))
+    assert(read(fc, "0") == "v1", "a refused write must leave the file as it was")
+    val out = fm.createAtomic(new Path(root, "1"), overwriteIfPossible = false)
+    out.write(1)
+    out.cancel()
+    // FileContext verifies a file's .crc on read: a replaced file and its
+    // .crc must agree
+    write(fc, "2", "old", overwrite = false)
+    assert(java.nio.file.Files.exists(dir.resolve(".2.crc")))
+    write(fm, "2", "new contents", overwrite = true)
+    assert(read(fc, "2") == "new contents", "overwriteIfPossible must replace, as FileContext does")
+    write(fm, "2", "newer", overwrite = true)
+    assert(read(fc, "2") == "newer")
+    // of files 1 and 2, no temp file may remain
+    val left = java.nio.file.Files.list(dir).toArray.map(_.toString.split('/').last)
+      .filter(n => Set("1", "2").contains(n.dropWhile(_ == '.').takeWhile(_ != '.')))
+    assert(!left.exists(_.contains(".tmp")), s"left: ${left.mkString(", ")}")
+    assert(!left.contains("1"), "a cancelled write must not appear")
+  }
+
+  test("one-stage walk at capacity 8: a mixed batch is claimed once, each job's statuses match serial runJob") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    def job(id: Long, src: String, level: Option[Int], passes: Int, mp4box: Boolean) =
+      JobRequest(id, src, s"/v/$id.mp4", 1, priority = 10.0 - id,
+        normalise_level = level, passes = passes, apply_mp4box = mp4box)
+    val jobs = Seq(
+      job(1, "/v/missing-1.mov", None, 1, mp4box = false), // missing source
+      job(2, "/v/2.mov", Some(-16), 1, mp4box = false), // loudness target
+      job(3, "/v/3.mov", None, 2, mp4box = false), // 2-pass
+      job(4, "/v/4.mov", None, 1, mp4box = true), // MP4Box
+      job(5, "/v/5.mov", Some(-23), 2, mp4box = true),
+      job(6, "/v/missing-6.mov", Some(-16), 2, mp4box = true),
+      job(7, "/v/7.mov", None, 2, mp4box = true),
+      job(8, "/v/8.mov", None, 1, mp4box = false))
+    val ms = MemoryStream[JobRequest]
+    ms.addData(jobs: _*)
+    val ledger = new JobStream.ClaimLedger
+    val events = scala.collection.mutable.ArrayBuffer[StatusEvent]()
+    val q = JobStream.start(ms.toDS(), MockRunner, ledger, capacity = 8,
+      evs => events.synchronized { events ++= evs }, Trigger.AvailableNow())
+    TestSpark.drainAndStop(q, 120000)
+    assert(ledger.claimed == jobs.map(_.id -> 0L).toMap, "every job claimed once, in batch 0")
+    for (j <- jobs) {
+      val got = events.filter(_.job_id == j.id).map(e => (e.status, e.batch_id))
+      val serial = JobStream.runJob(j, MockRunner, 0L).map(e => (e.status, e.batch_id))
+      assert(got.toSeq == ("encsrv01 - Waiting", 0L) +: serial, s"job ${j.id}")
+    }
   }
 
   test("capacity refills per trigger: trigger 2 claims exactly the unclaimed remainder") {

@@ -661,4 +661,12 @@ class VectorSpec extends AnyFunSuite {
     assert(viaExpr == viaAgg, "per-row argmax diverged from aggregate argmax")
     assert(viaAgg == viaWindow, "aggregate argmax diverged from window rank")
   }
+
+  test("an empty centroid frame is refused, not assigned null cells") {
+    // cells = 0 seeds no centroid; the per-row argmax would otherwise give
+    // every vector a null cell where the join shapes give no rows
+    val e = intercept[IllegalArgumentException](
+      VectorQueries.trainedCentroids(spark, sf, cells = 0))
+    assert(e.getMessage.contains("no centroids"))
+  }
 }
