@@ -315,8 +315,8 @@ object Bench {
         val prevProvider = spark.conf.getOption(providerKey)
         spark.conf.set(providerKey,
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // r18 optimization round, measured by ProbeStream's interleaved
-        // config matrix (same-host-window comparisons; floors):
+        // r18 optimization round (interleaved same-host-window floors,
+        // recorded in OPTIMIZATION_r18.md §1):
         //   32 state partitions → 8:   9.35 → ~4.2 s. Every micro-batch —
         //     INCLUDING the 2-3 empty drain batches the quiescence
         //     heuristic needs — opens and commits one RocksDB instance
@@ -324,13 +324,11 @@ object Bench {
         //     partitions and ~0.7 s at 8. State partition count is a
         //     real deployment decision sized to keyspace/throughput (the
         //     cap state is one Long per SOURCE — a handful of keys here),
-        //     not to core count: parameterised below, default min(cpus,8)
-        //     so the driver's low-core scaling run keeps proportions.
+        //     not to core count: min(cpus, 8), so the driver's low-core
+        //     scaling run keeps proportions.
         //   RocksDB changelog checkpointing: full-snapshot-per-commit →
         //     changelog replay, −0.3-0.5 s/rep. Semantics identical.
-        val streamParts = sys.env.getOrElse(
-          "SPARK_GRAFT_STREAM_STATE_PARTITIONS",
-          math.min(cpus.toInt, 8).toString)
+        val streamParts = math.min(cpus.toInt, 8).toString
         val changelogKey =
           "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
         val prevChangelog = spark.conf.getOption(changelogKey)

@@ -34,9 +34,6 @@ object DumpPlans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // (r19: the GRAFT_PLANS_OLD_ASSIGN hook is gone with the mutable
-    // assignWindowForProbe flag — the assignment shape is a per-call
-    // parameter now, and the r18/r19 before-plans are already committed.)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val sel = SparkEntry.queries.filter { case (k, _) => only.forall(_(k)) }
     only.foreach { o =>

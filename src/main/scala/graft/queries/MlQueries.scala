@@ -278,6 +278,8 @@ object MlQueries {
           concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
           .otherwise(concat(acc, array(cur))))
 
+  private val BpeCkptEvery = 4
+
   /** Byte-pair-encoding merge learning (Sennrich et al.'s algorithm,
     * Spark-first): k rounds of [count adjacent symbol pairs weighted by
     * word frequency -> take the argmax (count desc, then lexicographic —
@@ -285,7 +287,7 @@ object MlQueries {
     * is a groupBy over the exploded adjacent-pair table of DISTINCT
     * words; the argmax is a 1-row collect (the merge RULE is model
     * state, the legitimate driver-side scalar); the merge application is
-    * a stateless per-row fold. Each round localCheckpoints the tiny
+    * a stateless per-row fold. The loop localCheckpoints the tiny
     * symbol table to truncate the k-deep expression lineage (at 100 TB
     * swap in a reliable checkpoint dir — the d9 discipline; the table
     * being cut is distinct-words-sized, not corpus-sized). Prior rounds'
@@ -295,33 +297,27 @@ object MlQueries {
     *
     * Returns BOTH the merge table and the final (word, syms, freq) frame:
     * the loop's end state IS the corpus vocabulary encoded under every
-    * learned merge, so the encode query (t21) costs no extra pass. */
+    * learned merge, so the encode query (t21) costs no extra pass.
+    *
+    * Checkpoint CADENCE (r18 optimization round): the localCheckpoint runs
+    * every `BpeCkptEvery`th merge, not every merge. It is lineage
+    * hygiene, not semantics: between checkpoints each round's argmax
+    * re-applies at most `BpeCkptEvery − 1` pending mergeCol folds on the
+    * fly, which on the distinct-words table is array arithmetic, while
+    * the eager materialization it replaces was a whole extra Spark job
+    * per round (k rounds paid 2k sequential job latencies; the LOOP, not
+    * the data, dominated warm_model_memos' bpe stage). Depth stays
+    * bounded at `BpeCkptEvery` folds so codegen never sees an unbounded
+    * expression tree. BpeSpec's exact-reference pin holds at any cadence
+    * — same merges, same end state; the interleaved cadence 1 vs 4
+    * numbers are in OPTIMIZATION_r18.md §4. */
   private[graft] def train(words0: DataFrame, k: Int)
-      : (Seq[(Int, String, String, Long)], DataFrame) =
-    trainWithCadence(words0, k,
-      sys.env.get("SPARK_GRAFT_BPE_CKPT_EVERY").flatMap(_.toIntOption)
-        .getOrElse(4).max(1)) // env override for A/B probes; semantics-free
-
-  /** [[train]] with an explicit checkpoint cadence — r18 optimization
-    * round. The per-merge localCheckpoint is lineage hygiene, not
-    * semantics: between checkpoints each round's argmax re-applies at
-    * most `ckptEvery − 1` pending mergeCol folds on the fly, which on
-    * the distinct-words table is array arithmetic, while the eager
-    * materialization it replaces was a whole extra Spark job per round
-    * (k rounds paid 2k sequential job latencies; the LOOP, not the data,
-    * dominated warm_model_memos' bpe stage). Depth stays bounded at
-    * `ckptEvery` folds so codegen never sees an unbounded expression
-    * tree. BpeSpec's exact-reference pin is unchanged — same merges,
-    * same end state at any cadence (ProbeModels asserts table equality
-    * between cadences in-process). */
-  private[graft] def trainWithCadence(words0: DataFrame, k: Int,
-      ckptEvery: Int): (Seq[(Int, String, String, Long)], DataFrame) = {
+      : (Seq[(Int, String, String, Long)], DataFrame) = {
     var words = words0
       .select(col("word"), symsCol(col("word")).as("syms"), col("freq"))
       .localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var exhausted = false
-    val CkptEvery = ckptEvery
     var pendingFolds = 0
     for (round <- 1 to k if !exhausted) {
       val top = words.filter(size(col("syms")) >= 2)
@@ -340,7 +336,7 @@ object MlQueries {
         words = words
           .select(col("word"), mergeCol(col("syms"), l, r).as("syms"), col("freq"))
         pendingFolds += 1
-        if (pendingFolds == CkptEvery) {
+        if (pendingFolds == BpeCkptEvery) {
           words = words.localCheckpoint(true)
           pendingFolds = 0
         }

@@ -303,23 +303,12 @@ object VectorQueries {
     * quantizer's 6-decimal precision); float_dot accepts mixed float/double
     * sides since round 5, so the K-per-row centroid scoring runs the same
     * codegen'd loop as v1/v3. */
-  /** k=1 assignment shape, threaded as a PARAMETER (r19 — VERDICT r18
-    * task 9 retired the mutable probe flag): production callers take the
-    * default; ProbeModels passes the older shapes explicitly so the
-    * candidates can be timed interleaved in one process, and the spec
-    * asserts all three produce identical rows. */
-  private[graft] sealed trait K1Shape
-  private[graft] case object K1Expr extends K1Shape // r19: per-row argmax, zero exchange
-  private[graft] case object K1Agg extends K1Shape // r18: aggregate argmax
-  private[graft] case object K1Window extends K1Shape // pre-r18: window rank
-
-  private def assignCells(cent: DataFrame, src: DataFrame, k: Int,
-      k1Shape: K1Shape = K1Expr): DataFrame = {
+  private[graft] def assignCells(cent: DataFrame, src: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // norms are per-vector / per-centroid — compute them once before the
     // K-way pairing, not once per (vector, cell) pair
     val cn = cent.withColumn("cn", norm(col("cvec")))
-    if (k == 1 && k1Shape == K1Expr) {
+    if (k == 1) {
       // r19 optimization round (VERDICT r18 task 3, taken to its
       // first-principles end): the r18 aggregate argmax still EXPLODED
       // the corpus K-ways through the centroid broadcast join and paid a
@@ -342,9 +331,10 @@ object VectorQueries {
       // Plan: scan → project — ZERO exchanges, no sort, no per-vector
       // shuffle row at ANY scale; assignment cost is now purely the
       // K x dims dot products, which no shape can avoid. Equivalence:
-      // ProbeModels asserts row-identical quantizers across all three
-      // shapes in one process; VectorSpec pins recall/fixed-points; the
-      // oracles hash-pin every consumer.
+      // VectorSpec checks this argmax against the rank-1 rows of the
+      // window branch below on every vector, for the seed and the
+      // trained centroids; the oracles hash-pin every consumer. The r18
+      // aggregate's numbers are in OPTIMIZATION_r18.md §5.
       val centArr = cn.agg(collect_list(
         struct(col("cell"), col("cvec"), col("cn"))).as("cents"))
       src.select(col("vec_id"), col("embedding"))
@@ -359,32 +349,19 @@ object VectorQueries {
         .select(col("vec_id"), col("embedding"),
           (-col("m.negcell")).as("cell"), col("m.ccos").as("ccos"))
     } else {
-    val scored = src.select(col("vec_id"), col("embedding"))
-      .withColumn("nrm", norm(col("embedding")))
-      .join(broadcast(cn))
-      .select(col("vec_id"), col("embedding"), col("cell"),
-        round(dot(col("embedding"), col("cvec")) /
-          (col("nrm") * col("cn")), 6).as("ccos"))
-    // ccos (the rounded cosine to the assigned centroid) rides along:
-    // v11's prototypicality IS this value, and keeping it costs nothing —
-    // every other caller projects it away explicitly
-    if (k == 1 && k1Shape == K1Agg) {
-      // r18 shape, kept for probe/plan evidence: max over
-      // struct(ccos, −cell) per vec_id — one embedding-carrying row per
-      // vector crosses the exchange instead of K, but the struct buffer
-      // forces SortAggregate and the corpus still explodes K-ways first.
-      scored
-        .groupBy(col("vec_id"))
-        .agg(max(struct(col("ccos"), (-col("cell")).as("negcell"),
-          col("embedding"))).as("m"))
-        .select(col("vec_id"), col("m.embedding").as("embedding"),
-          (-col("m.negcell")).as("cell"), col("m.ccos").as("ccos"))
-    } else {
+      // ccos (the rounded cosine to the assigned centroid) rides along:
+      // v11's prototypicality IS this value, and keeping it costs
+      // nothing — every other caller projects it away explicitly
       val w = Window.partitionBy(col("vec_id"))
         .orderBy(col("ccos").desc, col("cell").asc)
-      scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      src.select(col("vec_id"), col("embedding"))
+        .withColumn("nrm", norm(col("embedding")))
+        .join(broadcast(cn))
+        .select(col("vec_id"), col("embedding"), col("cell"),
+          round(dot(col("embedding"), col("cvec")) /
+            (col("nrm") * col("cn")), 6).as("ccos"))
+        .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
         .select(col("vec_id"), col("embedding"), col("cell"), col("ccos"))
-    }
     }
   }
 
@@ -408,52 +385,39 @@ object VectorQueries {
     * per-row assignment expression). */
   private[graft] def quantizerRows(spark: SparkSession, dir: String,
       cells: Int = IvfCells,
-      sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] = {
+      sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] =
     quantizers.synchronized(quantizers.get((dir, cells, sampleTarget))).getOrElse {
-      val rows = quantizerRowsUnmemoized(spark, dir, cells, sampleTarget)
+      import spark.implicits._
+      val e = emb(spark, dir)
+      // every centroid frame assignCells sees passes through here (the
+      // seeds, each Lloyd pass, and so the memoized rows trainedCentroids
+      // serves): on an empty frame the k=1 argmax would emit every vector
+      // with a null cell, where the k>1 window rank emits no rows
+      def toLocal(c: DataFrame): DataFrame = {
+        val rows = c.select(col("cell").cast("bigint"), col("cvec"))
+          .as[(Long, Seq[Double])].collect().toSeq
+        require(rows.nonEmpty, "IVF quantizer has no centroids")
+        rows.toDF("cell", "cvec")
+      }
+      val seeds = e.filter(col("vec_id") < cells)
+        .select(col("vec_id").as("cell"),
+          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cvec"))
+      // train on the bounded deterministic sample (full when the corpus
+      // fits the budget); the final corpus assignment (assignCells at the
+      // consumers) still covers every vector
+      val trainSet = trainSampleOf(e, e.count(), sampleTarget)
+      val trained = (1 to LloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
+        toLocal(assignCells(c, trainSet, 1)
+          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
+          .groupBy(col("cell"), col("pos"))
+          .agg(round(avg(col("v").cast("double")), 6).as("cv"))
+          .groupBy(col("cell"))
+          .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pcs"))
+          .select(col("cell"), expr("transform(pcs, x -> x.cv)").as("cvec")))
+      }
+      val rows = trained.as[(Long, Seq[Double])].collect().toSeq
       quantizers.synchronized(quantizers.getOrElseUpdate((dir, cells, sampleTarget), rows))
     }
-  }
-
-  /** The quantizer build itself, memo-free (ProbeModels times it
-    * repeatedly; production callers go through [[quantizerRows]]).
-    * `k1Shape` threads the assignment shape to [[assignCells]] for the
-    * probe's interleaved A/B — production callers never pass it. */
-  private[graft] def quantizerRowsUnmemoized(spark: SparkSession, dir: String,
-      cells: Int = IvfCells,
-      sampleTarget: Long = TrainSampleTarget,
-      k1Shape: K1Shape = K1Expr): Seq[(Long, Seq[Double])] = {
-    import spark.implicits._
-    val e = emb(spark, dir)
-    // every centroid frame assignCells sees passes through here (the
-    // seeds, each Lloyd pass, and so the memoized rows trainedCentroids
-    // serves): the k=1 shapes agree only on a non-empty frame — on an
-    // empty one the per-row argmax (K1Expr) emits every vector with a
-    // null cell, while the join shapes emit no rows
-    def toLocal(c: DataFrame): DataFrame = {
-      val rows = c.select(col("cell").cast("bigint"), col("cvec"))
-        .as[(Long, Seq[Double])].collect().toSeq
-      require(rows.nonEmpty, "IVF quantizer has no centroids")
-      rows.toDF("cell", "cvec")
-    }
-    val seeds = e.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("cell"),
-        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cvec"))
-    // train on the bounded deterministic sample (full when the corpus
-    // fits the budget); the final corpus assignment (assignCells at the
-    // consumers) still covers every vector
-    val trainSet = trainSampleOf(e, e.count(), sampleTarget)
-    val trained = (1 to LloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
-      toLocal(assignCells(c, trainSet, 1, k1Shape)
-        .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(round(avg(col("v").cast("double")), 6).as("cv"))
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pcs"))
-        .select(col("cell"), expr("transform(pcs, x -> x.cv)").as("cvec")))
-    }
-    trained.as[(Long, Seq[Double])].collect().toSeq
-  }
 
   /** Per-row cell assignment as a pure Column expression over the LOCAL
     * quantizer rows — the streaming-safe form of [[assignCells]] (no

@@ -381,12 +381,6 @@ object EventStream {
       // None = no deletions recorded yet, the gate is absent from the plan
       suppressedFps: Option[DataFrame] = None)
 
-  /** The suppression leg of the composed front doors: absent (not a
-    * no-op join — absent from the PLAN) until a forget pass records
-    * fingerprints. */
-  private def suppressIfListed(docs: DataFrame, art: IngestArtifacts): DataFrame =
-    art.suppressedFps.fold(docs)(suppressAtIngest(docs, _))
-
   /** Production refresh hook for the stream-static gate artifacts: a
     * PATH-backed static DataFrame caches its file listing at resolution
     * (InMemoryFileIndex), so a running stream-static join keeps probing
@@ -430,16 +424,27 @@ object EventStream {
     * state broadcasts. The within-horizon exact dedup
     * ([[dedupByFingerprint]]) is the one stateful leg and composes
     * upstream when arrivals carry an event-time column. */
-  def ingestFrontDoor(docs: DataFrame, art: IngestArtifacts): DataFrame = {
-    val gated = nearDupGateAtIngest(
-      suppressIfListed(
-        dedupAgainstCorpus(filterQualityAtIngest(docs), art.corpusFps), art),
+  def ingestFrontDoor(docs: DataFrame, art: IngestArtifacts): DataFrame =
+    annotate(gate(docs, art), art)
+
+  /** The front doors' gate chain: quality → corpus exact dedup →
+    * [suppression] → corpus near-dup bands. Survivors keep the input
+    * schema. The suppression leg is absent (not a no-op join — absent
+    * from the PLAN) until a forget pass records fingerprints. */
+  private def gate(docs: DataFrame, art: IngestArtifacts): DataFrame = {
+    val deduped = dedupAgainstCorpus(filterQualityAtIngest(docs), art.corpusFps)
+    nearDupGateAtIngest(
+      art.suppressedFps.fold(deduped)(suppressAtIngest(deduped, _)),
       art.corpusBands)
+  }
+
+  /** The front doors' annotator chain: classifier score → BPE token
+    * pricing → DSIR importance. */
+  private def annotate(docs: DataFrame, art: IngestArtifacts): DataFrame =
     scoreImportanceAtIngest(
       encodeAtIngest(
-        scoreQualityAtIngest(gated, art.model), art.merges),
+        scoreQualityAtIngest(docs, art.model), art.merges),
       art.bucketWeights)
-  }
 
   /** [[ingestFrontDoor]] with the per-domain budget gate in its
     * production position: gates → DOMAIN CAP → annotators. The ordering
@@ -455,28 +460,21 @@ object EventStream {
     * a typed transformWithState leg and its row type carries exactly
     * what the annotators consume. It is the topology's ONE stateful leg
     * — one TTL'd Long per source, first-arrived-first-kept within the
-    * horizon ([[domainCapAtIngestTws]]'s documented online semantics) —
+    * horizon ([[DomainCapProcessor]]'s documented online semantics) —
     * everything before and after stays stateless. Requires the RocksDB
     * state store provider (the transformWithState contract). */
   def ingestFrontDoorCapped(docs: DataFrame, art: IngestArtifacts,
       cap: Long,
       ttl: java.time.Duration = java.time.Duration.ofDays(7)): DataFrame = {
     import docs.sparkSession.implicits._
-    val gated = nearDupGateAtIngest(
-      suppressIfListed(
-        dedupAgainstCorpus(filterQualityAtIngest(docs), art.corpusFps), art),
-      art.corpusBands)
-    val capped = gated
+    val capped = gate(docs, art)
       .select(col("doc_id"), col("source"), col("text")).as[CapTextDoc]
       .groupByKey(_.source)
       .transformWithState(
         new DomainCapProcessor[CapTextDoc](cap, ttl, _.doc_id),
         TimeMode.ProcessingTime(), OutputMode.Append())
       .toDF()
-    scoreImportanceAtIngest(
-      encodeAtIngest(
-        scoreQualityAtIngest(capped, art.model), art.merges),
-      art.bucketWeights)
+    annotate(capped, art)
   }
 
   /** Streaming FRAME-level media dedup at ingest — the multimodal leg of
@@ -507,26 +505,7 @@ object EventStream {
   case class CapDoc(doc_id: Long, source: String)
   case class CapLedger(n: Long)
 
-  /** Streaming per-domain BUDGET gate — the online face of batch t29's
-    * anti-domain-dominance cap: once a source has contributed `cap`
-    * documents, further arrivals from it die at ingest. Unlike the six
-    * stateless gates this one is inherently STATEFUL (a budget is a
-    * running count), so it rides flatMapGroupsWithState keyed by source —
-    * one Long per domain ever seen, the smallest possible state (a 100 TB
-    * crawl has millions of hosts; millions of Longs is nothing, and
-    * [[domainCapAtIngestTws]] — the transformWithState twin below — adds
-    * the processing-time TTL that ages out dead hosts).
-    *
-    * Semantics are FIRST-ARRIVED-FIRST-KEPT (within a micro-batch, doc_id
-    * order for determinism) — the only semantics an online budget can
-    * have. Batch t29 ranks by hash priority instead: the OFFLINE form,
-    * where the whole corpus is visible and an unbiased sample is
-    * preferred over arrival order. The documented divergence is the same
-    * trade the funnel makes: emitting at ingest costs event-order
-    * dependence; a pipeline wanting t29's unbiased cap re-ranks offline
-    * at compaction time. EventStreamSpec pins the in-order-feed parity:
-    * streaming keeps exactly batch row_number-by-doc_id <= cap. */
-  /** Bounded selection of the `room` smallest doc_ids in one stream pass —
+  /** Bounded selection of the `room` smallest ids in one stream pass —
     * a max-heap capped at `room` entries: O(n log room) time,
     * O(min(room, batch)) memory — instead of materializing and sorting
     * the whole group (a near-budget hot source could deliver millions of
@@ -536,9 +515,7 @@ object EventStream {
     * seeding it with `room` would allocate a cap-sized array per source
     * per micro-batch even for a handful of rows — and a practically-
     * unlimited cap (>= 2^31) would OOM outright. The queue grows on
-    * demand and never exceeds room+1 live entries. Returned ascending.
-    * ONE definition serving both state-API forms of the gate, so their
-    * selection semantics cannot drift. */
+    * demand and never exceeds room+1 live entries. Returned ascending. */
   private def smallestBy[T](it: Iterator[T], room: Int, id: T => Long)(
       implicit ct: scala.reflect.ClassTag[T]): Array[T] = {
     val heap = new java.util.PriorityQueue[T](
@@ -553,11 +530,8 @@ object EventStream {
     take
   }
 
-  private def smallestByDocId(it: Iterator[CapDoc], room: Int): Array[CapDoc] =
-    smallestBy(it, room, (_: CapDoc).doc_id)
-
   /** One budget decision against a TTL'd ledger — the shared body of both
-    * transformWithState cap processors, so the row type the cap carries
+    * uses of [[DomainCapProcessor]], so the row type the cap carries
     * (bare [[CapDoc]], or [[CapTextDoc]] inside the composed front door)
     * cannot change its selection or update semantics. NOTE the ledger is
     * updated only when something is taken: an exhausted-but-hot source
@@ -568,51 +542,45 @@ object EventStream {
       implicit ct: scala.reflect.ClassTag[T]): Iterator[T] = {
     val have = if (state.exists()) state.get().n else 0L
     val room = math.min((cap - have).max(0L), Int.MaxValue.toLong).toInt
-    if (room == 0) { it.foreach(_ => ()); Iterator.empty }
-    else {
+    if (room == 0) {
+      // exhausted budget on a still-hot source is the gate's steady
+      // state: drain without materializing or sorting
+      it.foreach(_ => ()); Iterator.empty
+    } else {
       val take = smallestBy(it, room, id)
       state.update(CapLedger(have + take.length))
       take.iterator
     }
   }
 
-  def domainCapAtIngest(docs: Dataset[CapDoc], cap: Long): Dataset[CapDoc] = {
-    import docs.sparkSession.implicits._
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState[CapLedger, CapDoc](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        GroupStateTimeout.NoTimeout) {
-        case (_, it, state: GroupState[CapLedger]) =>
-          val have = state.getOption.map(_.n).getOrElse(0L)
-          val room = math.min((cap - have).max(0L), Int.MaxValue.toLong).toInt
-          if (room == 0) {
-            // exhausted budget on a still-hot source is the gate's
-            // steady state: drain without materializing or sorting
-            it.foreach(_ => ())
-            Iterator.empty
-          } else {
-            val take = smallestByDocId(it, room)
-            state.update(CapLedger(have + take.length))
-            take.iterator
-          }
-      }
-  }
-
-  /** [[domainCapAtIngest]] on the modern state API with a processing-time
-    * TTL (r12 verdict task 4 — the latestStatusTws precedent,
-    * [[graft.streaming.JobStream.LatestStatusProcessor]]): the budget
-    * ledger is a TTL'd ValueState, so a source idle past `ttl` frees its
-    * one Long instead of pinning the state store forever — the one
-    * streaming state that previously had no aging story. Expiry RESETS
-    * the budget: a crawl host silent for a week is a new host as far as
-    * dominance control cares (the within-horizon watermark-eviction
-    * trade [[dedupByFingerprint]] documents — aging bounds state, and
-    * the periodic batch re-rank at compaction time owns cross-horizon
-    * fairness). Inside the horizon, semantics are IDENTICAL to the
-    * untimed form — same [[smallestByDocId]] selection, same
-    * first-arrived-first-kept — which EventStreamSpec pins by running
-    * both forms over one feed. Requires the RocksDB state store
-    * provider (the transformWithState contract). */
+  /** Streaming per-domain BUDGET gate — the online face of batch t29's
+    * anti-domain-dominance cap: once a source has contributed `cap`
+    * documents, further arrivals from it die at ingest. Unlike the six
+    * stateless gates this one is inherently STATEFUL (a budget is a
+    * running count), so it rides transformWithState keyed by source —
+    * one Long per domain ever seen, the smallest possible state (a 100 TB
+    * crawl has millions of hosts; millions of Longs is nothing).
+    *
+    * Semantics are FIRST-ARRIVED-FIRST-KEPT (within a micro-batch, id
+    * order for determinism) — the only semantics an online budget can
+    * have. Batch t29 ranks by hash priority instead: the OFFLINE form,
+    * where the whole corpus is visible and an unbiased sample is
+    * preferred over arrival order. The documented divergence is the same
+    * trade the funnel makes: emitting at ingest costs event-order
+    * dependence; a pipeline wanting t29's unbiased cap re-ranks offline
+    * at compaction time. EventStreamSpec pins the in-order-feed parity:
+    * streaming keeps exactly batch row_number-by-doc_id <= cap.
+    *
+    * The ledger is a ValueState with a processing-time TTL (r12 verdict
+    * task 4 — the latestStatusTws precedent,
+    * [[graft.streaming.JobStream.LatestStatusProcessor]]), so a source
+    * idle past `ttl` frees its one Long instead of pinning the state
+    * store forever. Expiry RESETS the budget: a crawl host silent for a
+    * week is a new host as far as dominance control cares (the
+    * within-horizon watermark-eviction trade [[dedupByFingerprint]]
+    * documents — aging bounds state, and the periodic batch re-rank at
+    * compaction time owns cross-horizon fairness). Requires the RocksDB
+    * state store provider (the transformWithState contract). */
   class DomainCapProcessor[T](cap: Long, ttl: java.time.Duration,
       id: T => Long)(implicit ct: scala.reflect.ClassTag[T])
       extends StatefulProcessor[String, T, T] {
@@ -635,6 +603,9 @@ object EventStream {
     * bare gate and the composed front door cannot drift. */
   case class CapTextDoc(doc_id: Long, source: String, text: String)
 
+  /** The bare budget gate over (doc_id, source): [[DomainCapProcessor]]
+    * keyed by source, first-arrived-first-kept with doc_id breaking ties
+    * inside a micro-batch. */
   def domainCapAtIngestTws(docs: Dataset[CapDoc], cap: Long,
       ttl: java.time.Duration = java.time.Duration.ofDays(7)): Dataset[CapDoc] = {
     import docs.sparkSession.implicits._

@@ -87,25 +87,34 @@ object JobStream {
     events.groupByKey(_.job_id).mapGroupsWithState[JobState, (Long, String)](
       GroupStateTimeout.NoTimeout) {
       case (id, evs, state: GroupState[JobState]) =>
-        val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, rank(e.status)))
-        val init = state.getOption
-        val next = sorted.foldLeft(init) { (cur, e) =>
-          val r = rank(e.status)
-          cur match {
-            case Some(s) if r < s.rank => cur // refuse regression
-            case _ => Some(JobState(e.status, r, e.ts.getTime))
-          }
-        }
-        // terminal jobs evict their state: unbounded job streams would
-        // otherwise grow the state store forever (a late event for an
-        // evicted key restarts from scratch, which forward-only absorbs)
-        next match {
-          case Some(s) if isTerminal(s.rank) => state.remove()
-          case Some(s) => state.update(s)
-          case None => ()
-        }
-        (id, next.map(_.status).getOrElse("Not Encoding"))
+        advanceStatus(id, evs, state.getOption, () => state.remove(), state.update)
     }
+  }
+
+  /** One job's status decision — the shared body of [[latestStatus]] and
+    * [[LatestStatusProcessor]], so the two state APIs cannot drift: the
+    * events sort by (ts, rank) and fold forward-only from the prior
+    * state, refusing regressions. A terminal job evicts its state: an
+    * unbounded job stream would otherwise grow the state store forever
+    * (a late event for an evicted key restarts from scratch, which
+    * forward-only absorbs). */
+  private def advanceStatus(id: Long, evs: Iterator[StatusEvent],
+      prior: Option[JobState], evict: () => Unit,
+      keep: JobState => Unit): (Long, String) = {
+    val next = evs.toSeq.sortBy(e => (e.ts.getTime, rank(e.status)))
+      .foldLeft(prior) { (cur, e) =>
+        val r = rank(e.status)
+        cur match {
+          case Some(s) if r < s.rank => cur // refuse regression
+          case _ => Some(JobState(e.status, r, e.ts.getTime))
+        }
+      }
+    next match {
+      case Some(s) if isTerminal(s.rank) => evict()
+      case Some(s) => keep(s)
+      case None => ()
+    }
+    (id, next.map(_.status).getOrElse("Not Encoding"))
   }
 
   /** [[latestStatus]] on the modern state API (Spark 4 `transformWithState`
@@ -115,7 +124,8 @@ object JobStream {
     * abandoned mid-flight (worker died without emitting Error) stops
     * pinning the state store after `ttl`. Terminal jobs still clear
     * eagerly. Requires the RocksDB state store provider. The
-    * mapGroupsWithState twin stays for batch use and as a semantics pin. */
+    * mapGroupsWithState form stays for batch use under any state store
+    * provider. */
   class LatestStatusProcessor(ttl: java.time.Duration)
       extends StatefulProcessor[Long, StatusEvent, (Long, String)] {
     @transient private var state: ValueState[JobState] = _
@@ -123,23 +133,10 @@ object JobStream {
       state = getHandle.getValueState[JobState]("latest",
         org.apache.spark.sql.Encoders.product[JobState], TTLConfig(ttl))
     override def handleInputRows(id: Long, evs: Iterator[StatusEvent],
-        timers: TimerValues): Iterator[(Long, String)] = {
-      val sorted = evs.toSeq.sortBy(e => (e.ts.getTime, rank(e.status)))
-      val init = if (state.exists()) Some(state.get()) else None
-      val next = sorted.foldLeft(init) { (cur, e) =>
-        val r = rank(e.status)
-        cur match {
-          case Some(s) if r < s.rank => cur // refuse regression
-          case _ => Some(JobState(e.status, r, e.ts.getTime))
-        }
-      }
-      next match {
-        case Some(s) if isTerminal(s.rank) => state.clear()
-        case Some(s) => state.update(s)
-        case None => ()
-      }
-      Iterator.single((id, next.map(_.status).getOrElse("Not Encoding")))
-    }
+        timers: TimerValues): Iterator[(Long, String)] =
+      Iterator.single(advanceStatus(id, evs,
+        if (state.exists()) Some(state.get()) else None,
+        () => state.clear(), state.update))
   }
 
   def latestStatusTws(events: Dataset[StatusEvent],

@@ -88,66 +88,93 @@ class EventStreamSpec extends AnyFunSuite {
     q.stop()
   }
 
-  test("streaming domain-budget gate: first-arrived-first-kept across batches, one counter per source") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[(Long, String)]
-    val docs = ms.toDF().toDF("doc_id", "source").as[EventStream.CapDoc]
-    val q = EventStream.domainCapAtIngest(docs, cap = 2).writeStream
-      .format("memory").queryName("capped").outputMode("append").start()
-    def kept() = spark.table("capped").select("doc_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    // batch 1: srcA over budget within one batch (doc_id order breaks the
-    // tie), srcB exactly at budget
-    ms.addData((3L, "srcA"), (1L, "srcA"), (2L, "srcA"), (10L, "srcB"), (11L, "srcB"))
-    q.processAllAvailable()
-    assert(kept() == Seq(1L, 2L, 10L, 11L), s"got ${kept()}")
-    // batch 2: both sources exhausted -> all die; a NEW source starts fresh
-    ms.addData((4L, "srcA"), (12L, "srcB"), (20L, "srcC"))
-    q.processAllAvailable()
-    assert(kept() == Seq(1L, 2L, 10L, 11L, 20L), s"got ${kept()}")
-    // in-order-feed parity with the batch arrival-order cap: the stream's
-    // keep set equals row_number over (partition by source order by
-    // doc_id) <= cap over everything fed — the documented online twin of
-    // t29's offline hash-priority cap
-    val fed = Seq((3L, "srcA"), (1L, "srcA"), (2L, "srcA"), (10L, "srcB"),
-      (11L, "srcB"), (4L, "srcA"), (12L, "srcB"), (20L, "srcC"))
-      .toDF("doc_id", "source")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"source").orderBy($"doc_id")
-    val batchTwin = fed
-      .withColumn("rk", org.apache.spark.sql.functions.row_number().over(w))
-      .filter($"rk" <= 2).select("doc_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(kept() == batchTwin, s"stream ${kept()} != batch twin $batchTwin")
-    // state is one Long per source ever seen
-    assert(q.lastProgress.stateOperators.nonEmpty &&
-      q.lastProgress.stateOperators.head.numRowsTotal == 3,
-      "budget state must be exactly one counter per source")
-    q.stop()
-  }
-
-  test("domain cap on transformWithState: within-horizon parity, budget resets after TTL expiry") {
-    // r12 verdict task 4: the TTL'd twin must behave exactly like the
-    // untimed gate inside the horizon (same smallestByDocId selection,
-    // same first-arrived-first-kept), and a source idle past the TTL
-    // frees its ledger — budget RESETS, the documented aging semantics.
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
+  /** Runs `body` under the RocksDB state store provider, the
+    * transformWithState contract, then restores the session's own. */
+  private def withRocksDb[T](body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    try body finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+  }
+
+  /** Drains everything fed so far through the bare budget gate and appends
+    * the kept doc_ids to `out`. transformWithState in processing-time mode
+    * never quiesces under a continuous trigger (processAllAvailable would
+    * wait forever — the latestStatusTws lesson), so each stage runs an
+    * AvailableNow query over ONE shared checkpoint: state carries across
+    * the restarts, which doubles as the recovery pin. */
+  private def drainCap(docs: org.apache.spark.sql.Dataset[EventStream.CapDoc],
+      ckpt: String, ttl: java.time.Duration,
+      out: scala.collection.mutable.ArrayBuffer[Long])
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val q = EventStream.domainCapAtIngestTws(docs, cap = 2, ttl = ttl).writeStream
+      .option("checkpointLocation", ckpt)
+      .outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .foreachBatch {
+        (b: org.apache.spark.sql.Dataset[EventStream.CapDoc], _: Long) =>
+          val ids = b.collect().map(_.doc_id)
+          out.synchronized { out ++= ids }
+          ()
+      }
+      .start()
+    TestSpark.drainAndStop(q, 120000)
+    q
+  }
+
+  test("streaming domain-budget gate: first-arrived-first-kept across batches, one counter per source") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    withRocksDb {
+      val ms = MemoryStream[(Long, String)]
+      val docs = ms.toDF().toDF("doc_id", "source").as[EventStream.CapDoc]
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-cap-budget").toString
+      val out = scala.collection.mutable.ArrayBuffer[Long]()
+      // one drain per batch; a week's TTL cannot expire mid-test
+      def drain() = drainCap(docs, ckpt, java.time.Duration.ofDays(7), out)
+      def kept() = out.synchronized(out.sorted.toSeq)
+      // batch 1: srcA over budget within one batch (doc_id order breaks the
+      // tie), srcB exactly at budget
+      ms.addData((3L, "srcA"), (1L, "srcA"), (2L, "srcA"), (10L, "srcB"), (11L, "srcB"))
+      drain()
+      assert(kept() == Seq(1L, 2L, 10L, 11L), s"got ${kept()}")
+      // batch 2: both sources exhausted -> all die; a NEW source starts fresh
+      ms.addData((4L, "srcA"), (12L, "srcB"), (20L, "srcC"))
+      val q = drain()
+      assert(kept() == Seq(1L, 2L, 10L, 11L, 20L), s"got ${kept()}")
+      // in-order-feed parity with the batch arrival-order cap: the stream's
+      // keep set equals row_number over (partition by source order by
+      // doc_id) <= cap over everything fed — the documented online twin of
+      // t29's offline hash-priority cap
+      val fed = Seq((3L, "srcA"), (1L, "srcA"), (2L, "srcA"), (10L, "srcB"),
+        (11L, "srcB"), (4L, "srcA"), (12L, "srcB"), (20L, "srcC"))
+        .toDF("doc_id", "source")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy($"source").orderBy($"doc_id")
+      val batchTwin = fed
+        .withColumn("rk", org.apache.spark.sql.functions.row_number().over(w))
+        .filter($"rk" <= 2).select("doc_id")
+        .collect().map(_.getLong(0)).sorted.toSeq
+      assert(kept() == batchTwin, s"stream ${kept()} != batch twin $batchTwin")
+      // state is one Long per source ever seen
+      assert(q.lastProgress.stateOperators.nonEmpty &&
+        q.lastProgress.stateOperators.head.numRowsTotal == 3,
+        "budget state must be exactly one counter per source")
+    }
+  }
+
+  test("domain cap on transformWithState: within-horizon parity, budget resets after TTL expiry") {
+    // r12 verdict task 4: inside the horizon the TTL'd budget binds
+    // first-arrived-first-kept, and a source idle past the TTL frees its
+    // ledger — budget RESETS, the documented aging semantics.
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    withRocksDb {
       val ms = MemoryStream[(Long, String)]
       val docs = ms.toDF().toDF("doc_id", "source").as[EventStream.CapDoc]
       val ckpt = java.nio.file.Files.createTempDirectory("graft-cap-tws").toString
       val out = scala.collection.mutable.ArrayBuffer[Long]()
-      // transformWithState in processing-time mode never quiesces under a
-      // continuous trigger (processAllAvailable would wait forever — the
-      // latestStatusTws lesson), so each stage runs an AvailableNow query
-      // over ONE shared checkpoint: state carries across the restarts,
-      // which doubles as the recovery pin.
       // TTL sizing: the within-horizon stage drains two micro-batches
       // under one AvailableNow query, and the ledger must NOT expire
       // between them — a too-tight TTL races micro-batch scheduling on a
@@ -155,23 +182,9 @@ class EventStreamSpec extends AnyFunSuite {
       // expire srcA mid-drain and keep 4L). 10 s dwarfs any plausible
       // intra-drain gap while keeping the expiry stage's sleep bounded.
       val ttl = java.time.Duration.ofSeconds(10)
-      def drain(): Unit = {
-        val q = EventStream.domainCapAtIngestTws(docs, cap = 2,
-          ttl = ttl).writeStream
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[EventStream.CapDoc], _: Long) =>
-              val ids = b.collect().map(_.doc_id)
-              out.synchronized { out ++= ids }
-              ()
-          }
-          .start()
-        TestSpark.drainAndStop(q, 120000)
-      }
+      def drain(): Unit = drainCap(docs, ckpt, ttl, out)
       def kept() = out.synchronized(out.sorted.toSeq)
-      // within the horizon: the untimed gate's spec feed (batches 1+2 in
+      // within the horizon: the budget test's feed (batches 1+2 in
       // one drain — the drain-to-drain gap includes query startup, which
       // must not eat into the deliberately-short test TTL), identical
       // keeps: srcA capped at {1,2} with 4L losing, srcB at budget, srcC
@@ -189,7 +202,7 @@ class EventStreamSpec extends AnyFunSuite {
       drain()
       assert(kept() == Seq(1L, 2L, 5L, 6L, 10L, 11L, 20L),
         s"expired source must start a fresh, still-capped budget; got ${kept()}")
-    } finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
+    }
   }
 
   test("stream-static anti-join drops arrivals already in the corpus, keeps zero state") {

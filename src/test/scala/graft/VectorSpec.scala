@@ -645,21 +645,39 @@ class VectorSpec extends AnyFunSuite {
     assert(purged.count() == idx.count() - 1)
   }
 
-  test("k=1 assignment shapes (expr / agg / window) train identical quantizers") {
-    // r19 optimization round: assignCells' k=1 default moved to the
-    // per-row argmax (K1Expr — zero exchange); the r18 aggregate and the
-    // pre-r18 window shapes stay reachable as parameters for exactly this
-    // pin and for ProbeModels' interleaved timing. The full Lloyd loop is
-    // the harshest equivalence test: any divergence in a single
-    // assignment compounds across iterations into different centroids.
-    val viaExpr = VectorQueries.quantizerRowsUnmemoized(spark, sf,
-      k1Shape = VectorQueries.K1Expr)
-    val viaAgg = VectorQueries.quantizerRowsUnmemoized(spark, sf,
-      k1Shape = VectorQueries.K1Agg)
-    val viaWindow = VectorQueries.quantizerRowsUnmemoized(spark, sf,
-      k1Shape = VectorQueries.K1Window)
-    assert(viaExpr == viaAgg, "per-row argmax diverged from aggregate argmax")
-    assert(viaAgg == viaWindow, "aggregate argmax diverged from window rank")
+  test("k=1 argmax assignment equals the window path's rank-1 rows") {
+    // assignCells takes a per-row argmax at k=1 (zero exchange) and a
+    // window rank at k>1 (the v6/v13/v15 probe sets). The window's rank-1
+    // row must be the argmax row — same cell, bit-identical ccos — for
+    // every vector, both at the seed centroids the Lloyd loop starts from
+    // and at the trained quantizer it ends at: any divergence in a single
+    // assignment would compound across the Lloyd passes.
+    import org.apache.spark.sql.expressions.Window
+    val e = graft.plans.Tables.table(spark, sf, "embeddings")
+    val trained = VectorQueries.trainedCentroids(spark, sf)
+    val seeds = e.filter(col("vec_id") < trained.count())
+      .select(col("vec_id").as("cell"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cvec"))
+    val byRank = Window.partitionBy(col("vec_id"))
+      .orderBy(col("ccos").desc, col("cell").asc)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id"), col("cell").cast("bigint"), col("ccos"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .sortBy(_._1).toSeq
+    val nVectors = e.count()
+    Seq("seed" -> seeds, "trained" -> trained).foreach { case (label, cent) =>
+      val argmax = rows(VectorQueries.assignCells(cent, e, 1))
+      val rank1 = rows(VectorQueries.assignCells(cent, e, 2)
+        .withColumn("rk", row_number().over(byRank)).filter(col("rk") === 1))
+      assert(argmax.size == nVectors, s"$label: argmax missed vectors")
+      assert(argmax.map(_._1).distinct.size == argmax.size,
+        s"$label: argmax emitted a vector twice")
+      assert(rank1.size == nVectors, s"$label: window rank 1 missed vectors")
+      val diverged = argmax.zip(rank1).filter { case (a, w) => a != w }
+      val nDiverged = diverged.size
+      assert(nDiverged == 0,
+        s"$label: argmax diverged from window rank 1 at ${diverged.take(3)}")
+    }
   }
 
   test("an empty centroid frame is refused, not assigned null cells") {

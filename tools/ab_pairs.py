@@ -14,11 +14,14 @@ sides get the run length from BENCHMARK.json unless `--seconds` is given.
 
 For every end-to-end metric of BENCHMARK.json this prints each side's
 median and quartiles, how many pairs the change won (ties count for
-neither) and two verdicts: `gain` when the change won at least 9/10 of the
-pairs and the medians differ, in the better direction, by more than the
+neither) and three verdicts: `gain` when the change won at least 9/10 of
+the pairs and the medians differ, in the better direction, by more than the
 base's interquartile range; `over bound` when the change's median is worse
-than the base's by more than the metric's bound. It changes nothing under
-perfbench/.
+than the base's by more than the metric's bound; `unresolved` when the
+base's interquartile range, relative to its median, is wider than the
+metric's bound, so the runs cannot tell a change within the bound from
+none, unless every change run reads better than every base run. It changes
+nothing under perfbench/.
 """
 import argparse
 import json
@@ -75,6 +78,10 @@ def summarize(workload, runs, metrics):
         worse = (cmed - bmed if lower else bmed - cmed) / abs(bmed) if bmed else 0.0
         if worse > m["bound"]:
             verdicts.append(f"over bound ({worse:+.1%} > {m['bound']:.0%})")
+        spread = (bq3 - bq1) / abs(bmed) if bmed else 0.0
+        all_better = max(c) < min(b) if lower else min(c) > max(b)
+        if spread > m["bound"] and not all_better:
+            verdicts.append(f"unresolved (base IQR {spread:.1%} > {m['bound']:.0%})")
         print(f"{name:<14}{f'{bmed:.4g} [{bq1:.4g}, {bq3:.4g}]':>30}"
               f"{f'{cmed:.4g} [{cq1:.4g}, {cq3:.4g}]':>30}"
               f"{f'{wins}/{len(pairs)}':>8}  {', '.join(verdicts) or '-'}")
