@@ -108,7 +108,7 @@ object Bench {
     // spanning the entry's reps, so a driver-side elevation carries its
     // own co-tenant evidence (other-process CPU share, major faults) in
     // the artifact instead of needing an after-the-fact local repro.
-    val hostLog = scala.collection.mutable.LinkedHashMap[String, String]()
+    val hostLog = scala.collection.mutable.LinkedHashMap[String, HostTelemetry.Window]()
     // r15 verdict task 1: when an entry's median blows past ~5x its recorded
     // anchor, run ONE recovery rep before moving on. A transient host stall
     // (the r14 cold-page-cache window) recovers — the extra rep reads at
@@ -150,7 +150,7 @@ object Bench {
           recovered += name
         }
       }
-      hostLog(name) = HostTelemetry.deltaJson(h0, HostTelemetry.sample())
+      hostLog(name) = HostTelemetry.Window(h0, HostTelemetry.sample())
       repLog(name) = ts
       System.err.println(f"[bench] $name%-28s median=${median(ts)}%8.3f  runs=${ts.map(t => f"$t%.3f").mkString(",")}")
       name -> median(ts)
@@ -219,7 +219,7 @@ object Bench {
           graft.queries.TextQueries.warmShared(spark, sfDir)
         }
         hostLog("warm_text_caches") =
-          HostTelemetry.deltaJson(h0, HostTelemetry.sample())
+          HostTelemetry.Window(h0, HostTelemetry.sample())
         System.err.println(f"[bench] warm_text_caches             once  =$warmT%8.3f")
         Seq("warm_text_caches" -> warmT)
       }
@@ -259,7 +259,7 @@ object Bench {
         if (modelStages.isEmpty) Seq.empty[(String, Double)]
         else {
           hostLog("warm_model_memos") =
-            HostTelemetry.deltaJson(h0, HostTelemetry.sample())
+            HostTelemetry.Window(h0, HostTelemetry.sample())
           val t = modelStages.map(_._2).sum
           System.err.println(f"[bench] warm_model_memos             once  =$t%8.3f  (" +
             modelStages.map { case (n, s) => f"$n=$s%.3f" }.mkString(",") + ")")
@@ -287,7 +287,7 @@ object Bench {
           graft.queries.MultimodalQueries.warmShared(spark, sfDir)
         }
         hostLog("warm_media_sigs") =
-          HostTelemetry.deltaJson(h0, HostTelemetry.sample())
+          HostTelemetry.Window(h0, HostTelemetry.sample())
         System.err.println(f"[bench] warm_media_sigs              once  =$wm%8.3f")
         Seq("warm_media_sigs" -> wm)
       }
@@ -405,10 +405,7 @@ object Bench {
     val results =
       warm ++ warmModels ++ textRes ++ vecRes ++ warmMedia ++ mediaRes ++
         restRes ++ streamRes
-    import JsonText.q
-    // Locale.ROOT: the f-interpolator uses the JVM default locale, which
-    // under e.g. de_DE renders "87,487" — invalid JSON (round-3 advice)
-    def f3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import JsonText.{f3, q}
     val qs = results.map { case (k, v) => s"${q(k)}:${f3(v)}" }.mkString("{", ",", "}")
     val errJson = errors.map(q).mkString("[", ",", "]")
     val total = results.map(_._2).sum
@@ -434,11 +431,11 @@ object Bench {
       anchors.get(n).filter(a => med > 2 * a && med - a > 0.3).map { a =>
         val reps0 = repLog.getOrElse(n, Seq(med))
         val floor = reps0.min
-        val host = hostLog.getOrElse(n, "")
-        val st = """"steal":([0-9.]+)""".r.findFirstMatchIn(host)
-          .map(_.group(1)).getOrElse("0")
-        val jc = """"jif_class":"(\w+)"""".r.findFirstMatchIn(host)
-          .map(_.group(1)).getOrElse("unknown")
+        // the steal share as the host record prints it (3 decimals), so
+        // the class below reads the same number the record shows
+        val host = hostLog.get(n)
+        val st = host.map(w => f3(w.steal)).getOrElse("0")
+        val jc = host.map(_.jifClass).getOrElse("unknown")
         // r17 verdict task 7 (stretch): emit the calibrated READ-RULE
         // class itself (BASELINE.md STEAL REGIME) so the driver artifact
         // needs zero human interpretation. steal-regime = the entry's own
@@ -449,7 +446,7 @@ object Bench {
         // (spread <= 25% of the slowest): every rep read slow on a quiet
         // host, which is what a real plan regression looks like.
         // indeterminate = neither signature; read rep_times + host.
-        val stD = st.toDoubleOption.getOrElse(0.0)
+        val stD = st.toDouble
         val floorInBar = floor <= 2 * a || floor - a <= 0.3
         val flat = (reps0.max - reps0.min) <= 0.25 * reps0.max
         val cl =
@@ -488,7 +485,7 @@ object Bench {
     // "snapshot_outcomes" says whether each warm base was rebuilt or
     // reused from a prior process ("built" 25 s = cold host paying decode
     // once; "reused" 25 s would be a real regression).
-    val hostJson = hostLog.map { case (n, j) => s"${q(n)}:$j" }
+    val hostJson = hostLog.map { case (n, w) => s"${q(n)}:${w.json}" }
       .mkString("{", ",", "}")
     val snapOutcomes = graft.plans.Snapshot.lastOutcomes.map {
       case (n, o, s) => s"""${q(n)}:{"mode":${q(o)},"sec":${f3(s)}}"""

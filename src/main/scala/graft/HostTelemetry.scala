@@ -197,34 +197,45 @@ object HostTelemetry {
     (b.jifSteal - a.jifSteal).max(0L) / tot
   }
 
+  /** The window's jiffy-advance rate: the advance over the window ÷ the
+    * advance an unthrottled host would show, nCPUs × wall × USER_HZ
+    * (always 100 per procfs ABI regardless of kernel CONFIG_HZ). nCPUs
+    * comes from the SAME /proc/stat document as the numerator (the cpuN
+    * line count), never availableProcessors(): the aggregate line ticks
+    * for every kernel-visible CPU, so a cgroup-quota-aware JDK count
+    * would inflate the ratio by visible/quota. A host whose /proc/stat
+    * had no cpuN lines degrades to 0 = "cannot attest", matching the
+    * missing-/proc path. */
+  def jifRate(a: Sample, b: Sample): Double = {
+    val wallMs = (b.epochMs - a.epochMs).max(0L)
+    val expected = b.statCpus.toDouble * wallMs / 10.0
+    if (wallMs == 0) 1.0 // zero-width window: nothing to attest
+    else if (b.statCpus == 0) 0.0 // no per-CPU lines: cannot attest
+    else (b.jifTotal - a.jifTotal).max(0L) / expected.max(1.0)
+  }
+
+  /** One entry's window, kept typed: callers read the regime numerically
+    * and render [[deltaJson]] only when writing the artifact. */
+  final case class Window(start: Sample, end: Sample) {
+    def steal: Double = stealFrac(start, end)
+    def jifClass: String = jifRateClass(jifRate(start, end), steal)
+    def json: String = deltaJson(start, end)
+  }
+
   /** Compact JSON object for one entry window. Fractions are of the
     * system-wide jiffy total (all CPUs), 3 decimals; PSI deltas are raw
     * stall-µs (the /proc unit); t0 is the window's start, epoch ms. */
   def deltaJson(a: Sample, b: Sample): String = {
-    def f3(v: Double) =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import JsonText.f3
     val tot = (b.jifTotal - a.jifTotal).max(1L).toDouble
     val sys = (b.jifBusy - a.jifBusy).max(0L) / tot
     val self = (b.selfJif - a.selfJif).max(0L) / tot
-    val steal = (b.jifSteal - a.jifSteal).max(0L) / tot
-    // expected jiffy advance for an unthrottled host: nCPUs × wall ×
-    // USER_HZ (always 100 per procfs ABI regardless of kernel CONFIG_HZ).
-    // nCPUs comes from the SAME /proc/stat document as the numerator
-    // (the cpuN line count), never availableProcessors(): the aggregate
-    // line ticks for every kernel-visible CPU, so a cgroup-quota-aware
-    // JDK count would inflate the ratio by visible/quota. A host whose
-    // /proc/stat had no cpuN lines degrades to 0 = "cannot attest",
-    // matching the missing-/proc path.
-    val wallMs = (b.epochMs - a.epochMs).max(0L)
-    val expected = b.statCpus.toDouble * wallMs / 10.0
-    val jifRate =
-      if (wallMs == 0) 1.0 // zero-width window: nothing to attest
-      else if (b.statCpus == 0) 0.0 // no per-CPU lines: cannot attest
-      else (b.jifTotal - a.jifTotal).max(0L) / expected.max(1.0)
+    val steal = stealFrac(a, b)
+    val rate = jifRate(a, b)
     def d(x: Long, y: Long) = (y - x).max(0L)
     s"""{"t0":${a.epochMs},"load1":${f3(a.load1)},"sys":${f3(sys)},"self":${f3(self)},""" +
-      s""""other":${f3((sys - self).max(0.0))},"steal":${f3(steal)},"jif_rate":${f3(jifRate)},""" +
-      s""""jif_class":"${jifRateClass(jifRate, steal)}",""" +
+      s""""other":${f3((sys - self).max(0.0))},"steal":${f3(steal)},"jif_rate":${f3(rate)},""" +
+      s""""jif_class":"${jifRateClass(rate, steal)}",""" +
       s""""pgmf":${d(a.pgMajFault, b.pgMajFault)},""" +
       s""""psi_io_some_us":${d(a.ioSomeUs, b.ioSomeUs)},"psi_io_full_us":${d(a.ioFullUs, b.ioFullUs)},""" +
       s""""psi_mem_some_us":${d(a.memSomeUs, b.memSomeUs)},"psi_mem_full_us":${d(a.memFullUs, b.memFullUs)},""" +

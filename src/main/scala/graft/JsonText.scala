@@ -14,4 +14,10 @@ object JsonText {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** A number as the artifacts print it: 3 decimals under Locale.ROOT —
+    * the f-interpolator uses the JVM default locale, which under e.g.
+    * de_DE renders "87,487", invalid JSON. */
+  def f3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 }

@@ -1,28 +1,41 @@
 package graft.pipeline
 
+import scala.concurrent.{Await, ExecutionContext, Future, blocking}
+import scala.concurrent.duration.Duration
+import scala.util.Try
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.queries.{MlQueries, VectorQueries}
 
 /** [EXT] The composed maintenance pass: all three learned artifacts —
   * quantizer, tokenizer, quality classifier — measured and conditionally
-  * retrained in ONE entry point, in dependency order. The per-artifact
-  * loops ([[graft.queries.VectorQueries.retrainIfDrifted]],
+  * retrained in ONE entry point. The per-artifact loops
+  * ([[graft.queries.VectorQueries.retrainIfDrifted]],
   * [[graft.queries.MlQueries.retrainTokenizerIfDrifted]],
   * [[graft.queries.MlQueries.retrainClassifierIfDrifted]]) each close
   * their own measure→trip→refit cycle; this composes them so a
   * production scheduler runs one call per cycle and cannot get the
   * ordering wrong.
   *
-  * Ordering constraint (the one real dependency): the QUANTIZER pass runs
-  * first and its index redeploy is fused via
+  * Concurrency: the three legs run at the same time, each submitting its
+  * Spark jobs from its own thread, so one leg's driver-side loop (Lloyd,
+  * BPE merges, L-BFGS) overlaps the others' tasks instead of leaving the
+  * cores idle. The one real dependency stays inside its leg: the
+  * quantizer retrain and its index redeploy are fused via
   * [[graft.queries.VectorQueries.maintainIndex]] — a retrained quantizer
   * probing stale-assigned index rows silently breaks the semantic gate
   * (the epoch invariant VectorSpec pins), so retrain-then-reassign must
   * be atomic from the caller's view. Tokenizer and classifier are
   * mutually independent and independent of the quantizer (text-side vs
-  * vector-side artifacts); they run after in a fixed order purely for
-  * reproducible reports.
+  * vector-side artifacts). The state the legs share is safe under this:
+  * each memo has its own lock, `Tables` is a concurrent map, and
+  * `Snapshot.checkpointed` builds a shared snapshot (the tokenizer's and
+  * classifier's `toks`) once. The pass returns only after EVERY leg has
+  * finished, so no job of it is still running when the caller moves on;
+  * failures are rethrown in the fixed order quantizer, tokenizer,
+  * classifier, and the outcome's fields keep that order, so reports stay
+  * reproducible.
   *
   * The monitor row feeding these thresholds is the oracled
   * `x_maintenance_report`
@@ -51,13 +64,20 @@ object Maintenance {
       fertilityCeilingMicro: Long = Long.MaxValue,
       maxAlarmDocs: Long = Long.MaxValue,
       agreementFloorMicro: Long = 0L): MaintenanceOutcome = {
-    // quantizer first, redeploy fused (epoch invariant)
-    val (qr, newIndex) = VectorQueries.maintainIndex(spark, dir, index,
-      maxHotCells, maxDeadCells, recallFloorMicro)
-    val tr = MlQueries.retrainTokenizerIfDrifted(spark, dir,
-      fertilityCeilingMicro, maxAlarmDocs)
-    val cr = MlQueries.retrainClassifierIfDrifted(spark, dir,
-      agreementFloorMicro)
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    def leg[T](body: => T): Future[T] = Future(blocking(body))
+    val quantizer = leg(VectorQueries.maintainIndex(spark, dir, index,
+      maxHotCells, maxDeadCells, recallFloorMicro))
+    val tokenizer = leg(MlQueries.retrainTokenizerIfDrifted(spark, dir,
+      fertilityCeilingMicro, maxAlarmDocs))
+    val classifier = leg(MlQueries.retrainClassifierIfDrifted(spark, dir,
+      agreementFloorMicro))
+    // wait for every leg before looking at any outcome: a failed leg must
+    // not return while another leg's jobs still run
+    def settled[T](f: Future[T]): Try[T] = Await.ready(f, Duration.Inf).value.get
+    val (q, t, c) = (settled(quantizer), settled(tokenizer), settled(classifier))
+    val (qr, newIndex) = q.get
+    val (tr, cr) = (t.get, c.get)
     MaintenanceOutcome(qr, newIndex, tr, cr)
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -911,6 +911,24 @@ object TextQueries {
     * each other's counts between a call and its assertion. */
   private[graft] case class CcResult(labels: DataFrame, rounds: Int)
 
+  /** d9's per-round convergence verdict from the fused probe's observed
+    * metric: true when some label changed, so the loop runs another
+    * round. The metric arrives on the listener bus moments after the
+    * eager checkpoint returns; one still missing after `wait` (a lost
+    * listener event) reads as CHANGED — one more round, which converged
+    * labels render a no-op. It is never recomputed: the probe's lineage
+    * reads the previous round's labels, whose files the reliable
+    * checkpoint tier has already deleted by then. */
+  private[graft] def labelsChanged(metric: scala.concurrent.Future[Row],
+      wait: scala.concurrent.duration.Duration): Boolean =
+    scala.util.Try(scala.concurrent.Await.result(metric, wait)) match {
+      case scala.util.Success(row) => row.getAs[Long]("n_changed") != 0L
+      case scala.util.Failure(_) =>
+        System.err.println(
+          "[graft] d9 observed metric missing; running one more round")
+        true
+    }
+
   /** Min-label connected components with pointer jumping (the d9 core,
     * factored so the convergence contract is testable on synthetic graphs
     * the corpus can't produce — e.g. a 200-deep chain). Input: undirected
@@ -993,21 +1011,8 @@ object TextQueries {
         .observe(obs, count(when(col("comp") =!= col("prev"), true))
           .as("n_changed"))
         .select("doc_id", "comp"))
-      // the metric arrives on the listener bus moments after the eager
-      // checkpoint returns; the bounded wait + recompute fallback keeps a
-      // lost listener event from hanging the loop (never observed — the
-      // belt-and-braces mirror of the coalesce above, and the fallback
-      // errs toward MORE rounds, which converged labels render a no-op).
-      val nChanged: Long =
-        scala.util.Try(scala.concurrent.Await.result(obs.future,
-            scala.concurrent.duration.Duration(10, "s"))) match {
-          case scala.util.Success(row) => row.getAs[Long]("n_changed")
-          case scala.util.Failure(_) =>
-            System.err.println(
-              "[graft] d9 observed metric missing; recomputing convergence probe")
-            jumped.filter(col("comp") =!= col("prev")).limit(1).count()
-        }
-      converged = nChanged == 0L
+      converged = !labelsChanged(obs.future,
+        scala.concurrent.duration.Duration(10, "s"))
       labels = next
       rounds += 1
     }
@@ -1168,15 +1173,15 @@ object TextQueries {
     val tok = base.select(col("doc_id"), explode(col("toks")).as("token"))
       .filter(length(col("token")) >= 4)
     val tf = tok.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
-    // r19 optimization round (VERDICT r18 task 8): df used to be computed
-    // from a SECOND explode of the toks base — `tok.distinct()` then
-    // groupBy(token) — i.e. two full explode passes and a distinct
-    // exchange of every (doc, token) pair. But tf already holds exactly
-    // one row per distinct (doc, token) (that is what the groupBy means),
-    // so df is a re-aggregation of tf: same numbers, one explode, and the
-    // (doc,token)-keyed exchange is shared by both consumers (exchange
-    // reuse) instead of paid twice. Plan: 4 toks-snapshot scans → 2;
-    // distinct exchange gone (plans/r19/t7_tfidf_terms_{before,after}).
+    // df as a re-aggregation of tf: tf already holds exactly one row per
+    // distinct (doc, token), so df counts tf's rows per token (r19; it
+    // used to be `tok.distinct()` then groupBy(token)). This is a
+    // readability change, not a plan change: the optimizer prunes tf's
+    // unused count on the df side, so that side still plans as a
+    // distinct with its own (doc_id, token) exchange — nodes 12–14 of
+    // plans/r19/t7_tfidf_terms_after.txt, beside tf's nodes 5–7. The
+    // committed _before file equals the _after one: it shows this code,
+    // not the old one.
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val scored = tf.join(dfreq, "token")
       .crossJoin(broadcast(nd))
@@ -1693,10 +1698,11 @@ object TextQueries {
     // works even when one key owns the partition; aggregation-side
     // salting is NOT needed here because both aggregations — docCount's
     // and the final per-doc rollup — partial-aggregate map-side, which
-    // collapses hot keys before their exchange). Measured at fixture
-    // scale and on the r18 SkewProbe Zipf fixture — numbers in
-    // OPTIMIZATION_r19.md; the post-join rollup is keyed by doc_id, so
-    // the shingle skew never reaches it.
+    // collapses hot keys before their exchange). The plan change is
+    // plans/r19/t18_dup_ngram_frac_{before,after}.txt (broadcast hash
+    // join → shuffled hash join, docCount the build side); no timing of
+    // it was recorded. The post-join rollup is keyed by doc_id, so the
+    // shingle skew never reaches it.
     occ.join(docCount.hint("shuffle_hash"), "shingle")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shingles"),

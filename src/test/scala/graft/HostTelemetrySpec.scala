@@ -103,6 +103,26 @@ class HostTelemetrySpec extends AnyFunSuite {
     assert(j.contains("\"jif_class\":\""), j)
   }
 
+  test("Window: the typed steal share and class are the ones its JSON prints") {
+    // Bench's violation record reads steal and jif_class from the typed
+    // window, not from the rendered JSON; the two must agree. 1 s on 4
+    // CPUs with 40 stolen of 440 jiffies: steal 0.091, raw rate 1.1,
+    // steal-adjusted 1.0 → healthy
+    val a = HostTelemetry.Sample(0L, 1000000L, 10000L, 0L, 0L, 0L, 0L, 0.0,
+      0L, 0L, 0L, 0L, 0L, 0L, 4)
+    val b = a.copy(epochMs = a.epochMs + 1000L, jifTotal = a.jifTotal + 440L,
+      jifSteal = 40L)
+    val w = HostTelemetry.Window(a, b)
+    assert(w.json == HostTelemetry.deltaJson(a, b))
+    assert(JsonText.f3(w.steal) == "0.091")
+    assert(w.json.contains("\"steal\":0.091,"), w.json)
+    assert(w.jifClass == "healthy")
+    assert(w.json.contains("\"jif_class\":\"healthy\""), w.json)
+    val paused = HostTelemetry.Window(a, b.copy(jifTotal = a.jifTotal + 100L))
+    assert(paused.jifClass == "stalled")
+    assert(paused.json.contains("\"jif_class\":\"stalled\""), paused.json)
+  }
+
   test("a zero-width window does not divide by zero") {
     val a = HostTelemetry.sample()
     val j = HostTelemetry.deltaJson(a, a)

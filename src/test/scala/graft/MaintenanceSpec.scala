@@ -6,13 +6,29 @@ import graft.pipeline.Maintenance
 import graft.queries.{MaintenanceQueries, MlQueries, VectorQueries}
 
 /** The composed maintenance pass: one call measures all three learned
-  * artifacts and retrains the tripped ones in dependency order (quantizer
-  * before index redeploy). The monitor row is the oracled
-  * x_maintenance_report; these specs pin the composition mechanics the
-  * oracle can't see — instance stability on no-trip, all-three refit +
-  * index redeploy on a forced trip. */
+  * artifacts and retrains the tripped ones, its three legs concurrently
+  * (quantizer retrain fused with its index redeploy). The monitor row is
+  * the oracled x_maintenance_report; these specs pin the composition
+  * mechanics the oracle can't see — instance stability on no-trip,
+  * all-three refit + index redeploy on a forced trip, the concurrent pass
+  * equal to the serial per-artifact calls, and a failed leg surfacing
+  * only after the other legs finished. */
 class MaintenanceSpec extends AnyFunSuite {
   import TestSpark._
+
+  /** A fresh dir holding the fixture's documents and embeddings (each a
+    * single parquet file), so retrains here never touch `sf`'s memos. */
+  private def fixtureCopy(tag: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft-maint-$tag")
+    d.toFile.deleteOnExit()
+    Seq("documents.parquet", "embeddings.parquet").foreach(f =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/$f"), d.resolve(f)))
+    d.toString
+  }
+
+  private def cells(index: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    index.select("vec_id", "cell").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("x_maintenance_report equals the three underlying monitor rows, column for column") {
     val m = MaintenanceQueries.xMaintenanceReport(spark, sf).collect()(0)
@@ -73,5 +89,81 @@ class MaintenanceSpec extends AnyFunSuite {
     val got = out.index.select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want, "redeployed index cells diverged from the fresh quantizer")
+  }
+
+  test("maintainAll forced trip: the concurrent pass equals the three per-artifact calls run serially") {
+    val (conc, serial) = (fixtureCopy("conc"), fixtureCopy("serial"))
+    try {
+      val agreement = MlQueries.xClassifierReport(spark, sf)
+        .collect()(0).getAs[Long]("holdout_agreement_micro")
+      val out = Maintenance.maintainAll(spark, conc,
+        VectorQueries.corpusCellIndex(spark, conc),
+        maxHotCells = -1L, fertilityCeilingMicro = 1L,
+        agreementFloorMicro = agreement + 1)
+      val (qr, idx) = VectorQueries.maintainIndex(spark, serial,
+        VectorQueries.corpusCellIndex(spark, serial), maxHotCells = -1L)
+      val tr = MlQueries.retrainTokenizerIfDrifted(spark, serial,
+        fertilityCeilingMicro = 1L)
+      val cr = MlQueries.retrainClassifierIfDrifted(spark, serial,
+        agreementFloorMicro = agreement + 1)
+      assert(qr.retrained && tr.retrained && cr.retrained)
+      // drift, fertility and agreement numbers, and every retrain flag
+      assert(out.quantizer == qr)
+      assert(out.tokenizer == tr)
+      assert(out.classifier == cr)
+      // the retrained artifacts and the reassigned index
+      assert(VectorQueries.quantizerRows(spark, conc) ==
+        VectorQueries.quantizerRows(spark, serial))
+      assert(MlQueries.learnedMerges(spark, conc) ==
+        MlQueries.learnedMerges(spark, serial))
+      val got = cells(out.index)
+      assert(got.nonEmpty && got == cells(idx),
+        "the concurrent pass reassigned the index differently")
+    } finally Seq(conc, serial).foreach(VectorQueries.evictTrained)
+  }
+
+  test("maintainAll: a failed leg reaches the caller only after the other legs finished") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft-maint-noemb")
+    dir.toFile.deleteOnExit()
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/documents.parquet"),
+      dir.resolve("documents.parquet"))
+    spark.read.parquet(s"$sf/embeddings.parquet").limit(0)
+      .write.parquet(dir.resolve("embeddings.parquet").toString)
+    val agreement = MlQueries.xClassifierReport(spark, sf)
+      .collect()(0).getAs[Long]("holdout_agreement_micro")
+    // event times are stamped by the scheduler, so the listener bus's
+    // delivery lag does not move them
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = events.add("start" -> e.time)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = events.add("end" -> e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val e = intercept[IllegalArgumentException](Maintenance.maintainAll(
+        spark, dir.toString, spark.read.parquet(s"$sf/embeddings.parquet"),
+        maxHotCells = -1L, fertilityCeilingMicro = 1L,
+        agreementFloorMicro = agreement + 1))
+      val thrownAt = System.currentTimeMillis()
+      assert(e.getMessage.contains("no centroids"), e.getMessage)
+      Thread.sleep(2000) // let the listener bus deliver
+      import scala.jdk.CollectionConverters._
+      val seen = events.asScala.toSeq
+      assert(seen.count(_._1 == "start") > 0 &&
+        seen.count(_._1 == "start") == seen.count(_._1 == "end"),
+        "a job of the pass was still running when it threw")
+      assert(seen.forall(_._2 <= thrownAt), "a job of the pass ran after it threw")
+      // both text legs ran to the end: their memos are filled, so
+      // reading them starts no job
+      val before = events.size
+      MlQueries.learnedMerges(spark, dir.toString)
+      MlQueries.fitted(spark, dir.toString)
+      Thread.sleep(1000)
+      assert(events.size == before, "a text leg had not finished when the pass threw")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      VectorQueries.evictTrained(dir.toString)
+    }
   }
 }

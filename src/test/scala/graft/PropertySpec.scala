@@ -369,6 +369,22 @@ class PropertySpec extends AnyFunSuite {
     } finally sc.setCheckpointDir(prev.orNull)
   }
 
+  test("d9 convergence: a missing observed metric reads as changed, never as converged") {
+    import graft.queries.TextQueries
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import scala.concurrent.{Future, Promise}
+    import scala.concurrent.duration.DurationInt
+    def metric(n: Long): Future[Row] = Future.successful(new GenericRowWithSchema(
+      Array[Any](n), StructType(Seq(StructField("n_changed", LongType)))))
+    // the lost listener event: the metric never arrives, so the loop must
+    // run one more round rather than recompute from deleted round files
+    assert(TextQueries.labelsChanged(Promise[Row]().future, 50.millis))
+    assert(TextQueries.labelsChanged(metric(3L), 50.millis))
+    assert(!TextQueries.labelsChanged(metric(0L), 50.millis))
+  }
+
   test("d9 components: labels close over every verified pair and equal the component minimum") {
     import graft.queries.TextQueries
     val labels = TextQueries.queries("d9_dedup_components")(spark, sf).collect()

@@ -3,6 +3,7 @@
 
     python3 tools/ab_pairs.py --workload dispatch --pairs 10 --seed 101
     python3 tools/ab_pairs.py --base HEAD~1 --workload batch_round
+    python3 tools/ab_pairs.py --workload batch_round --traced
 
 Run from the repository root. The base revision (default HEAD, so the
 uncommitted change is what is measured) is checked out into a temporary
@@ -20,8 +21,12 @@ base's interquartile range; `over bound` when the change's median is worse
 than the base's by more than the metric's bound; `unresolved` when the
 base's interquartile range, relative to its median, is wider than the
 metric's bound, so the runs cannot tell a change within the bound from
-none, unless every change run reads better than every base run. It changes
-nothing under perfbench/.
+none, unless every change run reads better than every base run.
+
+With `--traced`, after the pairs of a workload it runs one `--trace 1` run
+per side at the first seed and prints every per-layer metric of
+BENCHMARK.json as base -> change, so the same command shows in which layer
+a saving landed. It changes nothing under perfbench/.
 """
 import argparse
 import json
@@ -34,10 +39,10 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed, seconds, trace=0):
     """The result line of one benchmark run, or None if it failed."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
                        stderr=subprocess.DEVNULL, stdin=subprocess.DEVNULL, text=True)
     lines = [l for l in p.stdout.splitlines() if l.strip()]
@@ -87,6 +92,24 @@ def summarize(workload, runs, metrics):
               f"{f'{wins}/{len(pairs)}':>8}  {', '.join(verdicts) or '-'}")
 
 
+def traced(workload, runs, metrics):
+    """Per-layer metrics of one traced run per side, base -> change."""
+    base, change = runs
+    print(f"\n{workload} traced, base -> change:")
+    for side, r in (("base", base), ("change", change)):
+        if r is None or not r["correct"]:
+            print(f"  {side} traced run {'failed' if r is None else 'NOT correct'}")
+    if base is None or change is None:
+        return
+    for m in metrics:
+        b = base["metrics"].get(m["name"], {}).get("value")
+        c = change["metrics"].get(m["name"], {}).get("value")
+        if b is None or c is None:
+            continue
+        rel = f"{(c - b) / abs(b):+.1%}" if b else ""
+        print(f"  {m['name']:<32}{b:>14.4g} -> {c:<14.4g}{rel:>8}  {m['unit']}")
+
+
 def main():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as fh:
         bench = json.load(fh)
@@ -99,6 +122,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
     ap.add_argument("--seconds", type=float, default=bench["run_seconds"])
+    ap.add_argument("--traced", action="store_true",
+                    help="then one traced run per side at the first seed")
     a = ap.parse_args()
     workloads = a.workload or [w["name"] for w in bench["workloads"]]
 
@@ -128,6 +153,9 @@ def main():
                           flush=True)
                 runs.append((got["base"], got["change"]))
             summarize(w, runs, bench["end_to_end"])
+            if a.traced:
+                traced(w, [run_once(checkout, w, a.seed, a.seconds, trace=1)
+                           for checkout in (base_dir, ROOT)], bench["per_layer"])
     finally:
         if worktree:
             subprocess.run(["git", "worktree", "remove", "--force", worktree], cwd=ROOT)
