@@ -18,7 +18,12 @@ import graft.queries.VectorQueries
   *   1. corpus semantic: the gate itself, run on the batch frame
   *      (stream/batch agnostic — ONE definition for both halves);
   *   2. intra-batch semantic: survivors pairing within their assigned
-  *      cell above the shared cosine bar keep the lesser vec_id.
+  *      cell above the shared cosine bar keep the lesser vec_id
+  *      ([[graft.queries.VectorQueries.withinCellDrops]], v8's drop set).
+  *
+  * The audit is oracled as is: `x_vcompact_audit`
+  * ([[graft.queries.VectorQueries.xVcompactAudit]]) runs this function on
+  * a fixed arrival batch and returns its `audit`, which DuckDB recomputes.
   *
   * Scale shape: per-arrival cell assignment is the gate's own pure
   * expression over the memoized (K x dims) quantizer rows; tier 1 is one
@@ -70,17 +75,8 @@ object VectorCompaction {
       .withColumn("nrm", VectorQueries.norm(col("embedding")))
 
     // tier 2: within-cell batch pairs above the bar → lesser id wins
-    val a = assigned.select(col("vec_id").as("va"), col("embedding").as("ea"),
-      col("cell").as("ca"), col("nrm").as("na"))
-    val b = assigned.select(col("vec_id").as("vb"), col("embedding").as("eb"),
-      col("cell").as("cb"), col("nrm").as("nb"))
-    val drops = a.join(b,
-        col("ca") === col("cb") && col("va") < col("vb") &&
-          round(VectorQueries.dot(col("ea"), col("eb")) /
-            (col("na") * col("nb")), 6)
-            >= VectorQueries.SemDedupCosine.toDouble)
-      .select(col("vb").as("vec_id")).distinct()
-    val survivors = pinned(assigned.join(drops, Seq("vec_id"), "left_anti"))
+    val survivors = pinned(assigned.join(VectorQueries.withinCellDrops(assigned),
+      Seq("vec_id"), "left_anti"))
 
     val (nArr, nPast, nSurv) =
       (arrivals.count(), pastCorpus.count(), survivors.count())

@@ -228,8 +228,8 @@ object TextQueries {
   private[graft] def toksCol(text: Column): Column =
     call_function("tokenize_words", text)
 
-  /** The HOF form the custom expression replaced — kept for the equality
-    * spec and as the no-extensions fallback. */
+  /** The HOF form the custom expression replaced — the reference the
+    * equality spec compares [[toksCol]] against; no query plan uses it. */
   private[graft] def toksHofCol(text: Column): Column =
     filter(split(trim(text), "\\s+"), t => t =!= "")
 
@@ -447,9 +447,10 @@ object TextQueries {
     // chain's when/otherwise produced
     call_function("band_keys", coalesce(text, lit("")))
 
-  /** The Column-chain form the native expression replaced — kept for the
-    * equality spec (the float_dot/dotHof discipline) and as the
-    * no-extensions fallback. */
+  /** The Column-chain form the native expression replaced — the reference
+    * the equality spec compares [[bandKeysCol]] against (the
+    * float_dot/dotHof discipline); no query plan uses it, and it tokenizes
+    * with the native [[toksCol]] itself. */
   private[graft] def bandKeysHofCol(text: Column): Column = {
     val toks = toksCol(text)
     val sh = array_distinct(transform(sequence(lit(0), size(toks) - 3),
@@ -621,8 +622,9 @@ object TextQueries {
         col("s.sim_lo").as("sim_lo"), col("s.b0").as("b0"),
         col("s.b1").as("b1"), col("s.b2").as("b2"), col("s.b3").as("b3"))
 
-  /** The explode+aggregate form the custom expression replaced — kept for
-    * the equality spec and as the no-extensions fallback. */
+  /** The explode+aggregate form the custom expression replaced — the
+    * reference the equality spec compares [[simhashSigDF]] against; no
+    * query plan uses it. */
   private[graft] def simhashSigHofDF(spark: SparkSession, dir: String): DataFrame = {
     val hx = md5(col("token"))
     val hashed = cachedToks(spark, dir)

@@ -4,23 +4,30 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** [EXT] similarity search over the `embeddings` table (builder brief):
-  * brute-force cosine top-k as the correctness baseline, a sign-bit
-  * bucketed variant and an IVF k-means quantizer as the 100 TB paths,
-  * per-label centroids, and embedding near-dup pairing over planted float
-  * mutants (v5 — the vector analogue of MinHash+verify dedup).
+  * brute-force cosine top-k (v1) as the correctness baseline; ANN probes
+  * over sign buckets (v3), a trained IVF quantizer (v4/v6/v13), PQ codes
+  * (v7), IVF-PQ with exact rerank (v15), binary sketches (v9) and int8
+  * codes (v10); per-label centroids (v2); near-dup pairing, semantic dedup
+  * and decontamination (v5/v8/v14); prototype pruning and balanced
+  * sampling over the quantizer's cells (v11/v12); and the index monitors
+  * and maintenance loop (v16/v17, drift report, compaction audit).
+  *
+  * One similarity skeleton: [[cosine6]] is the only cosine rule (every
+  * scoring, assignment and gate site builds it), [[semNear]] the only
+  * near-duplicate test, [[withinCellDrops]] the only within-cell drop set
+  * (v8 and the compaction fold), and [[topK]] the only per-query
+  * rank-and-cut tail (ties by vid ascending).
   *
   * Numeric discipline: embeddings are float32; every product/sum is
   * computed element-wise in DOUBLE in deterministic list order
   * (higher-order `aggregate` = sequential fold), and cosines are rounded
   * to 6 decimals BEFORE ranking, so a last-ulp libm difference between
-  * engines can neither change a value nor reorder a top-k. Ties break on
-  * vec_id.
+  * engines can neither change a value nor reorder a top-k.
   *
   * Scale notes: v1 is O(Q x N) with Q = 3 broadcast query vectors — the
-  * honest baseline. v3 buckets by the 8-dim sign signature (256 buckets)
-  * and joins bucket-to-bucket: the IVF/LSH shape where each probe touches
-  * ~N/256 candidates; at 100 TB the bucket count scales with the corpus
-  * and the bucket join replaces any cross join.
+  * honest baseline. Every ANN variant bounds the candidates per probe
+  * (a bucket or cell equi-join, a code scan, a sketch prefilter), so at
+  * 100 TB the probe replaces any cross join.
   */
 object VectorQueries {
 
@@ -58,13 +65,70 @@ object VectorQueries {
   private[graft] def dot(a: Column, b: Column): Column =
     call_function("float_dot", a, b)
 
-  /** The HOF form the custom expression replaced — kept for the equality
-    * spec and as the no-extensions fallback. */
+  /** The HOF form the custom expression replaced — the reference the
+    * equality specs compare [[dot]] against; no query plan uses it. */
   private[graft] def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
 
   private[graft] def norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** The engine's one similarity rule: the cosine of `a` and `b` from
+    * their precomputed norms, rounded to 6 decimals before anything
+    * compares or ranks it (the module's numeric discipline). Every
+    * cosine-scoring site — ANN probes, cell assignment in all its forms,
+    * the semantic gate and compaction — builds this tree. */
+  private[graft] def cosine6(a: Column, na: Column, b: Column, nb: Column): Column =
+    round(dot(a, b) / (na * nb), 6)
+
+  /** Semantic near-duplicate test: same quantizer cell and a rounded
+    * cosine at or above [[SemDedupCosine]]. As a join condition it plans
+    * as a cell equi-join with the cosine as the residual. */
+  private[graft] def semNear(cellA: Column, a: Column, na: Column,
+      cellB: Column, b: Column, nb: Column): Column =
+    cellA === cellB && cosine6(a, na, b, nb) >= SemDedupCosine.toDouble
+
+  /** The greater `vec_id` of every near pair within a cell of `assigned`
+    * (vec_id, embedding, cell, nrm): the pairwise drop set of v8 and of
+    * [[graft.pipeline.VectorCompaction.compact]]'s intra-batch tier. The
+    * id order is tested before the cosine, so each pair is scored once. */
+  private[graft] def withinCellDrops(assigned: DataFrame): DataFrame = {
+    val a = assigned.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
+      col("cell"), col("nrm").as("na"))
+    val b = assigned.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
+      col("cell").as("cell_b"), col("nrm").as("nb"))
+    a.join(b, col("vec_a") < col("vec_b") &&
+        semNear(col("cell"), col("ea"), col("na"), col("cell_b"), col("eb"), col("nb")))
+      .select(col("vec_b").as("vec_id")).distinct()
+  }
+
+  /** Per-query top-k: rank each `qid`'s rows by `score` (ties by `vid`
+    * ascending), keep ranks 1..k as `rk`, project (qid, vid, `cols`, rk)
+    * and order by (qid, rk). The rank-then-cut tail every ANN query ends
+    * with. */
+  private[graft] def topK(scored: DataFrame, score: String, ascending: Boolean,
+      k: Int, cols: String*): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy(col("qid"))
+      .orderBy(if (ascending) col(score).asc else col(score).desc, col("vid").asc)
+    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      .select(("qid" +: "vid" +: cols :+ "rk").map(col): _*)
+      .orderBy("qid", "rk")
+  }
+
+  /** One Lloyd mean update: each `keys` group's new centroid is the
+    * per-position mean of its members' `vec`, rounded to 6 decimals and
+    * reassembled in position order as `cvec`. Keyed by `cell` for the IVF
+    * quantizer and by (`s`, `code`) for the PQ codebooks. */
+  private def lloydMeans(assigned: DataFrame, vec: String, keys: String*): DataFrame = {
+    val k = keys.map(col)
+    assigned.select(k :+ posexplode(col(vec)).as(Seq("pos", "v")): _*)
+      .groupBy(k :+ col("pos"): _*)
+      .agg(round(avg(col("v").cast("double")), 6).as("cv"))
+      .groupBy(k: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pcs"))
+      .select(k :+ expr("transform(pcs, x -> x.cv)").as("cvec"): _*)
+  }
 
   /** 8-bit sign-bucket of the first 8 dims (the LSH/IVF cell key). */
   private def bucket(a: Column): Column =
@@ -104,13 +168,8 @@ object VectorQueries {
       norm(col("embedding")).as("cn"))
     val scored = c.join(broadcast(q))
       .select(col("qid"), col("vid"),
-        round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6)
-          .as("cosine"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 10)
-      .select("qid", "vid", "cosine", "rk")
-      .orderBy("qid", "rk")
+        cosine6(col("qe"), col("qn"), col("ce"), col("cn")).as("cosine"))
+    topK(scored, "cosine", ascending = false, 10, "cosine")
   }
 
   /** v2 — per-label centroid, emitted as (label, pos, c) rows: posexplode +
@@ -135,13 +194,8 @@ object VectorQueries {
       col("bkt"), col("nrm").as("cn"))
     val scored = c.join(broadcast(q), Seq("bkt"))
       .select(col("qid"), col("vid"), col("bkt"),
-        round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6)
-          .as("cosine"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select("qid", "vid", "bkt", "cosine", "rk")
-      .orderBy("qid", "rk")
+        cosine6(col("qe"), col("qn"), col("ce"), col("cn")).as("cosine"))
+    topK(scored, "cosine", ascending = false, 5, "bkt", "cosine")
   }
 
   /** Embeddings augmented with planted near-dups for v5: vec_id%5==0 gets
@@ -188,8 +242,7 @@ object VectorQueries {
       col("bkt").as("bkt_b"), col("nrm").as("nb"))
     a.join(b, col("bkt") === col("bkt_b") && col("vec_a") < col("vec_b"))
       .select(col("vec_a"), col("vec_b"),
-        round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-          .as("cosine"))
+        cosine6(col("ea"), col("na"), col("eb"), col("nb")).as("cosine"))
       .filter(col("cosine") >= 0.999)
       .orderBy("vec_a", "vec_b")
   }
@@ -343,8 +396,7 @@ object VectorQueries {
         .select(col("vec_id"), col("embedding"),
           array_max(transform(col("cents"), c =>
             struct(
-              round(dot(col("embedding"), c("cvec")) /
-                (col("nrm") * c("cn")), 6).as("ccos"),
+              cosine6(col("embedding"), col("nrm"), c("cvec"), c("cn")).as("ccos"),
               (-c("cell")).as("negcell")))).as("m"))
         .select(col("vec_id"), col("embedding"),
           (-col("m.negcell")).as("cell"), col("m.ccos").as("ccos"))
@@ -358,8 +410,7 @@ object VectorQueries {
         .withColumn("nrm", norm(col("embedding")))
         .join(broadcast(cn))
         .select(col("vec_id"), col("embedding"), col("cell"),
-          round(dot(col("embedding"), col("cvec")) /
-            (col("nrm") * col("cn")), 6).as("ccos"))
+          cosine6(col("embedding"), col("nrm"), col("cvec"), col("cn")).as("ccos"))
         .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
         .select(col("vec_id"), col("embedding"), col("cell"), col("ccos"))
     }
@@ -407,13 +458,7 @@ object VectorQueries {
       // consumers) still covers every vector
       val trainSet = trainSampleOf(e, e.count(), sampleTarget)
       val trained = (1 to LloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
-        toLocal(assignCells(c, trainSet, 1)
-          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
-          .groupBy(col("cell"), col("pos"))
-          .agg(round(avg(col("v").cast("double")), 6).as("cv"))
-          .groupBy(col("cell"))
-          .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pcs"))
-          .select(col("cell"), expr("transform(pcs, x -> x.cv)").as("cvec")))
+        toLocal(lloydMeans(assignCells(c, trainSet, 1), "embedding", "cell"))
       }
       val rows = trained.as[(Long, Seq[Double])].collect().toSeq
       quantizers.synchronized(quantizers.getOrElseUpdate((dir, cells, sampleTarget), rows))
@@ -453,8 +498,8 @@ object VectorQueries {
     aggregate(sequence(lit(1), lit(sorted.size)),
       struct(lit(-2.0).as("s"), lit(-1L).as("cell")),
       (acc, i) => {
-        val sc = round(dot(e, element_at(vecsLit, i.cast("int"))) /
-          (n * element_at(normsLit, i.cast("int"))), 6)
+        val sc = cosine6(e, n, element_at(vecsLit, i.cast("int")),
+          element_at(normsLit, i.cast("int")))
         when(sc > acc.getField("s"),
           struct(sc.as("s"), element_at(cellsLit, i.cast("int")).as("cell")))
           .otherwise(acc)
@@ -674,7 +719,6 @@ object VectorQueries {
   }
 
   private def ivfAnn(spark: SparkSession, dir: String, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb(spark, dir)
     val cent = trainedCentroids(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
     // cached: the probe reuses the corpus assignment (and per-vector norm);
@@ -690,12 +734,8 @@ object VectorQueries {
         col("nrm").as("cn"))
     val probed = c.join(broadcast(q), Seq("cell"))
       .select(col("qid"), col("vid"), col("cell"),
-        round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6)
-          .as("cosine"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid").asc)
-    probed.withColumn("rk", row_number().over(wTop)).filter(col("rk") <= 5)
-      .select("qid", "vid", "cell", "cosine", "rk")
-      .orderBy("qid", "rk")
+        cosine6(col("qe"), col("qn"), col("ce"), col("cn")).as("cosine"))
+    topK(probed, "cosine", ascending = false, 5, "cell", "cosine")
   }
 
   /** v13 — FILTERED ANN (label-constrained IVF probe): the production
@@ -712,7 +752,6 @@ object VectorQueries {
     * still cells x filter before distances, so candidate volume only ever
     * shrinks vs v6. */
   def v13FilteredAnn(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb(spark, dir)
     val cent = trainedCentroids(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
     val labels = e.select(col("vec_id"), col("label"))
@@ -728,12 +767,8 @@ object VectorQueries {
     val probed = c.join(broadcast(q),
         col("c_cell") === col("cell") && col("clabel") === col("qlabel"))
       .select(col("qid"), col("vid"), col("cell"), col("clabel").as("label"),
-        round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6)
-          .as("cosine"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid").asc)
-    probed.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select("qid", "vid", "cell", "label", "cosine", "rk")
-      .orderBy("qid", "rk")
+        cosine6(col("qe"), col("qn"), col("ce"), col("cn")).as("cosine"))
+    topK(probed, "cosine", ascending = false, 5, "cell", "label", "cosine")
   }
 
   /** PQ geometry shared by the Spark plan and its oracle twin: 64 dims =
@@ -771,17 +806,13 @@ object VectorQueries {
     * squared-L2 top-5 per query (PQ approximates L2, not cosine —
     * VectorSpec measures recall against the exact L2 ground truth). */
   def v7PqAnn(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val (codes, qtab) = pqCodesAndQtab(spark, dir)
     // ADC: approximate distance = sum of the 8 looked-up table entries
     val probed = codes.join(broadcast(qtab), Seq("s", "code"))
       .groupBy(col("qid"), col("vec_id"))
       .agg(round(sum(col("dt")), 6).as("adist"))
       .select(col("qid"), col("vec_id").as("vid"), col("adist"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("adist").asc, col("vid").asc)
-    probed.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select("qid", "vid", "adist", "rk")
-      .orderBy("qid", "rk")
+    topK(probed, "adist", ascending = true, 5, "adist")
   }
 
   /** The PQ encode pass shared by v7 and v15: (corpus code table, query
@@ -828,14 +859,8 @@ object VectorQueries {
       // every vector
       val trainSubs = trainSampleOf(subs, e.count())
       val trained = (1 to PqLloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
-        toLocal(assign(c.toDF("s", "code", "cvec"), trainSubs)
-          .join(trainSubs, Seq("vec_id", "s"))
-          .select(col("s"), col("code"), posexplode(col("sub")).as(Seq("pos", "v")))
-          .groupBy(col("s"), col("code"), col("pos"))
-          .agg(round(avg(col("v").cast("double")), 6).as("cv"))
-          .groupBy(col("s"), col("code"))
-          .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pcs"))
-          .select(col("s"), col("code"), expr("transform(pcs, x -> x.cv)").as("cvec")))
+        toLocal(lloydMeans(assign(c.toDF("s", "code", "cvec"), trainSubs)
+          .join(trainSubs, Seq("vec_id", "s")), "sub", "s", "code"))
       }
       pqCodebooks.synchronized(pqCodebooks.getOrElseUpdate(dir, trained))
     }
@@ -870,7 +895,6 @@ object VectorQueries {
     * interactive retrieval over billions of vectors; v4/v6/v7 are its
     * ablations. */
   def v15IvfPqAnn(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb(spark, dir)
     val cent = trainedCentroids(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
     val corpCells = assignCells(cent, e, 1)
@@ -884,23 +908,21 @@ object VectorQueries {
       .join(broadcast(qtab), Seq("qid", "s", "code"))
       .groupBy(col("qid"), col("vid"))
       .agg(round(sum(col("dt")), 6).as("adist"))
-    val wA = Window.partitionBy(col("qid")).orderBy(col("adist").asc, col("vid").asc)
-    val short = adc.withColumn("ark", row_number().over(wA))
-      .filter(col("ark") <= IvfPqShortlist).select("qid", "vid")
+    // the shortlist's (qid, rk) order is dropped: a sort under a join
+    // never reaches the plan
+    val short = topK(adc, "adist", ascending = true, IvfPqShortlist)
+      .select("qid", "vid")
     val qe = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val ce = e.select(col("vec_id").as("vid"), col("embedding").as("ce"))
-    val wR = Window.partitionBy(col("qid")).orderBy(col("dist").asc, col("vid").asc)
-    short.join(broadcast(qe), Seq("qid")).join(ce, Seq("vid"))
+    val reranked = short.join(broadcast(qe), Seq("qid")).join(ce, Seq("vid"))
       .select(col("qid"), col("vid"),
         // + 0.0 normalizes IEEE negative zero: a self-distance that
         // rounds to -0.0 in one engine and 0.0 in the other would
         // hash-differ while being numerically equal
         (round(dot(col("qe"), col("qe")) - lit(2.0) * dot(col("qe"), col("ce"))
           + dot(col("ce"), col("ce")), 6) + lit(0.0)).as("dist"))
-      .withColumn("rk", row_number().over(wR)).filter(col("rk") <= 5)
-      .select("qid", "vid", "dist", "rk")
-      .orderBy("qid", "rk")
+    topK(reranked, "dist", ascending = true, 5, "dist")
   }
 
   /** Within-cell duplicate threshold for v8 — same rounded-cosine bar as
@@ -933,16 +955,8 @@ object VectorQueries {
     val assigned = registered(
       assignCells(cent, augEmb(spark, dir), 1)
         .withColumn("nrm", norm(col("embedding"))))
-    val a = assigned.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
-      col("cell"), col("nrm").as("na"))
-    val b = assigned.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
-      col("cell").as("cell_b"), col("nrm").as("nb"))
-    val dropped = a.join(b, col("cell") === col("cell_b") && col("vec_a") < col("vec_b"))
-      .filter(round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-        >= SemDedupCosine.toDouble)
-      .select(col("vec_b").as("vec_id")).distinct()
     assigned.select(col("vec_id"), col("cell"))
-      .join(dropped.withColumn("dropped", lit(1L)), Seq("vec_id"), "left")
+      .join(withinCellDrops(assigned).withColumn("dropped", lit(1L)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"),
         when(col("dropped").isNull, 1L).otherwise(0L).as("is_kept"))
       .orderBy("vec_id")
@@ -980,9 +994,7 @@ object VectorQueries {
         col("nrm").as("tn"))
       .join(broadcast(ba.select(col("embedding").as("be"),
           col("cell").as("bcell"), col("nrm").as("bn"))),
-        col("cell") === col("bcell") &&
-          round(dot(col("te"), col("be")) / (col("tn") * col("bn")), 6)
-            >= SemDedupCosine.toDouble)
+        semNear(col("cell"), col("te"), col("tn"), col("bcell"), col("be"), col("bn")))
       .select(col("vec_id")).distinct()
     ta.select(col("vec_id"), col("cell"))
       .join(hits.withColumn("hit", lit(1L)), Seq("vec_id"), "left")
@@ -996,11 +1008,11 @@ object VectorQueries {
     * deterministic arrival batch — corpus re-arrivals at %45 (die at the
     * semantic gate), negations at %50==3 (novel directions, pass), and a
     * negation/nudged-negation pair at %100==7 (intra-batch near pair: the
-    * lesser id survives) — runs through
-    * [[graft.pipeline.VectorCompaction.compact]]'s two kill tiers, and
-    * the one-row audit is the result. Every tier is cell-bounded cosine
-    * arithmetic DuckDB recomputes over the shared Lloyd chain, so the
-    * vector compaction surface is hash-checked end to end. */
+    * lesser id survives) — runs through the production
+    * [[graft.pipeline.VectorCompaction.compact]] against the corpus cell
+    * index, and the result is compact's own one-row audit. DuckDB
+    * recomputes both kill tiers over the shared Lloyd chain, so the
+    * oracle checks the fold path the batch pipeline runs, not a copy. */
   def xVcompactAudit(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     def neg(c: Column): Column = transform(c, x => -x)
@@ -1018,56 +1030,10 @@ object VectorQueries {
       .unionByName(e.filter(col("vec_id") % 100 === 7)
         .select((col("vec_id") + 8000000L).as("vec_id"),
           nudgedNeg(col("embedding")).as("embedding")))
-    // r18 optimization round — the xCompactAudit single-pass discipline:
-    // VectorCompaction.compact's audit paid three sequential count()
-    // actions; the same three tier numbers fall out of ONE conditional
-    // aggregate over a tier-annotated arrival frame. The corpus tier is
-    // marked by a LEFT SEMI probe (the gate's own cell+cosine condition —
-    // semi, not a hit-marking left join, because an arrival can match
-    // MANY corpus vectors and must still count once); the intra-batch
-    // tier is the within-cell greater-id self-join restricted to corpus
-    // survivors, exactly compact's tier order. Cell assignment and norm
-    // are the gate's own shared definitions (withCellAssigned / norm), so
-    // the tiers cannot drift from VectorCompaction.compact — which stays
-    // untouched for the production fold path (VectorSpec/pipeline specs),
-    // while the DuckDB oracle recomputes these numbers independently.
-    val cents = quantizerRows(spark, dir)
-    val idx = corpusCellIndex(spark, dir)
-      .select(col("cell").as("c_cell"), col("embedding").as("c_emb"),
-        col("nrm").as("c_nrm"))
-    val withCell = withCellAssigned(arrivals, "embedding", "cell", cents)
-      .withColumn("nrm", norm(col("embedding")))
-    val gateCond = col("cell") === col("c_cell") &&
-      round(dot(col("embedding"), col("c_emb")) /
-        (col("nrm") * col("c_nrm")), 6) >= SemDedupCosine.toDouble
-    val corpusHits = withCell.join(idx, gateCond, "left_semi")
-      .select(col("vec_id")).withColumn("ch", lit(1))
-    val ann = withCell.join(corpusHits, Seq("vec_id"), "left")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val p1 = ann.filter(col("ch").isNull)
-    val a = p1.select(col("vec_id").as("va"), col("embedding").as("ea"),
-      col("cell").as("ca"), col("nrm").as("na"))
-    val b = p1.select(col("vec_id").as("vb"), col("embedding").as("eb"),
-      col("cell").as("cb"), col("nrm").as("nb"))
-    val drops = a.join(b,
-        col("ca") === col("cb") && col("va") < col("vb") &&
-          round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6)
-            >= SemDedupCosine.toDouble)
-      .select(col("vb").as("vec_id")).distinct()
-      .withColumn("nd", lit(1))
-    val tier = when(col("ch").isNotNull, "corpus_near")
-      .when(col("nd").isNotNull, "batch_near")
-      .otherwise("appended")
-    val audit = ann.join(drops, Seq("vec_id"), "left")
-      .select(tier.as("tier"))
-      .agg(
-        count(lit(1)).as("n_arrivals"),
-        count(when(col("tier") === "corpus_near", 1)).as("n_corpus_near"),
-        count(when(col("tier") === "batch_near", 1)).as("n_batch_near"),
-        count(when(col("tier") === "appended", 1)).as("n_appended"))
-      .localCheckpoint(true) // materialize before releasing the pin
-    ann.unpersist(blocking = false)
-    audit
+    val compacted = graft.pipeline.VectorCompaction
+      .compact(arrivals, corpusCellIndex(spark, dir), quantizerRows(spark, dir))
+    compacted.release() // the audit is local rows; the survivor pin is unused
+    compacted.audit
   }
 
   /** v16's imbalance alert bar: a cell holding more than twice its fair
@@ -1240,23 +1206,6 @@ object VectorQueries {
       s"CASE WHEN embedding[${lo + i}] > 0 THEN ${1L << i} ELSE 0 END")
       .mkString("CAST(", " + ", " AS BIGINT)")
 
-  /** v9 — binary-quantization ANN (the RaBitQ / binary-sketch rerank
-    * shape): every vector is sketched as its 64 sign bits (16 BYTES of
-    * index per vector vs the 256-byte float32 embedding), candidates are
-    * the vectors within Hamming [[BinaryHammingBudget]] of the query's
-    * sketch, and the exact rounded cosine reranks only the survivors.
-    * XOR + popcount are integer ops — exact in both engines, no rounding
-    * discipline needed until the rerank's cosine (rounded to 6 before
-    * ranking, vid-asc ties — the v1 rule).
-    *
-    * Plan shape at 100 TB: the sketch table is 16 bytes/vector; the
-    * prefilter is a broadcast of Q query sketches against a linear
-    * corpus scan of codegen'd XOR/popcount — no shuffle, no index build
-    * — and the full embedding array is only read for the ~3% of rows
-    * that survive. This is the published binary-quantization trade:
-    * recall@5 = 0.6 (vs v3's 0.20) for a prefilter that prunes 97%;
-    * where v7's PQ needs trained codebooks, the sign sketch is
-    * training-free, so it works on day-0 corpora and never drifts. */
   /** Checkpointed sign-sketch base for v9: (vec_id, embedding, blo, bhi,
     * nrm). The 128 per-row CASE branches of the two sketch halves are the
     * query's only non-trivial per-row compute, and the r9 driver run
@@ -1274,8 +1223,24 @@ object VectorQueries {
         .withColumn("bhi", bsigHalf(col("embedding"), 33))
         .withColumn("nrm", norm(col("embedding"))))
 
+  /** v9 — binary-quantization ANN (the RaBitQ / binary-sketch rerank
+    * shape): every vector is sketched as its 64 sign bits (16 BYTES of
+    * index per vector vs the 256-byte float32 embedding), candidates are
+    * the vectors within Hamming [[BinaryHammingBudget]] of the query's
+    * sketch, and the exact rounded cosine reranks only the survivors.
+    * XOR + popcount are integer ops — exact in both engines, no rounding
+    * discipline needed until the rerank's cosine (rounded to 6 before
+    * ranking, vid-asc ties — the v1 rule).
+    *
+    * Plan shape at 100 TB: the sketch table is 16 bytes/vector; the
+    * prefilter is a broadcast of Q query sketches against a linear
+    * corpus scan of codegen'd XOR/popcount — no shuffle, no index build
+    * — and the full embedding array is only read for the ~3% of rows
+    * that survive. This is the published binary-quantization trade:
+    * recall@5 = 0.6 (vs v3's 0.20) for a prefilter that prunes 97%;
+    * where v7's PQ needs trained codebooks, the sign sketch is
+    * training-free, so it works on day-0 corpora and never drifts. */
   def v9BinaryAnn(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = cachedBinSketch(spark, dir)
     val q = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),
@@ -1288,12 +1253,8 @@ object VectorQueries {
           bit_count(col("qhi").bitwiseXOR(col("chi")))).cast("bigint"))
       .filter(col("hamming") <= BinaryHammingBudget)
       .select(col("qid"), col("vid"), col("hamming"),
-        round(dot(col("qe"), col("ce")) / (col("qn") * col("cn")), 6)
-          .as("cosine"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("cosine").desc, col("vid").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select("qid", "vid", "hamming", "cosine", "rk")
-      .orderBy("qid", "rk")
+        cosine6(col("qe"), col("qn"), col("ce"), col("cn")).as("cosine"))
+    topK(scored, "cosine", ascending = false, 5, "hamming", "cosine")
   }
 
   /** v10 — int8 scalar-quantization ANN (the faiss SQ8 shape): every
@@ -1317,7 +1278,6 @@ object VectorQueries {
     * top-5 overlap with exact cosine: 14/15 (sf0.001) and 15/15 (sf0.1),
     * VectorSpec-pinned. */
   def v10SqAnn(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = emb(spark, dir)
     val gmax = e.agg(
       max(array_max(transform(col("embedding"), x => abs(x.cast("double")))))
@@ -1333,10 +1293,7 @@ object VectorQueries {
     val scored = c.join(broadcast(q))
       .select(col("qid"), col("vid"),
         dot(col("qc"), col("cc")).cast("bigint").as("qdot"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("qdot").desc, col("vid").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select("qid", "vid", "qdot", "rk")
-      .orderBy("qid", "rk")
+    topK(scored, "qdot", ascending = false, 5, "qdot")
   }
 
   /** v11's prune fraction as exact integer arithmetic: a cell of n keeps
@@ -1431,10 +1388,6 @@ object VectorQueries {
     "v9_binary_ann" -> v9BinaryAnn,
     "v10_sq_ann" -> v10SqAnn)
 
-  /** Lloyd CTE chain generated from the SAME IvfCells/LloydIters/IvfProbes
-    * constants as the Spark plan — the two quantizers cannot drift. The
-    * corpus assignment is always rk=1; the query side probes rk<=nprobe
-    * cells (disjoint by construction, so no (qid, vid) dedup is needed). */
   /** One k-nearest-cell assignment CTE against cent{i-1} — the SQL twin of
     * [[assignCells]], parameterized by the exploded-values/norms source so
     * the same trained quantizer can assign the base corpus (vals/norms) or
@@ -1503,6 +1456,10 @@ object VectorQueries {
        |    JOIN norms nc ON d.vid = nc.vec_id))
        |WHERE rk <= 10 ORDER BY qid, rk""".stripMargin
 
+  /** v4/v6 oracle: the Lloyd CTE chain generated from the SAME IvfCells/LloydIters/IvfProbes
+    * constants as the Spark plan — the two quantizers cannot drift. The
+    * corpus assignment is always rk=1; the query side probes rk<=nprobe
+    * cells (disjoint by construction, so no (qid, vid) dedup is needed). */
   private def ivfOracle(nprobe: Int): String = {
     def assignCte(i: Int, name: String, k: Int): String = ivfAssignCte(i, name, k)
     val fin = LloydIters + 1

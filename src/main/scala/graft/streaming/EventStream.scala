@@ -358,10 +358,8 @@ object EventStream {
     withCell.join(
         corpusIndex.select(col("cell").as("c_cell"),
           col("embedding").as("c_emb"), col("nrm").as("c_nrm")),
-        col("gate_cell") === col("c_cell") &&
-          round(VectorQueries.dot(col("embedding"), col("c_emb")) /
-            (col("gate_nrm") * col("c_nrm")), 6)
-            >= VectorQueries.SemDedupCosine.toDouble,
+        VectorQueries.semNear(col("gate_cell"), col("embedding"), col("gate_nrm"),
+          col("c_cell"), col("c_emb"), col("c_nrm")),
         "left_anti")
       .drop("gate_cell", "gate_nrm")
   }

@@ -687,4 +687,35 @@ class VectorSpec extends AnyFunSuite {
       VectorQueries.trainedCentroids(spark, sf, cells = 0))
     assert(e.getMessage.contains("no centroids"))
   }
+
+  test("topK: ties rank by vid ascending in both score directions") {
+    import spark.implicits._
+    // tie groups that straddle the k cut in both directions; input rows
+    // arrive vid-descending so no natural order can pass for the rule
+    val scored = Seq(
+      (0L, 9L, 0.9), (0L, 7L, 0.7), (0L, 5L, 0.9), (0L, 3L, 0.9), (0L, 1L, 0.5),
+      (1L, 8L, 0.8), (1L, 6L, 0.2), (1L, 4L, 0.2), (1L, 2L, 0.2))
+      .toDF("qid", "vid", "score").repartition(3)
+    val k = 3
+    Seq(false -> Map(0L -> Seq(3L, 5L, 9L), 1L -> Seq(8L, 2L, 4L)),
+        true -> Map(0L -> Seq(1L, 7L, 3L), 1L -> Seq(2L, 4L, 6L)))
+      .foreach { case (asc, expected) =>
+        val rows = VectorQueries.topK(scored, "score", asc, k, "score")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+          .toSeq
+        assert(rows.map(r => (r._1, r._4)) == rows.map(r => (r._1, r._4)).sorted,
+          s"ascending=$asc: not ordered by (qid, rk)")
+        rows.groupBy(_._1).foreach { case (qid, rs) =>
+          assert(rs.size <= k, s"ascending=$asc qid $qid: more than k rows")
+          assert(rs.map(_._4) == (1 to rs.size), s"ascending=$asc qid $qid: rk gaps")
+          rs.sliding(2).foreach {
+            case Seq(a, b) if a._3 == b._3 =>
+              assert(a._2 < b._2, s"ascending=$asc qid $qid: tie not vid-ascending")
+            case _ => ()
+          }
+        }
+        assert(rows.groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2) } == expected,
+          s"ascending=$asc")
+      }
+  }
 }
