@@ -7,10 +7,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass JVM implementation of the per-row MinHash band keys —
-  * bit-identical to the Column chain it accelerates
-  * (`TextQueries.bandKeysHofCol`: tokenize → 3-gram shingles → one md5
-  * per shingle → 16 multiply-add-mod seed mixes → per-seed minimum →
-  * one md5 per band over the '|'-joined minima). The Column form builds
+  * bit-identical to the Column chain it accelerates (the test-side
+  * `HofForms.bandKeysHofCol`: tokenize → 3-gram shingles → one md5 per
+  * shingle → 16 multiply-add-mod seed mixes → per-seed minimum → one md5
+  * per band over the '|'-joined minima). The Column form builds
   * and discards an array per stage per row; this walks the token list
   * once with a single reused MessageDigest and a 16-slot running-minimum
   * array — the ingest-line-rate shape for the streaming gates and the

@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass per-document SimHash signature — bit-identical to the
   * explode → md5 → 64 bit-vote sums → strict-positive quarter packing
-  * chain it accelerates (`TextQueries.simhashSigHofDF`).
+  * chain it accelerates (the test-side `HofForms.simhashSigHofDF`).
   *
   * Why a custom Expression (builder brief, preference (b)): the Column
   * chain computes the signature by EXPLODING every token occurrence into

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass whitespace word tokenizer — bit-identical to the Column chain
-  * it accelerates (`TextQueries.toksHofCol`:
+  * it accelerates (the test-side `HofForms.toksHofCol`:
   * `filter(split(trim(text), "\\s+"), t => t =!= "")`).
   *
   * Why a custom Expression (builder brief, preference (b)): tokenization

@@ -28,6 +28,12 @@ import org.apache.spark.sql.functions._
   *      by design, not component-closed; d9 documents the closure
   *      upgrade).
   *
+  * The audit is oracled as is: `x_compact_audit`
+  * ([[graft.queries.ExportQueries.xCompactAudit]]) runs this function on
+  * a fixed arrival batch and returns its `audit`, which DuckDB recomputes.
+  * Both compactions count their tiers in one action over the pinned tier
+  * frames (`Compaction.audit`).
+  *
   * Scale shape: every step is proportional to the ARRIVAL batch, never
   * the corpus — per-row fingerprints and band keys (zero shuffle), one
   * batch-keyed window, two anti-join probes of bucketed corpus tables,
@@ -95,11 +101,7 @@ object CorpusCompaction {
       corpusFps: DataFrame, corpusBands: DataFrame): Compacted = {
     val cols = arrivals.columns
 
-    // tier frames are arrival-batch-sized: persist each so the audit's
-    // five counts (and the append unions) evaluate every tier ONCE —
-    // without the pins, each count re-derives the whole cascade
-    def pinned(df: DataFrame): DataFrame =
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import Compaction.pinned
 
     // tier 1: intra-batch exact (min doc_id per fingerprint)
     val enriched = arrivals
@@ -139,22 +141,13 @@ object CorpusCompaction {
           .as(Seq("band", "bkey")))
     val appended = survivors.select(cols.map(col): _*)
 
-    def n(df: DataFrame): Long = df.count()
-    val (nArr, nBatchU, nPastE, nPastN, nSurv) =
-      (n(arrivals), n(batchUnique), n(pastExact), n(pastNear), n(appended))
-    // survivors stays pinned: the returned artifact unions ride it; the
-    // upstream tier pins have served their counts
-    batchUnique.unpersist(blocking = false)
-    pastNear.unpersist(blocking = false)
-    val audit = arrivals.sparkSession.createDataFrame(
-      java.util.Arrays.asList(
-        org.apache.spark.sql.Row(nArr, nArr - nBatchU, nBatchU - nPastE,
-          nPastE - nPastN, nPastN - nSurv, nSurv)),
-      org.apache.spark.sql.types.StructType(
-        Seq("n_arrivals", "n_batch_exact", "n_corpus_exact", "n_corpus_near",
-          "n_batch_near", "n_appended").map(f =>
-          org.apache.spark.sql.types.StructField(f,
-            org.apache.spark.sql.types.LongType, nullable = false))))
+    // survivors stays pinned on success: the returned deltas ride it; the
+    // upstream tier pins have served the audit either way
+    val audit = try Compaction.audit(
+      Seq(arrivals, batchUnique, pastExact, pastNear, survivors),
+      Seq("batch_exact", "corpus_exact", "corpus_near", "batch_near"))
+    catch { case e: Throwable => survivors.unpersist(blocking = false); throw e }
+    finally Seq(batchUnique, pastNear).foreach(_.unpersist(blocking = false))
 
     new Compacted(
       corpus,

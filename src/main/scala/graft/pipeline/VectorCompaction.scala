@@ -24,6 +24,8 @@ import graft.queries.VectorQueries
   * The audit is oracled as is: `x_vcompact_audit`
   * ([[graft.queries.VectorQueries.xVcompactAudit]]) runs this function on
   * a fixed arrival batch and returns its `audit`, which DuckDB recomputes.
+  * The audit is one action over the pinned tier frames
+  * (`Compaction.audit`, shared with [[CorpusCompaction]]).
   *
   * Scale shape: per-arrival cell assignment is the gate's own pure
   * expression over the memoized (K x dims) quantizer rows; tier 1 is one
@@ -58,11 +60,7 @@ object VectorCompaction {
 
   def compact(arrivals: DataFrame, index: DataFrame,
       centroids: Seq[(Long, Seq[Double])]): Compacted = {
-    // tier frames are arrival-batch-sized: pin them so the audit counts
-    // and the append union evaluate each tier once (the CorpusCompaction
-    // discipline)
-    def pinned(df: DataFrame): DataFrame =
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    import Compaction.pinned
 
     // tier 1: the semantic gate, batch-side
     val pastCorpus = pinned(graft.streaming.EventStream
@@ -78,16 +76,11 @@ object VectorCompaction {
     val survivors = pinned(assigned.join(VectorQueries.withinCellDrops(assigned),
       Seq("vec_id"), "left_anti"))
 
-    val (nArr, nPast, nSurv) =
-      (arrivals.count(), pastCorpus.count(), survivors.count())
-    pastCorpus.unpersist(blocking = false) // survivors stays pinned
-    val audit = arrivals.sparkSession.createDataFrame(
-      java.util.Arrays.asList(
-        org.apache.spark.sql.Row(nArr, nArr - nPast, nPast - nSurv, nSurv)),
-      org.apache.spark.sql.types.StructType(
-        Seq("n_arrivals", "n_corpus_near", "n_batch_near", "n_appended")
-          .map(f => org.apache.spark.sql.types.StructField(f,
-            org.apache.spark.sql.types.LongType, nullable = false))))
+    // survivors stays pinned on success: the returned delta rides it
+    val audit = try Compaction.audit(Seq(arrivals, pastCorpus, survivors),
+      Seq("corpus_near", "batch_near"))
+    catch { case e: Throwable => survivors.unpersist(blocking = false); throw e }
+    finally pastCorpus.unpersist(blocking = false)
 
     val delta = survivors.select("vec_id", "embedding", "cell", "nrm")
     new Compacted(

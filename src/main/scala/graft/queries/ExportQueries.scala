@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** [EXT] driver-facing surface for the training-shard export sink: runs
@@ -229,16 +228,16 @@ object ExportQueries {
   /** x_compact — the incremental-compaction pipeline as a driver-checked
     * query: a deterministic arrival batch (corpus re-arrivals at %11,
     * drop-first-word near-dups at %13, plus [[CompactNovels]]) runs
-    * through [[graft.pipeline.CorpusCompaction.compact]]'s four kill
-    * tiers, and the ONE-ROW AUDIT is the result. Every tier is md5/band
-    * arithmetic DuckDB can recompute from the raw parquet (the arrival
-    * band chain rides [[TextQueries.bandChainCtes]]), so unlike the
-    * export manifest this pipeline surface is fully hash-checked —
-    * CompactionSpec pins tier semantics, the oracle pins the numbers. */
+    * through [[graft.pipeline.CorpusCompaction.compact]] itself, against
+    * the checkpointed d1 fingerprint base and the corpus band table, and
+    * the result is its ONE-ROW AUDIT. Every tier is md5/band arithmetic
+    * DuckDB can recompute from the raw parquet (the arrival band chain
+    * rides [[TextQueries.bandChainCtes]]), so unlike the export manifest
+    * this pipeline surface is fully hash-checked, and the oracle checks
+    * the fold production runs — CompactionSpec pins tier semantics, the
+    * oracle pins the numbers. */
   def xCompactAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val fps = TextQueries.cachedFps(spark, dir) // the checkpointed d1 base
-    val bands = TextQueries.corpusBandTable(spark, dir)
     val d = graft.plans.Tables.table(spark, dir, "documents")
       .select("doc_id", "text", "lang")
     val novels = CompactNovels.map { case (i, t) => (i, t, "en") }
@@ -249,70 +248,10 @@ object ExportQueries {
         .select((col("doc_id") + 4000000L).as("doc_id"),
           regexp_replace(col("text"), "^\\S+\\s+", "").as("text"), col("lang")))
       .unionByName(novels)
-    // r18 optimization round — the x_front_door_audit discipline applied
-    // here (the r12/r13 single-pass rewrite): the audit used to run
-    // CorpusCompaction.compact, whose five .count() actions over a pinned
-    // four-tier cascade cost five sequential job round-trips per rep.
-    // The SAME five numbers fall out of ONE annotated pass: each arrival
-    // carries its kill tier (the when-cascade encodes compact's tier
-    // ORDER), and one conditional aggregate emits the row. Every probe
-    // reuses the gates' own column definitions (Fingerprint.col,
-    // bandKeysCol with try_element_at's null-miss semantics, per-band
-    // key matching), so tier semantics cannot drift from the gate chain;
-    // CompactionSpec still pins compact() itself — the production fold
-    // path is unchanged — and the DuckDB oracle recomputes these numbers
-    // independently, which is the equivalence proof.
-    //
-    // One subtlety mirrors compact exactly: tier 4 (intra-batch near) is
-    // defined over tiers-1-3 SURVIVORS only, so the band self-join runs
-    // on the pass123 filter of the annotated frame; the frame is
-    // persisted for that one action so the gate cascade is computed once
-    // (released before return — the r11 pin-hygiene advice).
-    val wFp = Window.partitionBy(col("fp")).orderBy(col("doc_id").asc)
-    val fpProbe = fps.select(col("fp")).distinct().withColumn("fp_hit", lit(1))
-    val nBands = TextQueries.Bands
-    val base = arrivals
-      .withColumn("fp", graft.ops.Fingerprint.col(col("text")))
-      .withColumn("rn", row_number().over(wFp))
-      .join(fpProbe, Seq("fp"), "left")
-      .withColumn("bk_arr", TextQueries.bandKeysCol(col("text")))
-    val annotated = (0 until nBands).foldLeft(base) { (df, b) =>
-      df.join(
-        bands.filter(col("band") === b)
-          .select(col("bkey").as(s"bk$b")).distinct()
-          .withColumn(s"bh$b", lit(1)),
-        try_element_at(col("bk_arr"), lit(b + 1)) === col(s"bk$b"), "left")
-        .drop(s"bk$b")
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val anyBandHit = (0 until nBands)
-      .map(b => col(s"bh$b").isNotNull).reduce(_ || _)
-    val pass123 = col("rn") === 1 && col("fp_hit").isNull && !anyBandHit
-    val bandRows = annotated.filter(pass123)
-      .select(col("doc_id"), posexplode(col("bk_arr")).as(Seq("band", "bkey")))
-    val nearDrops = bandRows.as("a")
-      .join(bandRows.as("b"),
-        col("a.band") === col("b.band") && col("a.bkey") === col("b.bkey") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("b.doc_id").as("doc_id")).distinct()
-      .withColumn("nd", lit(1))
-    val tier = when(col("rn") > 1, "batch_exact")
-      .when(col("fp_hit").isNotNull, "corpus_exact")
-      .when(anyBandHit, "corpus_near")
-      .when(col("nd").isNotNull, "batch_near")
-      .otherwise("appended")
-    val audit = annotated
-      .join(nearDrops, Seq("doc_id"), "left")
-      .select(tier.as("tier"))
-      .agg(
-        count(lit(1)).as("n_arrivals"),
-        count(when(col("tier") === "batch_exact", 1)).as("n_batch_exact"),
-        count(when(col("tier") === "corpus_exact", 1)).as("n_corpus_exact"),
-        count(when(col("tier") === "corpus_near", 1)).as("n_corpus_near"),
-        count(when(col("tier") === "batch_near", 1)).as("n_batch_near"),
-        count(when(col("tier") === "appended", 1)).as("n_appended"))
-      .localCheckpoint(true) // materialize before releasing the pin
-    annotated.unpersist(blocking = false)
-    audit
+    val compacted = graft.pipeline.CorpusCompaction.compact(arrivals, d,
+      TextQueries.cachedFps(spark, dir), TextQueries.corpusBandTable(spark, dir))
+    compacted.release() // the audit is local rows; the survivor pin is unused
+    compacted.audit
   }
 
   /** Seed + shard count for the export shuffle under the FIXTURE policy

@@ -222,16 +222,12 @@ object TextQueries {
   /** Whitespace word tokenization — since round 12 the native codegen'd
     * expression (graft.functions.TokenizeWords, registered via
     * GraftExtensions): one byte scan emitting buffer slices, bit-identical
-    * to [[toksHofCol]] (TokenizeWordsSpec pins the equality). The HOF
-    * `filter` was a CodegenFallback, so every gate/annotator tokenization
-    * dropped out of whole-stage codegen. */
+    * to the HOF `filter(split(...))` chain (TokenizeWordsSpec pins the
+    * equality against it, kept as the test-side `HofForms.toksHofCol`).
+    * The HOF `filter` was a CodegenFallback, so every gate/annotator
+    * tokenization dropped out of whole-stage codegen. */
   private[graft] def toksCol(text: Column): Column =
     call_function("tokenize_words", text)
-
-  /** The HOF form the custom expression replaced — the reference the
-    * equality spec compares [[toksCol]] against; no query plan uses it. */
-  private[graft] def toksHofCol(text: Column): Column =
-    filter(split(trim(text), "\\s+"), t => t =!= "")
 
   /** The checkpointed tokenized corpus for sibling query modules
     * (ApproxQueries' sketch twins share t6's corpus+tokenization): the
@@ -441,32 +437,12 @@ object TextQueries {
     * with [[corpusBandTable]] over the whole fixture corpus. */
   private[graft] def bandKeysCol(text: Column): Column =
     // native one-pass expression (graft.functions.BandKeys, registered via
-    // GraftExtensions) — bit-identical to [[bandKeysHofCol]] and inside
+    // GraftExtensions) — bit-identical to the Column chain it replaced
+    // (the test-side `HofForms.bandKeysHofCol`, BandKeysSpec) and inside
     // whole-stage codegen; NULL coalesces to '' so a NULL doc gets the
     // EMPTY array (no evidence of duplication), exactly as the Column
     // chain's when/otherwise produced
     call_function("band_keys", coalesce(text, lit("")))
-
-  /** The Column-chain form the native expression replaced — the reference
-    * the equality spec compares [[bandKeysCol]] against (the
-    * float_dot/dotHof discipline); no query plan uses it, and it tokenizes
-    * with the native [[toksCol]] itself. */
-  private[graft] def bandKeysHofCol(text: Column): Column = {
-    val toks = toksCol(text)
-    val sh = array_distinct(transform(sequence(lit(0), size(toks) - 3),
-      i => array_join(slice(toks, i + 1, lit(3)), " ")))
-    val hx = transform(sh, s => md5(s))
-    def hj(j: Int): Column =
-      array_min(transform(hx, h =>
-        (conv(substring(h, 1 + 8 * (j % 4), 8), 16, 10).cast("bigint")
-          * mixA(j) + mixB(j)) % MixMod))
-    val keys = array((0 until Bands).map { b =>
-      md5(concat_ws("|",
-        (b * RowsPerBand until (b + 1) * RowsPerBand)
-          .map(j => hj(j).cast("string")): _*))
-    }: _*)
-    when(size(toks) >= 3, keys).otherwise(array().cast("array<string>"))
-  }
 
   // ---- queries ----
 
@@ -613,7 +589,8 @@ object TextQueries {
     * explode → 64-vote aggregate it replaces shuffled the whole tokenized
     * corpus. Token-less docs are filtered first: the aggregate form drops
     * them (no exploded rows), and the row sets must match bit for bit
-    * (SimhashSigSpec pins equality against [[simhashSigHofDF]]). */
+    * (SimhashSigSpec pins equality against the aggregate form, kept as
+    * the test-side `HofForms.simhashSigHofDF`). */
   private def simhashSigDF(spark: SparkSession, dir: String): DataFrame =
     cachedToks(spark, dir)
       .filter(size(col("toks")) > 0)
@@ -621,35 +598,6 @@ object TextQueries {
       .select(col("doc_id"), col("s.sim_hi").as("sim_hi"),
         col("s.sim_lo").as("sim_lo"), col("s.b0").as("b0"),
         col("s.b1").as("b1"), col("s.b2").as("b2"), col("s.b3").as("b3"))
-
-  /** The explode+aggregate form the custom expression replaced — the
-    * reference the equality spec compares [[simhashSigDF]] against; no
-    * query plan uses it. */
-  private[graft] def simhashSigHofDF(spark: SparkSession, dir: String): DataFrame = {
-    val hx = md5(col("token"))
-    val hashed = cachedToks(spark, dir)
-      .select(col("doc_id"), explode(col("toks")).as("token"))
-      .select(col("doc_id"),
-        conv(substring(hx, 1, 8), 16, 10).cast("bigint").as("hhi"),
-        conv(substring(hx, 9, 8), 16, 10).cast("bigint").as("hlo"))
-    def bit(b: Int): Column =
-      (if (b < 32) shiftright(col("hlo"), b)
-       else shiftright(col("hhi"), b - 32)).bitwiseAND(1)
-    val bitSums = hashed.groupBy(col("doc_id"))
-      .agg(sum(when(bit(0) === 1, 1).otherwise(-1)).as("s0"),
-        (1 until 64).map(b =>
-          sum(when(bit(b) === 1, 1).otherwise(-1)).as(s"s$b")): _*)
-    // 16-bit quarter starting at vote `lo` — doubles as the band key
-    def quarter(lo: Int): Column =
-      (0 until 16).map(j =>
-        when(col(s"s${lo + j}") > 0, lit(1L << j)).otherwise(lit(0L)))
-        .reduce(_ + _)
-    bitSums.select(col("doc_id"),
-      (quarter(32) + quarter(48) * lit(65536L)).as("sim_hi"),
-      (quarter(0) + quarter(16) * lit(65536L)).as("sim_lo"),
-      quarter(0).as("b0"), quarter(16).as("b1"),
-      quarter(32).as("b2"), quarter(48).as("b3"))
-  }
 
   /** SimHash near-dup pairs: hamming distance ≤ [[SimhashMaxHamming]] over
     * the 64-bit signatures, found via TWO-LEVEL hamming-band candidate

@@ -61,15 +61,10 @@ object VectorQueries {
     * Uses the native codegen'd expression (graft.functions.FloatDotProduct,
     * registered via GraftExtensions) — bit-identical to the higher-order
     * `aggregate(zip_with(...))` fold it replaced, minus the per-element
-    * lambda dispatch and array allocation (VectorSpec pins the equality). */
+    * lambda dispatch and array allocation (VectorSpec pins the equality
+    * against that fold, kept as the test-side `HofForms.dotHof`). */
   private[graft] def dot(a: Column, b: Column): Column =
     call_function("float_dot", a, b)
-
-  /** The HOF form the custom expression replaced — the reference the
-    * equality specs compare [[dot]] against; no query plan uses it. */
-  private[graft] def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
 
   private[graft] def norm(a: Column): Column = sqrt(dot(a, a))
 

@@ -12,7 +12,7 @@ class BandKeysSpec extends AnyFunSuite {
     val rows = TextQueries.corpus(spark, sf)
       .select(col("doc_id"),
         TextQueries.bandKeysCol(col("text")).as("native"),
-        TextQueries.bandKeysHofCol(col("text")).as("hof"))
+        HofForms.bandKeysHofCol(col("text")).as("hof"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -35,7 +35,7 @@ class BandKeysSpec extends AnyFunSuite {
     ).toDF("id", "text")
     val rows = cases.select(col("id"),
         TextQueries.bandKeysCol(col("text")).as("native"),
-        TextQueries.bandKeysHofCol(coalesce(col("text"), lit(""))).as("hof"))
+        HofForms.bandKeysHofCol(coalesce(col("text"), lit(""))).as("hof"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[String](1) == r.getSeq[String](2),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -144,5 +145,82 @@ class CompactionSpec extends AnyFunSuite {
     assert(graft.streaming.EventStream
       .semanticGateAtIngest(replay, r.index, cents).count() == 0,
       "re-arrival survived the compacted cell index")
+  }
+
+  /** The arrivals and artifacts of one corpus and one vector compaction,
+    * every memoized input (band table, quantizer, cell index) built. The
+    * arrivals are read from parquet, as a loop reads them (a frame over
+    * local rows would be evaluated by the optimizer); the texts are
+    * corpus docs with one word appended, so they pass the exact tier. */
+  private def bothInputs() = {
+    import graft.queries.VectorQueries
+    val (corpus, fps, bands) = artifacts()
+    val texts = spark.read.parquet(s"$sf/documents.parquet")
+      .filter(col("doc_id") < 4L)
+      .select((col("doc_id") + 9500000L).as("doc_id"),
+        concat(col("text"), lit(" plugh")).as("text"), col("lang"))
+    val cents = VectorQueries.quantizerRows(spark, sf)
+    val index = VectorQueries.corpusCellIndex(spark, sf)
+    val vecs = spark.read.parquet(s"$sf/embeddings.parquet")
+      .filter(col("vec_id") < 4L)
+      .select((col("vec_id") + 9500000L).as("vec_id"), col("embedding"))
+    (corpus, fps, bands, texts, index, cents, vecs)
+  }
+
+  test("each compaction counts its audit in one action") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import graft.pipeline.VectorCompaction
+    val (corpus, fps, bands, texts, index, cents, vecs) = bothInputs()
+    val starts = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => starts.add(s.description)
+        case _ =>
+      }
+    }
+    // the bus delivers in order: an action described "sentinel", run
+    // after the call, is delivered after every action the call started
+    def actions(body: => Unit): Int = {
+      starts.clear()
+      body
+      spark.sparkContext.setJobDescription("sentinel")
+      try spark.range(1).collect() finally spark.sparkContext.setJobDescription(null)
+      Iterator.continually(starts.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { d => assert(d != null, "the sentinel never arrived"); d != "sentinel" }
+        .size
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val corpusActions = actions(CorpusCompaction.compact(texts, corpus, fps, bands).release())
+      assert(corpusActions == 1, s"CorpusCompaction.compact started $corpusActions actions")
+      val vectorActions = actions(VectorCompaction.compact(vecs, index, cents).release())
+      assert(vectorActions == 1, s"VectorCompaction.compact started $vectorActions actions")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a failed audit leaves no tier pin behind") {
+    import graft.pipeline.VectorCompaction
+    val (corpus, fps, bands, texts, index, cents, vecs) = bothInputs()
+    def failing(df: DataFrame, key: String, c: String): DataFrame = df.withColumn(c,
+      when(col(key) === df.agg(max(key)).first().getLong(0), raise_error(lit("boom")))
+        .otherwise(col(c)))
+    // an arrival failing in the first tier, a probe table failing after
+    // the first tier is pinned, and a vector arrival failing
+    val calls: Seq[(String, () => Any)] = Seq(
+      "corpus compaction (arrival)" -> (() => CorpusCompaction.compact(
+        failing(texts, "doc_id", "text"), corpus, fps, bands)),
+      "corpus compaction (band probe)" -> (() => CorpusCompaction.compact(
+        texts, corpus, fps, failing(bands, "doc_id", "bkey"))),
+      "vector compaction (arrival)" -> (() => VectorCompaction.compact(
+        failing(vecs, "vec_id", "embedding"), index, cents)))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    calls.foreach { case (what, call) =>
+      val e = intercept[Exception](call())
+      assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("boom")), e)
+      assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+        s"a failed $what left a tier pinned")
+    }
   }
 }

@@ -47,9 +47,9 @@ class FuzzSpec extends AnyFunSuite {
     val diff = texts.toDF("id", "text")
       .select(col("id"),
         TextQueries.toksCol(col("text")).as("nt"),
-        TextQueries.toksHofCol(col("text")).as("ht"),
+        HofForms.toksHofCol(col("text")).as("ht"),
         TextQueries.bandKeysCol(col("text")).as("nb"),
-        TextQueries.bandKeysHofCol(col("text")).as("hb"))
+        HofForms.bandKeysHofCol(col("text")).as("hb"))
       .filter(!(col("nt") <=> col("ht")) || !(col("nb") <=> col("hb")))
       .collect()
     assert(diff.isEmpty,
@@ -138,7 +138,7 @@ class FuzzSpec extends AnyFunSuite {
     val got = rows.toDF("id", "x", "y")
       .select(col("id"),
         call_function("float_dot", col("x"), col("y")).as("native"),
-        VectorQueries.dotHof(col("x"), col("y")).as("hof"))
+        HofForms.dotHof(col("x"), col("y")).as("hof"))
       .collect()
     got.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(1)) ==

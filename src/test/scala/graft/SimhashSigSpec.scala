@@ -14,7 +14,7 @@ class SimhashSigSpec extends AnyFunSuite {
 
   test("native signature equals the explode+aggregate chain over the fixture corpus") {
     val cols = Seq("doc_id", "sim_hi", "sim_lo", "b0", "b1", "b2", "b3")
-    val hof = TextQueries.simhashSigHofDF(spark, sf)
+    val hof = HofForms.simhashSigHofDF(spark, sf)
       .select(cols.map(col): _*).collect().map(_.toSeq).toSet
     val native = {
       // rebuild the same projection the snapshot build runs (the snapshot

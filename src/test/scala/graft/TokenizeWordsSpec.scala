@@ -17,7 +17,7 @@ class TokenizeWordsSpec extends AnyFunSuite {
     val diff = TextQueries.corpus(spark, sf)
       .select(col("doc_id"),
         TextQueries.toksCol(col("text")).as("nat"),
-        TextQueries.toksHofCol(col("text")).as("hof"))
+        HofForms.toksHofCol(col("text")).as("hof"))
       .filter(!(col("nat") <=> col("hof")))
       .as[(Long, Seq[String], Seq[String])].collect()
     assert(diff.isEmpty, s"tokenizers diverge on docs: ${diff.take(3).toSeq}")
@@ -41,7 +41,7 @@ class TokenizeWordsSpec extends AnyFunSuite {
     val df = cases.toDF("text")
     val diff = df
       .select(TextQueries.toksCol(col("text")).as("nat"),
-        TextQueries.toksHofCol(col("text")).as("hof"))
+        HofForms.toksHofCol(col("text")).as("hof"))
       .filter(!(col("nat") <=> col("hof")))
       .collect()
     assert(diff.isEmpty, s"diverged: ${diff.toSeq}")

@@ -15,7 +15,7 @@ class VectorSpec extends AnyFunSuite {
     val both = a.join(b, "vec_id")
       .select(col("vec_id"),
         call_function("float_dot", col("x"), col("y")).as("native"),
-        VectorQueries.dotHof(col("x"), col("y")).as("hof"))
+        HofForms.dotHof(col("x"), col("y")).as("hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -389,9 +389,9 @@ class VectorSpec extends AnyFunSuite {
         col("label").as("cl"))
       .join(q, col("cl") === col("ql"))
       .select(col("qid"), col("vid"),
-        (VectorQueries.dotHof(col("qe"), col("ce")) /
-          (sqrt(VectorQueries.dotHof(col("qe"), col("qe"))) *
-           sqrt(VectorQueries.dotHof(col("ce"), col("ce"))))).as("cos"))
+        (HofForms.dotHof(col("qe"), col("ce")) /
+          (sqrt(HofForms.dotHof(col("qe"), col("qe"))) *
+           sqrt(HofForms.dotHof(col("ce"), col("ce"))))).as("cos"))
       .collect().groupBy(_.getLong(0))
       .map { case (qid, rs) =>
         qid -> rs.sortBy(r => (-r.getDouble(2), r.getLong(1)))
@@ -419,9 +419,9 @@ class VectorSpec extends AnyFunSuite {
     val exact = e.select(col("vec_id").as("vid"), col("embedding").as("ce"))
       .crossJoin(q)
       .select(col("qid"), col("vid"),
-        (VectorQueries.dotHof(col("qe"), col("qe"))
-          - lit(2.0) * VectorQueries.dotHof(col("qe"), col("ce"))
-          + VectorQueries.dotHof(col("ce"), col("ce"))).as("d"))
+        (HofForms.dotHof(col("qe"), col("qe"))
+          - lit(2.0) * HofForms.dotHof(col("qe"), col("ce"))
+          + HofForms.dotHof(col("ce"), col("ce"))).as("d"))
       .collect().groupBy(_.getLong(0))
       .map { case (qid, rs) => qid -> rs.sortBy(r => (r.getDouble(2), r.getLong(1)))
         .take(5).map(_.getLong(1)).toSet }
