@@ -18,6 +18,16 @@ import graft.queries.{MlQueries, VectorQueries}
   * production scheduler runs one call per cycle and cannot get the
   * ordering wrong.
   *
+  * Each artifact trains at most once per pass. A leg measures first, and
+  * on a cold memo (a restarted service, or a caller that released the
+  * memos) that measurement has already trained the artifact on the
+  * corpus as it now stands; a tripped threshold then keeps it rather
+  * than training it again on the same corpus. Only an artifact trained
+  * before the pass is evicted and retrained. The text legs also drop
+  * the tokenized-corpus snapshot when the files under `dir` changed
+  * since it was built, so they never measure or train on the corpus as
+  * it was.
+  *
   * Concurrency: the three legs run at the same time, each submitting its
   * Spark jobs from its own thread, so one leg's driver-side loop (Lloyd,
   * BPE merges, L-BFGS) overlaps the others' tasks instead of leaving the
@@ -31,7 +41,9 @@ import graft.queries.{MlQueries, VectorQueries}
   * vector-side artifacts). The state the legs share is safe under this:
   * each memo has its own lock, `Tables` is a concurrent map, and
   * `Snapshot.checkpointed` builds a shared snapshot (the tokenizer's and
-  * classifier's `toks`) once. The pass returns only after EVERY leg has
+  * classifier's `toks`) once; `Snapshot.dropStale` never drops a build
+  * made under the dir's current stamp, so the second text leg's call
+  * leaves the first leg's rebuild in place. The pass returns only after EVERY leg has
   * finished, so no job of it is still running when the caller moves on;
   * failures are rethrown in the fixed order quantizer, tokenizer,
   * classifier, and the outcome's fields keep that order, so reports stay

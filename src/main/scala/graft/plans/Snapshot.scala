@@ -49,9 +49,15 @@ object Snapshot {
       .orElse(sys.env.get("GRAFT_SNAPSHOT_REUSE"))
       .forall(_.toLowerCase != "false")
 
+  /** One registered snapshot: its promise, and the fixture stamp its
+    * build or adoption ran under (null until the winner has computed it). */
+  private final class Entry {
+    val promise = scala.concurrent.Promise[DataFrame]()
+    @volatile var stamp: String = null
+  }
+
   private val promises =
-    scala.collection.mutable.Map[(String, String),
-      scala.concurrent.Promise[DataFrame]]()
+    scala.collection.mutable.Map[(String, String), Entry]()
 
   /** Completed snapshot paths built or adopted by THIS JVM — the byte
     * accounting ([[bytes]]) must reflect the bases in use, not whatever
@@ -188,17 +194,19 @@ object Snapshot {
     * base builds as independent Spark jobs. */
   def checkpointed(spark: SparkSession, dir: String, name: String,
       files: Int = 1)(build: => DataFrame): DataFrame = {
-    val fresh = scala.concurrent.Promise[DataFrame]()
+    val entry = new Entry
+    val fresh = entry.promise
     val (winner, promise) = promises.synchronized {
       promises.get((dir, name)) match {
-        case Some(prior) => (false, prior)
-        case None => promises((dir, name)) = fresh; (true, fresh)
+        case Some(prior) => (false, prior.promise)
+        case None => promises((dir, name)) = entry; (true, fresh)
       }
     }
     if (winner) {
       val t0 = System.nanoTime()
       try {
         val stamp = fixtureStamp(dir)
+        entry.stamp = stamp
         val dirTag = s"$name-${md5Hex(dir)}"
         val path = root.resolve(s"$dirTag-$stamp")
         val marker = path.resolve("_GRAFT_OK")
@@ -280,8 +288,11 @@ object Snapshot {
           // A failed build must not be cached for the JVM's lifetime: drop
           // the key first (under the lock) so the next caller becomes a
           // fresh winner and retries, THEN fail the promise for everyone
-          // already awaiting this attempt.
-          promises.synchronized { promises.remove((dir, name)) }
+          // already awaiting this attempt. Only this attempt's key: a
+          // [[dropStale]] may already have replaced it with a newer one.
+          promises.synchronized {
+            if (promises.get((dir, name)).exists(_ eq entry)) promises.remove((dir, name))
+          }
           fresh.failure(e)
       }
     }
@@ -304,6 +315,29 @@ object Snapshot {
       catch { case scala.util.control.NonFatal(_) => })
     df
   }
+
+  /** Forget this JVM's snapshots of `dir` that were built or adopted
+    * under a fixture stamp other than the dir's current one, so the next
+    * [[checkpointed]] call resolves them again over the files as they now
+    * stand. The promise memo is keyed by (dir, name), not by stamp, so
+    * without this a dir that grows in place (a compaction appending to
+    * its corpus) keeps serving the snapshot of its first read. A
+    * maintenance pass calls it after re-listing the dir's tables.
+    * Snapshots already on the current stamp are kept, and so is a build
+    * whose winner has not computed its stamp yet (it will see the current
+    * files), so a concurrent caller never drops a build over the current
+    * data. No snapshot of `dir` in this JVM: nothing is stamped. */
+  def dropStale(dir: String): Unit =
+    if (promises.synchronized(promises.keys.exists(_._1 == dir))) {
+      val now = fixtureStamp(dir)
+      promises.synchronized {
+        val stale = promises.collect {
+          case (k, e) if k._1 == dir && e.stamp != null && e.stamp != now => k
+        }.toList
+        stale.foreach(promises.remove)
+        livePaths.synchronized(stale.foreach(livePaths.remove))
+      }
+    }
 
   /** Bytes on disk for the snapshots in use by THIS JVM (bench evidence: a
     * nonzero size proves the consumers read files, not evictable RAM). The

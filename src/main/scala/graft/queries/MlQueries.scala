@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.feature.HashingTF
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Model-based document quality scoring — the trained-classifier stage
@@ -43,8 +43,9 @@ object MlQueries {
   def releaseModels(): Unit = models.synchronized(models.clear())
 
   /** Release memoized BPE state ([[bpeState]]'s merge table + encoded
-    * vocabulary — two pinned localCheckpoints): same test-hygiene hook as
-    * [[releaseModels]]; without it a garbage training result for a dir
+    * vocabulary — local rows and a local relation, or a pinned
+    * localCheckpoint when [[train]] ran its Spark loop): same test-hygiene
+    * hook as [[releaseModels]]; without it a garbage training result for a dir
     * (e.g. a fixed bad input) would be cached until process restart. */
   def releaseBpe(): Unit = bpeMemo.synchronized(bpeMemo.clear())
 
@@ -219,13 +220,22 @@ object MlQueries {
     * measure hold-out rule agreement, and below the floor evict the
     * fitted-model memo and refit eagerly on the corpus as it now stands
     * (t19's scores, the front door's scoring artifact at its next
-    * redeploy). No exact-reproduction pin here — L-BFGS is deterministic
-    * only to machine precision — so MlSpec pins the loop mechanics
+    * redeploy). Train once per pass: when the memo held no model for
+    * `dir` as the pass started, the report itself has just fitted one on
+    * the corpus as it now stands, so a trip keeps that model (and still
+    * reads `retrained`); only a model fitted before the pass is refit.
+    * The re-list also drops the tokenized-corpus snapshot when the files
+    * under `dir` changed ([[graft.plans.Snapshot.dropStale]]), so the
+    * report does not measure the corpus as it was. No exact-reproduction
+    * pin here — L-BFGS is deterministic only to machine precision — so
+    * MlSpec pins the loop mechanics
     * (no-trip instance stability, tripped rebuild) plus the semantic bar
     * the retrained model must clear (held-out AUC), not bit identity. */
   def retrainClassifierIfDrifted(spark: SparkSession, dir: String,
       agreementFloorMicro: Long = 0L): ClassifierDriftReport = {
     graft.plans.Tables.invalidate(s"$dir/documents.parquet")
+    graft.plans.Snapshot.dropStale(dir)
+    val cold = models.synchronized(!models.contains(dir))
     val report = xClassifierReport(spark, dir).collect()(0)
     val agreement = report.getAs[Long]("holdout_agreement_micro")
     // an EMPTY holdout is no evidence of drift: agreement reads 0 there
@@ -233,7 +243,7 @@ object MlQueries {
     // tiny corpus would thrash the model for no signal
     val drifted = report.getAs[Long]("n_holdout") > 0L &&
       agreement < agreementFloorMicro
-    if (drifted) {
+    if (drifted && !cold) {
       models.synchronized { models.remove(dir); () }
       fitted(spark, dir) // refit now, not at the next scoring pass
     }
@@ -280,24 +290,107 @@ object MlQueries {
 
   private val BpeCkptEvery = 4
 
-  /** Byte-pair-encoding merge learning (Sennrich et al.'s algorithm,
-    * Spark-first): k rounds of [count adjacent symbol pairs weighted by
-    * word frequency -> take the argmax (count desc, then lexicographic —
-    * fully deterministic) -> apply the merge everywhere]. The pair count
-    * is a groupBy over the exploded adjacent-pair table of DISTINCT
-    * words; the argmax is a 1-row collect (the merge RULE is model
-    * state, the legitimate driver-side scalar); the merge application is
-    * a stateless per-row fold. The loop localCheckpoints the tiny
-    * symbol table to truncate the k-deep expression lineage (at 100 TB
-    * swap in a reliable checkpoint dir — the d9 discipline; the table
-    * being cut is distinct-words-sized, not corpus-sized). Prior rounds'
-    * localCheckpoint blocks are dereferenced as `words` rebinds, so the
-    * ContextCleaner reclaims them on GC; a reliable-dir swap must delete
-    * prior rounds' files explicitly (the d9 cleanup discipline).
+  /** The largest distinct-word table [[train]] runs its merge loop over
+    * on the driver. At about 8 symbols a word that is a few MB of local
+    * rows; the fixtures and the bench corpus have 31 distinct words. A
+    * fixed bound, not a setting: above it the Spark loop runs. */
+  private[graft] val BpeLocalWords = 1 << 16
+
+  /** Byte-pair-encoding merge learning (Sennrich et al.'s algorithm):
+    * k rounds of [count adjacent symbol pairs weighted by word frequency
+    * -> take the argmax (count desc, then (left, right) asc in UTF-8 byte
+    * order — fully deterministic) -> apply the merge everywhere, greedy
+    * left-to-right and non-overlapping ([[mergeCol]])]. Everything runs
+    * over DISTINCT words weighted by frequency.
+    *
+    * The word table is atomized in Spark ([[symsCol]]) and pinned once.
+    * When it has at most [[BpeLocalWords]] rows (one `limit` collect
+    * tells, exactly), the loop runs over those rows on the driver
+    * ([[trainLocal]]): each Spark round is a shuffle job plus a 1-row
+    * collect, and on a model-sized table those job launches, not the
+    * pair counting, are the loop's cost. The end state then comes back
+    * as one local relation. Above the bound [[trainSpark]] runs; it
+    * starts from the same pinned table, so the corpus-wide word count
+    * is never computed twice. Both loops give the same merges and end
+    * states (BpeSpec runs both against an independent reference).
     *
     * Returns BOTH the merge table and the final (word, syms, freq) frame:
     * the loop's end state IS the corpus vocabulary encoded under every
-    * learned merge, so the encode query (t21) costs no extra pass.
+    * learned merge, so the encode query (t21) costs no extra pass. */
+  private[graft] def train(words0: DataFrame, k: Int)
+      : (Seq[(Int, String, String, Long)], DataFrame) = {
+    val words = atomized(words0)
+    localWords(words) match {
+      case Some(rows) =>
+        import scala.jdk.CollectionConverters._
+        val (merges, end) = trainLocal(rows, k)
+        (merges, words.sparkSession.createDataFrame(
+          end.map { case (w, syms, f) => Row(w, syms, f) }.asJava, words.schema))
+      case None => trainSpark(words, k)
+    }
+  }
+
+  /** (word, syms, freq): the word table atomized into symbols, pinned. */
+  private[graft] def atomized(words0: DataFrame): DataFrame =
+    words0.select(col("word"), symsCol(col("word")).as("syms"), col("freq"))
+      .localCheckpoint(true)
+
+  /** The rows of an atomized word table when it has at most
+    * [[BpeLocalWords]] of them, None when it has more. */
+  private[graft] def localWords(words: DataFrame)
+      : Option[Seq[(String, Seq[String], Long)]] = {
+    val rows = words.limit(BpeLocalWords + 1).collect()
+    if (rows.length > BpeLocalWords) None
+    else Some(rows.toSeq.map(r => (r.getString(0), r.getSeq[String](1), r.getLong(2))))
+  }
+
+  /** The merge loop over local rows: the pair counts are recounted each
+    * round (a distinct-word table is small enough that this is the
+    * simple exact form), and every rule of the Spark loop is kept: pairs
+    * by position, counts summed as longs, ties broken by Spark's own
+    * string order (UTF-8 bytes — not `String.compareTo`, which orders
+    * surrogate pairs below U+E000–U+FFFF), [[mergeCol]]'s fold. */
+  private[graft] def trainLocal(words: Seq[(String, Seq[String], Long)], k: Int)
+      : (Seq[(Int, String, String, Long)], Seq[(String, Seq[String], Long)]) = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val utf8 = Ordering.fromLessThan[String]((a, b) =>
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b)) < 0)
+    val rank = Ordering.Tuple3(Ordering.Long, utf8, utf8)
+    var state = words.map { case (w, syms, f) => (w, syms.toVector, f) }
+    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
+    var exhausted = false
+    for (round <- 1 to k if !exhausted) {
+      val counts = scala.collection.mutable.HashMap[(String, String), Long]()
+      for ((_, syms, f) <- state; i <- 0 until syms.length - 1) {
+        val p = (syms(i), syms(i + 1))
+        counts(p) = counts.getOrElse(p, 0L) + f
+      }
+      if (counts.isEmpty) exhausted = true
+      else {
+        val ((l, r), cnt) = counts.minBy { case ((l, r), c) => (-c, l, r) }(rank)
+        merges += ((round, l, r, cnt))
+        state = state.map { case (w, syms, f) =>
+          (w, syms.foldLeft(Vector.empty[String]) { (acc, cur) =>
+            if (acc.nonEmpty && acc.last == l && cur == r) acc.init :+ (l + r)
+            else acc :+ cur
+          }, f)
+        }
+      }
+    }
+    (merges.toSeq, state)
+  }
+
+  /** The merge loop in Spark, for a word table above [[BpeLocalWords]]:
+    * the pair count is a groupBy over the exploded adjacent-pair table;
+    * the argmax is a 1-row collect (the merge RULE is model state, the
+    * legitimate driver-side scalar); the merge application is a
+    * stateless per-row fold. The loop localCheckpoints the symbol table
+    * to truncate the k-deep expression lineage (at 100 TB swap in a
+    * reliable checkpoint dir — the d9 discipline; the table being cut is
+    * distinct-words-sized, not corpus-sized). Prior rounds'
+    * localCheckpoint blocks are dereferenced as `words` rebinds, so the
+    * ContextCleaner reclaims them on GC; a reliable-dir swap must delete
+    * prior rounds' files explicitly (the d9 cleanup discipline).
     *
     * Checkpoint CADENCE (r18 optimization round): the localCheckpoint runs
     * every `BpeCkptEvery`th merge, not every merge. It is lineage
@@ -305,17 +398,13 @@ object MlQueries {
     * re-applies at most `BpeCkptEvery − 1` pending mergeCol folds on the
     * fly, which on the distinct-words table is array arithmetic, while
     * the eager materialization it replaces was a whole extra Spark job
-    * per round (k rounds paid 2k sequential job latencies; the LOOP, not
-    * the data, dominated warm_model_memos' bpe stage). Depth stays
-    * bounded at `BpeCkptEvery` folds so codegen never sees an unbounded
-    * expression tree. BpeSpec's exact-reference pin holds at any cadence
-    * — same merges, same end state; the interleaved cadence 1 vs 4
-    * numbers are in OPTIMIZATION_r18.md §4. */
-  private[graft] def train(words0: DataFrame, k: Int)
+    * per round. Depth stays bounded at `BpeCkptEvery` folds so codegen
+    * never sees an unbounded expression tree. The interleaved cadence
+    * 1 vs 4 numbers are in OPTIMIZATION_r18.md §4. `words0` is an
+    * [[atomized]] table. */
+  private[graft] def trainSpark(words0: DataFrame, k: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
     var words = words0
-      .select(col("word"), symsCol(col("word")).as("syms"), col("freq"))
-      .localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var exhausted = false
     var pendingFolds = 0
@@ -363,7 +452,7 @@ object MlQueries {
 
   /** Train-once memo shared by t20 (the merge table) and t21 (the encoded
     * vocabulary) — one training pass serves both, like t19/v4. The
-    * multi-second, multi-job training runs OUTSIDE the lock (the
+    * training's Spark jobs run OUTSIDE the lock (the
     * quantizer-memo discipline): a concurrent duplicate train computes
     * identical state (the argmax is deterministic), getOrElseUpdate
     * keeps one, and an independent dir is never blocked behind another
@@ -386,7 +475,11 @@ object MlQueries {
     * [[graft.queries.VectorQueries.retrainIfDrifted]]: re-list the
     * corpus, measure corpus fertility and the alarm-doc tail, and when a
     * threshold trips, evict the trained-BPE memo for `dir` and retrain
-    * eagerly on the corpus as it now stands, so every later consumer
+    * eagerly on the corpus as it now stands (once per pass: when the memo
+    * was empty as the pass started, the report has just trained it on
+    * that corpus, and a trip keeps it; the re-list drops a stale
+    * tokenized-corpus snapshot first, as in
+    * [[retrainClassifierIfDrifted]]), so every later consumer
     * (t20's table, t21's pricing join, the report itself, and the front
     * door's `merges` artifact at its next
     * [[graft.streaming.EventStream.IngestArtifacts]] redeploy) prices
@@ -401,11 +494,13 @@ object MlQueries {
       fertilityCeilingMicro: Long = Long.MaxValue,
       maxAlarmDocs: Long = Long.MaxValue): TokenizerDriftReport = {
     graft.plans.Tables.invalidate(s"$dir/documents.parquet")
+    graft.plans.Snapshot.dropStale(dir)
+    val cold = bpeMemo.synchronized(!bpeMemo.contains(dir))
     val r = xTokenizerReport(spark, dir).collect()(0)
     val fert = r.getAs[Long]("fertility_micro")
     val alarms = r.getAs[Long]("n_alarm_docs")
     val drifted = fert > fertilityCeilingMicro || alarms > maxAlarmDocs
-    if (drifted) {
+    if (drifted && !cold) {
       bpeMemo.synchronized { bpeMemo.remove(dir); () }
       bpeState(spark, dir) // retrain now, not at the next pricing pass
     }

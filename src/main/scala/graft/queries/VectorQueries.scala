@@ -1108,9 +1108,13 @@ object VectorQueries {
     * (cells, sampleTarget) key, PQ codebooks) so the next consumer
     * retrains over the corpus as it stands. The spec hook behind
     * [[retrainIfDrifted]]'s retrain path. */
-  private[graft] def evictTrained(dir: String): Unit = {
+  private[graft] def evictTrained(dir: String): Unit = evictTrainedBut(dir, None)
+
+  /** [[evictTrained]], keeping the quantizer memoized at `keep`. */
+  private def evictTrainedBut(dir: String,
+      keep: Option[(String, Int, Long)]): Unit = {
     quantizers.synchronized {
-      quantizers.keys.filter(_._1 == dir).toList
+      quantizers.keys.filter(k => k._1 == dir && !keep.contains(k)).toList
         .foreach(quantizers.remove)
     }
     pqCodebooks.synchronized(pqCodebooks.remove(dir))
@@ -1127,7 +1131,10 @@ object VectorQueries {
     *      `recallFloorMicro` > 0 — the audit costs an exhaustive top-k
     *      pass, so deployments choose whether to pay it per cycle);
     *   4. any monitor past its threshold ⇒ evict the memoized
-    *      quantizer + PQ codebooks for `dir` and retrain eagerly, so
+    *      quantizer + PQ codebooks for `dir` and retrain eagerly (once
+    *      per pass: when the memo held no quantizer for `dir` as the pass
+    *      started, step 2 has just trained one on the corpus as it now
+    *      stands, so a trip keeps that one and drops only the rest), so
     *      every later consumer (v4/v6/v8/v11/v12, [[corpusCellIndex]],
     *      the streaming semantic gate's next deployment) probes the
     *      fresh quantizer; a MATERIALIZED index table redeploys its
@@ -1149,6 +1156,8 @@ object VectorQueries {
       maxDeadCells: Long = Long.MaxValue,
       recallFloorMicro: Long = 0L): DriftReport = {
     graft.plans.Tables.invalidate(s"$dir/embeddings.parquet")
+    val key = (dir, IvfCells, TrainSampleTarget)
+    val cold = quantizers.synchronized(!quantizers.contains(key))
     val bal = v16CellBalance(spark, dir)
       .agg(sum(col("hot")).as("hot"),
         sum(when(col("n_vecs") === 0L, 1L).otherwise(0L)).as("dead"))
@@ -1161,7 +1170,7 @@ object VectorQueries {
     val drifted = hot > maxHotCells || dead > maxDeadCells ||
       minRecall.exists(_ < recallFloorMicro)
     if (drifted) {
-      evictTrained(dir)
+      evictTrainedBut(dir, if (cold) Some(key) else None)
       quantizerRows(spark, dir) // retrain now, not at the next probe
     }
     DriftReport(hot, dead, minRecall, retrained = drifted)

@@ -231,6 +231,65 @@ class BpeSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** A skewed synthetic word table: a few thousand distinct words with
+    * Zipf-like frequencies over ASCII, BMP and non-BMP symbols, plus two
+    * planted words whose pairs tie at the top count where UTF-8 byte
+    * order ("｡" U+FF61 first) and `String.compareTo` ("𐀀" U+10000 first,
+    * as a surrogate pair) disagree. */
+  private lazy val skewedWords: Seq[(String, Long)] = {
+    val alphabet = "abcdeéñ中文｡".map(_.toString) ++ Seq("𐀀", "😀", "𝄞")
+    val rnd = new scala.util.Random(7)
+    val words = Iterator.continually(
+        Seq.fill(1 + rnd.nextInt(7))(alphabet(rnd.nextInt(alphabet.size))).mkString)
+      .distinct.filterNot(w => w == "｡z" || w == "𐀀z").take(3000).toSeq
+    words.zipWithIndex.map { case (w, i) => (w, 1000000L / math.pow(i + 1, 1.1).toLong.max(1L)) } ++
+      Seq(("｡z", 50000000L), ("𐀀z", 50000000L))
+  }
+
+  private def endRows(df: org.apache.spark.sql.DataFrame): Seq[(String, Seq[String], Long)] =
+    df.collect().map(r => (r.getString(0), r.getSeq[String](1), r.getLong(2)))
+      .toSeq.sortBy(_._1)
+
+  test("local and Spark merge loops: identical merges and end states on a skewed table, equal to the reference") {
+    import spark.implicits._
+    val words = MlQueries.atomized(skewedWords.toDF("word", "freq"))
+    val rows = MlQueries.localWords(words)
+    assert(rows.exists(_.size == skewedWords.size))
+    val (localMerges, localEnd) = MlQueries.trainLocal(rows.get, 32)
+    val (sparkMerges, sparkEnd) = MlQueries.trainSpark(words, 32)
+    assert(localMerges.size == 32)
+    // the planted tie: UTF-8 order puts "｡" first, compareTo would not
+    assert(localMerges.take(2).map(m => (m._2, m._3, m._4)) ==
+      Seq(("｡", "z", 50000000L), ("𐀀", "z", 50000000L)), localMerges.take(2).toString)
+    assert(localMerges == sparkMerges,
+      s"first mismatch: ${localMerges.zip(sparkMerges).find(p => p._1 != p._2)}")
+    assert(localMerges == refBpe(skewedWords, 32))
+    assert(localEnd.map { case (w, s, f) => (w, s.toSeq, f) }.sortBy(_._1) == endRows(sparkEnd),
+      "the two loops' end states diverged")
+  }
+
+  test("train selects the local loop up to BpeLocalWords rows and the Spark loop above") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    def table(n: Int) = spark.range(n)
+      .select(concat(lit("w"), col("id").cast("string")).as("word"), lit(1L).as("freq"))
+    val bound = MlQueries.BpeLocalWords
+    val at = MlQueries.atomized(table(bound))
+    val over = MlQueries.atomized(table(bound + 1))
+    assert(MlQueries.localWords(at).map(_.size).contains(bound))
+    assert(MlQueries.localWords(over).isEmpty)
+    val (atMerges, atEnd) = MlQueries.train(table(bound), 2)
+    val (overMerges, overEnd) = MlQueries.train(table(bound + 1), 2)
+    assert(atEnd.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(!overEnd.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    // each selection gives what the other loop gives on the same table
+    val overRows = over.collect().toSeq.map(r => (r.getString(0), r.getSeq[String](1), r.getLong(2)))
+    val (overLocal, overLocalEnd) = MlQueries.trainLocal(overRows, 2)
+    assert(overMerges == overLocal)
+    assert(endRows(overEnd) == overLocalEnd.sortBy(_._1))
+    assert(atMerges == MlQueries.trainSpark(at, 2)._1)
+  }
+
   test("output shape: contiguous ranks from 1, merged == left+right, memoized repeat is identical") {
     val a = MlQueries.t20BpeMerges(spark, sf).collect().toSeq
     assert(a.map(_.getInt(0)) == (1 to a.length))

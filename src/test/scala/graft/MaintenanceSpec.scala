@@ -11,8 +11,9 @@ import graft.queries.{MaintenanceQueries, MlQueries, VectorQueries}
   * the oracled x_maintenance_report; these specs pin the composition
   * mechanics the oracle can't see — instance stability on no-trip,
   * all-three refit + index redeploy on a forced trip, the concurrent pass
-  * equal to the serial per-artifact calls, and a failed leg surfacing
-  * only after the other legs finished. */
+  * equal to the serial per-artifact calls, one training per artifact on
+  * cold memos, the text legs seeing a corpus grown in place, and a failed
+  * leg surfacing only after the other legs finished. */
 class MaintenanceSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -120,6 +121,73 @@ class MaintenanceSpec extends AnyFunSuite {
       assert(got.nonEmpty && got == cells(idx),
         "the concurrent pass reassigned the index differently")
     } finally Seq(conc, serial).foreach(VectorQueries.evictTrained)
+  }
+
+  /** Spark jobs started while `body` runs, counted once the listener bus
+    * has gone quiet. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var last = -1
+      while (n.get() != last) { last = n.get(); Thread.sleep(1500) }
+      last
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("maintainAll on cold memos: a fully tripped pass trains each artifact once, as many jobs as a no-trip pass") {
+    val (quiet, tripped) = (fixtureCopy("quiet"), fixtureCopy("tripped"))
+    // an unassigned index: building a cell index would train the quantizer
+    def index(d: String) = spark.read.parquet(s"$d/embeddings.parquet")
+    try {
+      var out: Maintenance.MaintenanceOutcome = null
+      val quietJobs = jobsOf(Maintenance.maintainAll(spark, quiet, index(quiet)))
+      val trippedJobs = jobsOf {
+        out = Maintenance.maintainAll(spark, tripped, index(tripped),
+          maxHotCells = -1L, fertilityCeilingMicro = -1L,
+          agreementFloorMicro = Long.MaxValue)
+      }
+      assert(out.quantizer.retrained && out.tokenizer.retrained &&
+        out.classifier.retrained, out.toString)
+      assert(quietJobs > 0 && trippedJobs == quietJobs,
+        s"tripped pass ran $trippedJobs jobs, no-trip pass $quietJobs")
+      // the kept artifacts are the ones a retrain would produce
+      assert(VectorQueries.quantizerRows(spark, tripped) ==
+        VectorQueries.quantizerRows(spark, quiet))
+      assert(MlQueries.learnedMerges(spark, tripped) ==
+        MlQueries.learnedMerges(spark, quiet))
+    } finally Seq(quiet, tripped).foreach(VectorQueries.evictTrained(_))
+  }
+
+  test("text legs over a corpus grown in place measure and retrain on the grown corpus") {
+    import org.apache.spark.sql.functions.col
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("graft-maint-grown").toString
+    docs.filter(col("doc_id") % 2 === 0).write.parquet(s"$dir/documents.parquet")
+    val before = MlQueries.xTokenizerReport(spark, dir).collect()(0)
+    docs.filter(col("doc_id") % 2 === 1)
+      .write.mode("append").parquet(s"$dir/documents.parquet")
+    val tr = MlQueries.retrainTokenizerIfDrifted(spark, dir, fertilityCeilingMicro = -1L)
+    val cr = MlQueries.retrainClassifierIfDrifted(spark, dir,
+      agreementFloorMicro = Long.MaxValue)
+    assert(tr.retrained && cr.retrained)
+    // the reference: a fresh dir holding the grown corpus from the start
+    val fresh = fixtureCopy("grown-ref")
+    val want = MlQueries.xTokenizerReport(spark, fresh).collect()(0)
+    val got = MlQueries.xTokenizerReport(spark, dir).collect()(0)
+    assert(before.getAs[Long]("n_docs") < want.getAs[Long]("n_docs"))
+    assert(got == want, s"report after the pass $got, on the grown corpus $want")
+    assert(MlQueries.learnedMerges(spark, dir) == MlQueries.learnedMerges(spark, fresh),
+      "the tokenizer retrained on the corpus as it was")
+    assert(MlQueries.t19QualityClassifier(spark, dir).count() ==
+      MlQueries.t19QualityClassifier(spark, fresh).count())
+    def classified(d: String) = MlQueries.xClassifierReport(spark, d).collect()(0)
+    assert(classified(dir).getAs[Long]("n_docs") == classified(fresh).getAs[Long]("n_docs"))
   }
 
   test("maintainAll: a failed leg reaches the caller only after the other legs finished") {
