@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR and prints ONE compact JSON line, LAST, to stdout.
@@ -54,17 +53,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // JIT/codegen warmup so the first measured query doesn't absorb
     // session-startup cost (touches no benchmark data).
     spark.range(0, 1000000).selectExpr("sum(id)").collect()
@@ -328,7 +318,7 @@ object Bench {
         //     scaling run keeps proportions.
         //   RocksDB changelog checkpointing: full-snapshot-per-commit →
         //     changelog replay, −0.3-0.5 s/rep. Semantics identical.
-        val streamParts = math.min(cpus.toInt, 8).toString
+        val streamParts = math.min(LocalSession.cpus.toInt, 8).toString
         val changelogKey =
           "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
         val prevChangelog = spark.conf.getOption(changelogKey)

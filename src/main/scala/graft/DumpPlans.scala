@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for declared queries to files — the
   * optimization-round evidence trail (plans/r18/<query>_<tag>.txt). The
   * judge cannot run Spark; these files are how plan-shape claims in
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.DumpPlans <outDir> <tag> [name1,name2,...]
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 32 — same session shape as Bench).
+  *      SPARK_GRAFT_CPUS (default 4: the [[LocalSession]] Bench runs on).
   *
   * Plans are the pre-execution AQE plans (isFinalPlan=false), the same
   * thing `df.explain("formatted")` prints before an action: join
@@ -24,16 +22,7 @@ object DumpPlans {
     val tag = args.lift(1).getOrElse("before")
     val only = args.lift(2).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val sel = SparkEntry.queries.filter { case (k, _) => only.forall(_(k)) }
     only.foreach { o =>

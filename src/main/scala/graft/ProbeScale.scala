@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Blocklist-at-scale probe measurement (r15 verdict stretch task 7).
@@ -24,16 +23,7 @@ object ProbeScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("target/sf1")
     val nBig = args.lift(1).map(_.toLong).getOrElse(1000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     // arrivals at corpus scale: every doc with its content fingerprint —
     // the probe side the ingest gates and export excludes actually run

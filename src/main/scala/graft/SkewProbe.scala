@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skewed-fixture SCALING measurement (r16 verdict stretch task 7 — the
@@ -44,16 +44,7 @@ object SkewProbe {
   def main(args: Array[String]): Unit = {
     val uniformDir = args.headOption.getOrElse("target/sf1")
     val skewDir = args.lift(1).getOrElse("target/sf1skew")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
 
     def timeMedian(reps: Int)(body: => Unit): Double =
       median((1 to reps).map { _ =>

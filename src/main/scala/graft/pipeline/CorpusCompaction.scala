@@ -111,9 +111,10 @@ object CorpusCompaction {
       .withColumn("rn", row_number().over(wFp))
       .filter(col("rn") === 1).drop("rn"))
 
-    // tier 2: corpus exact (the dedupAgainstCorpus probe, fp pre-computed)
-    val pastExact = batchUnique
-      .join(corpusFps.select(col("fp")), Seq("fp"), "left_anti")
+    // tier 2: corpus exact (the dedupAgainstCorpus probe, fp pre-computed);
+    // pinned so the audit and tier 3 share one probe of the fp table
+    val pastExact = pinned(batchUnique
+      .join(corpusFps.select(col("fp")), Seq("fp"), "left_anti"))
 
     // tier 3: corpus near-dup — the ingest gate itself, on the batch frame
     val pastNear = pinned(graft.streaming.EventStream
@@ -147,7 +148,7 @@ object CorpusCompaction {
       Seq(arrivals, batchUnique, pastExact, pastNear, survivors),
       Seq("batch_exact", "corpus_exact", "corpus_near", "batch_near"))
     catch { case e: Throwable => survivors.unpersist(blocking = false); throw e }
-    finally Seq(batchUnique, pastNear).foreach(_.unpersist(blocking = false))
+    finally Seq(batchUnique, pastExact, pastNear).foreach(_.unpersist(blocking = false))
 
     new Compacted(
       corpus,

@@ -66,8 +66,8 @@ object VectorCompaction {
     val pastCorpus = pinned(graft.streaming.EventStream
       .semanticGateAtIngest(arrivals, index, centroids))
 
-    // survivors' own artifacts (cell + norm), computed once per row;
-    // withCellAssigned dispatches expression-vs-probe on K
+    // survivors' own artifacts (cell + norm), computed once per row by
+    // the gate's own nearest-centroid rule
     val assigned = VectorQueries
       .withCellAssigned(pastCorpus, "embedding", "cell", centroids)
       .withColumn("nrm", VectorQueries.norm(col("embedding")))

@@ -586,9 +586,7 @@ object ExportQueries {
   private def suppressionRootFor(dir: String): String =
     java.nio.file.Paths.get(
       sys.props.getOrElse("user.dir", "."), "target", "suppression_store",
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map(b => f"$b%02x").mkString +
-        "-" + ProcessHandle.current().pid())
+      s"${graft.plans.Snapshot.md5Hex(dir)}-${ProcessHandle.current().pid()}")
       .toString
 
   /** pid-keyed roots must not leak: every JVM that ran the lifecycle

@@ -252,13 +252,17 @@ object TextQueries {
         explode(transform(sequence(lit(0), size(col("toks")) - 3),
           i => array_join(slice(col("toks"), i + 1, lit(3)), " "))).as("shingle"))
 
-  private val shinglesCte: String =
-    s"""toks AS (SELECT doc_id, $toksSql AS toks FROM corpus),
-       |shingles AS (
+  /** The oracle's toks and shingles CTEs over `docsCte`, names suffixed
+    * with `sfx`: the head of the MinHash chain [[bandChainCtes]] builds. */
+  private def shinglesCtes(docsCte: String, sfx: String): String =
+    s"""toks$sfx AS (SELECT doc_id, $toksSql AS toks FROM $docsCte),
+       |shingles$sfx AS (
        |  SELECT doc_id,
        |         unnest(list_transform(range(0, len(toks) - 2),
        |                i -> array_to_string(toks[i+1:i+3], ' '))) AS shingle
-       |  FROM toks WHERE len(toks) >= 3)""".stripMargin
+       |  FROM toks$sfx WHERE len(toks) >= 3)""".stripMargin
+
+  private val shinglesCte: String = shinglesCtes("corpus", "")
 
   /** Shared with MlQueries (t21's oracle recomputes the per-doc encode
     * aggregation over the same corpus/toks CTEs). */
@@ -337,42 +341,35 @@ object TextQueries {
   /** The full docs→toks→shingles→slices→sigs→bands chain as suffixed
     * CTEs over an arbitrary docs CTE — the generator behind oracles that
     * band a SECOND document set next to the corpus (x_compact_audit bands
-    * the arrival batch). Same constants as [[sigsCte]]/[[bandsCte]], so
-    * the twin chains cannot drift. */
-  private[queries] def bandChainCtes(docsCte: String, sfx: String): String = {
+    * the arrival batch). The corpus chain's [[shinglesCte]], [[sigsCte]]
+    * and [[bandsCte]] are its unsuffixed pieces, so the twin chains
+    * cannot drift. */
+  private[queries] def bandChainCtes(docsCte: String, sfx: String): String =
+    s"${shinglesCtes(docsCte, sfx)},\n${sigsCtes(sfx)},\n${bandsCtes(sfx)}"
+
+  private def sigsCtes(sfx: String): String = {
     val slices = (0 until 4).map(s =>
       s"CAST(('0x' || substr(md5(shingle), ${1 + 8 * s}, 8)) AS BIGINT) AS v$s")
       .mkString(", ")
     val aggs = (0 until NumHashes)
       .map(j => s"min((v${j % 4} * ${mixA(j)} + ${mixB(j)}) % $MixMod) AS h$j")
       .mkString(", ")
-    val bandRows = (0 until Bands).map { b =>
+    s"""slices$sfx AS (SELECT doc_id, $slices FROM shingles$sfx),
+       |sigs$sfx AS (SELECT doc_id, $aggs FROM slices$sfx GROUP BY doc_id)""".stripMargin
+  }
+
+  private[queries] val sigsCte: String = sigsCtes("")
+
+  private def bandsCtes(sfx: String): String = {
+    val rows = (0 until Bands).map { b =>
       val cat = (b * RowsPerBand until (b + 1) * RowsPerBand)
         .map(j => s"CAST(h$j AS VARCHAR)").mkString(" || '|' || ")
       s"SELECT doc_id, $b AS band, md5($cat) AS bkey FROM sigs$sfx"
     }.mkString("\n  UNION ALL\n  ")
-    s"""toks$sfx AS (SELECT doc_id, $toksSql AS toks FROM $docsCte),
-       |shingles$sfx AS (
-       |  SELECT doc_id,
-       |         unnest(list_transform(range(0, len(toks) - 2),
-       |                i -> array_to_string(toks[i+1:i+3], ' '))) AS shingle
-       |  FROM toks$sfx WHERE len(toks) >= 3),
-       |slices$sfx AS (SELECT doc_id, $slices FROM shingles$sfx),
-       |sigs$sfx AS (SELECT doc_id, $aggs FROM slices$sfx GROUP BY doc_id),
-       |bands$sfx AS (
-       |  $bandRows)""".stripMargin
+    s"bands$sfx AS (\n  $rows)"
   }
 
-  private[queries] val sigsCte: String = {
-    val slices = (0 until 4).map(s =>
-      s"CAST(('0x' || substr(md5(shingle), ${1 + 8 * s}, 8)) AS BIGINT) AS v$s")
-      .mkString(", ")
-    val aggs = (0 until NumHashes)
-      .map(j => s"min((v${j % 4} * ${mixA(j)} + ${mixB(j)}) % $MixMod) AS h$j")
-      .mkString(", ")
-    s"""slices AS (SELECT doc_id, $slices FROM shingles),
-       |sigs AS (SELECT doc_id, $aggs FROM slices GROUP BY doc_id)""".stripMargin
-  }
+  private[queries] val bandsCte: String = bandsCtes("")
 
   private def bandsFrom(sig: DataFrame): DataFrame = {
     val bandStructs = (0 until Bands).map { b =>
@@ -384,15 +381,6 @@ object TextQueries {
     }
     sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-  }
-
-  private[queries] val bandsCte: String = {
-    val rows = (0 until Bands).map { b =>
-      val cat = (b * RowsPerBand until (b + 1) * RowsPerBand)
-        .map(j => s"CAST(h$j AS VARCHAR)").mkString(" || '|' || ")
-      s"SELECT doc_id, $b AS band, md5($cat) AS bkey FROM sigs"
-    }.mkString("\n  UNION ALL\n  ")
-    s"bands AS (\n  $rows)"
   }
 
   /** LSH candidate pairs: equal band key in any band. Takes the

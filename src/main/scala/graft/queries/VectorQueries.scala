@@ -255,8 +255,11 @@ object VectorQueries {
   /** Production IVF sizing: K ≈ √N cells — per-query work is centroid
     * scoring (K·dims) plus the probed-cell scan (nprobe·N/K·dims), which
     * balance at K ~ √N, the standard IVF rule — clamped to [1, maxCells].
-    * maxCells bounds the broadcast quantizer state: K × dims doubles must
-    * stay comfortably broadcastable (65536 cells × 64 dims ≈ 32 MB). */
+    * maxCells bounds the quantizer state every assignment carries
+    * (65536 cells × 64 dims ≈ 32 MB of doubles): the k>1 probe broadcasts
+    * it, and [[nearestCell]] ships it with each task as one plan literal.
+    * No caller trains near the cap (every query pins [[IvfCells]]); one
+    * that did would want the k=1 centroids broadcast, not inlined. */
   private[graft] def ivfCellsFor(n: Long, maxCells: Int = 1 << 16): Int =
     math.min(maxCells.toLong,
       math.max(1L, math.round(math.sqrt(n.toDouble)))).toInt
@@ -317,9 +320,9 @@ object VectorQueries {
     * every distance rounded to 6 decimals BEFORE the argmax (cell-asc
     * tie-break) so both engines quantize identically. Each query then probes
     * only its own cell. Plan shape at 100 TB: centroids are tiny (K x dims)
-    * and broadcast; each Lloyd pass is one broadcast join + one groupBy
-    * shuffle over the corpus, the probe is a cell equi-join — no cross join,
-    * no corpus shuffle beyond the per-pass aggregation. */
+    * local rows; each Lloyd pass is one per-row [[nearestCell]] projection
+    * + one groupBy shuffle over the corpus, the probe is a cell equi-join —
+    * no cross join, no corpus shuffle beyond the per-pass aggregation. */
   def v4IvfAnn(spark: SparkSession, dir: String): DataFrame =
     ivfAnn(spark, dir, nprobe = 1)
 
@@ -345,64 +348,69 @@ object VectorQueries {
   private val quantizers =
     scala.collection.mutable.Map[(String, Int, Long), Seq[(Long, Seq[Double])]]()
 
-  /** k-nearest-centroid assignment (rounded-cosine rank, cell-asc ties);
-    * k=1 is the Lloyd/corpus assignment, k=nprobe the query probe set.
+  /** The one k=1 nearest-centroid rule: the cell of `e` among the local
+    * quantizer rows `cents`, as ONE per-row expression — no join, no
+    * window, no state, so the Lloyd trainer, every v-block assignment,
+    * the cell index, its reassignment, the compaction and the streaming
+    * gate all answer "which cell?" through this tree, and batch and
+    * stream agree bit for bit.
+    *
+    * Returns struct(ccos, negcell, cell); read `ccos` and `cell`.
+    * `array_max` over the centroids' (ccos, negcell) structs compares
+    * field by field, so the winner is the highest [[cosine6]] and, on a
+    * tie, the lowest cell (negcell = -cell) — the window rank's (ccos
+    * desc, cell asc) order, with Spark's NaN-is-greatest ordering in both.
     * Centroids stay rounded DOUBLES (a cast to float would lose the
-    * quantizer's 6-decimal precision); float_dot accepts mixed float/double
-    * sides since round 5, so the K-per-row centroid scoring runs the same
-    * codegen'd loop as v1/v3. */
-  private[graft] def assignCells(cent: DataFrame, src: DataFrame, k: Int): DataFrame = {
+    * quantizer's 6-decimal precision), and their norms are folded on the
+    * driver left to right, the order float_dot accumulates in, so every
+    * ccos equals the one the window path computes. The vector's own norm
+    * is bound once per row through a one-element `transform`: a plain
+    * `norm(e)` inside the centroid lambda would be re-evaluated for each
+    * centroid. A NULL embedding gets cell -1 and a null ccos.
+    *
+    * The centroids ride in the plan as one literal array, so the cost is
+    * K rounded cosines per row and the literal is shipped with each task:
+    * a few KB at the fixture's 8 cells. */
+  private[graft] def nearestCell(e: Column, cents: Seq[(Long, Seq[Double])]): Column = {
+    // an empty quantizer (cells = 0 seeds none) would give every vector
+    // cell -1, where the k>1 window rank emits no rows
+    require(cents.nonEmpty, "IVF quantizer has no centroids")
+    // built from non-null literals, so `cell` stays non-nullable and no
+    // isnotnull(cell) filter re-evaluates the rule below a cell join
+    val cs = array(cents.map { case (cell, cv) =>
+      struct(lit(cell).as("cell"), typedLit(cv).as("cvec"),
+        lit(math.sqrt(cv.foldLeft(0.0)((acc, x) => acc + x * x))).as("cn"))
+    }: _*)
+    val best = transform(when(e.isNotNull, array(norm(e))), n =>
+      array_max(transform(cs, c => struct(
+        cosine6(e, n, c("cvec"), c("cn")).as("ccos"),
+        (-c("cell")).as("negcell"), c("cell").as("cell")))))
+    coalesce(element_at(best, 1), struct(lit(null).cast("double").as("ccos"),
+      lit(1L).as("negcell"), lit(-1L).as("cell")))
+  }
+
+  /** k-nearest-centroid assignment of `src`'s (vec_id, embedding) rows,
+    * with the rounded cosine to the assigned centroid as `ccos` (v11's
+    * prototypicality IS this value; every other caller projects it away).
+    * k=1 is [[nearestCell]], one projection. k=nprobe, the query probe
+    * set, ranks the K (vector, centroid) pairs of a broadcast join in a
+    * window (ccos desc, cell asc) — the same order, and VectorSpec's
+    * reference for the k=1 rule. */
+  private[graft] def assignCells(cents: Seq[(Long, Seq[Double])], src: DataFrame,
+      k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // norms are per-vector / per-centroid — compute them once before the
-    // K-way pairing, not once per (vector, cell) pair
-    val cn = cent.withColumn("cn", norm(col("cvec")))
-    if (k == 1) {
-      // r19 optimization round (VERDICT r18 task 3, taken to its
-      // first-principles end): the r18 aggregate argmax still EXPLODED
-      // the corpus K-ways through the centroid broadcast join and paid a
-      // SortAggregate pair per assignment (max over a struct buffer can
-      // never hash-aggregate — struct buffers are not UnsafeRow-mutable —
-      // and the array payload made each sorted row embedding-wide) plus
-      // an exchange of one embedding-carrying row per vector. But the
-      // quantizer is MODEL STATE (K x dims doubles, local rows by
-      // construction at every call site), so the argmax is computable
-      // per row with no join surface at all: the centroids ride in as
-      // ONE collected array row (a 1-row broadcast, the engine's
-      // documented BNLJ-cross pattern), and each vector takes
-      // array_max over transform(cents, ...) — struct comparison is
-      // field-lexicographic, so max of (ccos, -cell) reproduces the
-      // (ccos desc, cell asc) tie-break exactly as r18's aggregate did,
-      // and (ccos, cell) is unique per vector by construction. The
-      // cosine arithmetic is the IDENTICAL expression tree (same
-      // float_dot — whose dims-loop runs natively inside its own eval —
-      // same norm, same round-to-6), so every ccos is bit-identical.
-      // Plan: scan → project — ZERO exchanges, no sort, no per-vector
-      // shuffle row at ANY scale; assignment cost is now purely the
-      // K x dims dot products, which no shape can avoid. Equivalence:
-      // VectorSpec checks this argmax against the rank-1 rows of the
-      // window branch below on every vector, for the seed and the
-      // trained centroids; the oracles hash-pin every consumer. The r18
-      // aggregate's numbers are in OPTIMIZATION_r18.md §5.
-      val centArr = cn.agg(collect_list(
-        struct(col("cell"), col("cvec"), col("cn"))).as("cents"))
-      src.select(col("vec_id"), col("embedding"))
-        .withColumn("nrm", norm(col("embedding")))
-        .join(broadcast(centArr))
-        .select(col("vec_id"), col("embedding"),
-          array_max(transform(col("cents"), c =>
-            struct(
-              cosine6(col("embedding"), col("nrm"), c("cvec"), c("cn")).as("ccos"),
-              (-c("cell")).as("negcell")))).as("m"))
-        .select(col("vec_id"), col("embedding"),
-          (-col("m.negcell")).as("cell"), col("m.ccos").as("ccos"))
-    } else {
-      // ccos (the rounded cosine to the assigned centroid) rides along:
-      // v11's prototypicality IS this value, and keeping it costs
-      // nothing — every other caller projects it away explicitly
+    val vecs = src.select(col("vec_id"), col("embedding"))
+    if (k == 1)
+      vecs.withColumn("m", nearestCell(col("embedding"), cents))
+        .select(col("vec_id"), col("embedding"), col("m.cell"), col("m.ccos"))
+    else {
+      import src.sparkSession.implicits._
+      // norms are per-vector / per-centroid — compute them once before the
+      // K-way pairing, not once per (vector, cell) pair
+      val cn = cents.toDF("cell", "cvec").withColumn("cn", norm(col("cvec")))
       val w = Window.partitionBy(col("vec_id"))
         .orderBy(col("ccos").desc, col("cell").asc)
-      src.select(col("vec_id"), col("embedding"))
-        .withColumn("nrm", norm(col("embedding")))
+      vecs.withColumn("nrm", norm(col("embedding")))
         .join(broadcast(cn))
         .select(col("vec_id"), col("embedding"), col("cell"),
           cosine6(col("embedding"), col("nrm"), col("cvec"), col("cn")).as("ccos"))
@@ -411,40 +419,24 @@ object VectorQueries {
     }
   }
 
-  /** Memoized IVF quantizer training — Lloyd: seeds -> (assign -> mean) x
-    * LloydIters; means rounded to 6 so the quantizer state is cross-engine
-    * identical after every pass. Each pass's centroid frame is K x dims —
-    * quantizer state, not data — so it is collected to a local relation
-    * between passes: without the cut, every assign() embeds the full
-    * prior-iteration lineage and the corpus gets re-scored once per
-    * downstream action per iteration (the round-2 v4 regression). This is
-    * the Spark analogue of broadcasting model state each iteration; the
-    * corpus itself never leaves the executors. */
-  private[graft] def trainedCentroids(spark: SparkSession, dir: String,
-      cells: Int = IvfCells): DataFrame = {
-    import spark.implicits._
-    quantizerRows(spark, dir, cells).toDF("cell", "cvec")
-  }
-
-  /** The memoized quantizer's local rows — the (K x dims) model state
-    * itself, for consumers that need it driver-side (the streaming gate's
-    * per-row assignment expression). */
+  /** The memoized IVF quantizer's local rows (cell, cvec) — the (K x dims)
+    * model state every assignment takes. Lloyd: seeds -> (assign -> mean)
+    * x LloydIters; means rounded to 6 so the quantizer state is
+    * cross-engine identical after every pass. Each pass's centroids are
+    * collected to local rows before the next assignment: without the cut,
+    * every assignment embeds the full prior-iteration lineage and the
+    * corpus gets re-scored once per downstream action per iteration (the
+    * round-2 v4 regression). The corpus itself never leaves the
+    * executors. */
   private[graft] def quantizerRows(spark: SparkSession, dir: String,
       cells: Int = IvfCells,
       sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] =
     quantizers.synchronized(quantizers.get((dir, cells, sampleTarget))).getOrElse {
       import spark.implicits._
       val e = emb(spark, dir)
-      // every centroid frame assignCells sees passes through here (the
-      // seeds, each Lloyd pass, and so the memoized rows trainedCentroids
-      // serves): on an empty frame the k=1 argmax would emit every vector
-      // with a null cell, where the k>1 window rank emits no rows
-      def toLocal(c: DataFrame): DataFrame = {
-        val rows = c.select(col("cell").cast("bigint"), col("cvec"))
+      def toLocal(c: DataFrame): Seq[(Long, Seq[Double])] =
+        c.select(col("cell").cast("bigint"), col("cvec"))
           .as[(Long, Seq[Double])].collect().toSeq
-        require(rows.nonEmpty, "IVF quantizer has no centroids")
-        rows.toDF("cell", "cvec")
-      }
       val seeds = e.filter(col("vec_id") < cells)
         .select(col("vec_id").as("cell"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cvec"))
@@ -452,154 +444,18 @@ object VectorQueries {
       // fits the budget); the final corpus assignment (assignCells at the
       // consumers) still covers every vector
       val trainSet = trainSampleOf(e, e.count(), sampleTarget)
-      val trained = (1 to LloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
+      val rows = (1 to LloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
         toLocal(lloydMeans(assignCells(c, trainSet, 1), "embedding", "cell"))
       }
-      val rows = trained.as[(Long, Seq[Double])].collect().toSeq
       quantizers.synchronized(quantizers.getOrElseUpdate((dir, cells, sampleTarget), rows))
     }
 
-  /** Per-row cell assignment as a pure Column expression over the LOCAL
-    * quantizer rows — the streaming-safe form of [[assignCells]] (no
-    * window, no shuffle, no state): each centroid contributes one rounded
-    * cosine term, and a cell-ascending strict-greater fold reproduces the
-    * batch argmax (ccos desc, cell asc ties) exactly. The centroid norms
-    * are driver-computed with the same left-to-right double fold the
-    * codegen'd float_dot uses, so every value is bit-identical to the
-    * batch assignment. Expression size is K terms: fine through hundreds
-    * of cells; at production K (up to 2^16) the same arithmetic moves to
-    * a mapPartitions probe over a broadcast centroid matrix. */
-  private[graft] def cellAssignCol(e: Column,
-      cents: Seq[(Long, Seq[Double])]): Column = {
-    // fail at plan time, not execution: an empty centroid seq builds
-    // sequence(1, 0) — the DESCENDING sequence [1, 0] — and element_at
-    // then dies mid-job with an obscure "array indices start at 1"
-    // (r11 advice)
-    require(cents.nonEmpty, "cellAssignCol needs at least one centroid")
-    // ONE aggregate fold over array literals, not a K-way chain of
-    // struct-whens: the chained form inlined each centroid's 64 doubles
-    // into its own expression subtree and the generated code took seconds
-    // to Janino-compile per plan (measured: a 45-row gate probe cost
-    // ~2.7 s, nearly all compilation). Arithmetic is unchanged —
-    // same dot, same norm product, same round-6, and the cell-ascending
-    // strict-greater fold keeps the batch argmax's (ccos desc, cell asc)
-    // tie-break bit for bit.
-    val n = norm(e)
-    val sorted = cents.sortBy(_._1)
-    val cellsLit = typedLit(sorted.map(_._1))
-    val vecsLit = typedLit(sorted.map(_._2))
-    val normsLit = typedLit(sorted.map { case (_, cv) =>
-      math.sqrt(cv.foldLeft(0.0)((acc, x) => acc + x * x)) })
-    aggregate(sequence(lit(1), lit(sorted.size)),
-      struct(lit(-2.0).as("s"), lit(-1L).as("cell")),
-      (acc, i) => {
-        val sc = cosine6(e, n, element_at(vecsLit, i.cast("int")),
-          element_at(normsLit, i.cast("int")))
-        when(sc > acc.getField("s"),
-          struct(sc.as("s"), element_at(cellsLit, i.cast("int")).as("cell")))
-          .otherwise(acc)
-      }).getField("cell")
-  }
-
-  /** Expression-form cap for [[withCellAssigned]]: the K-term aggregate
-    * fold stays comfortably inside Janino through hundreds of cells
-    * (measured: one fold, not a when-chain), but a production quantizer
-    * (K up to 2^16, ivfCellsFor's cap) would inline 2^16 centroid
-    * literals into one expression tree — unplannable. Beyond this K the
-    * same arithmetic moves to the mapPartitions probe. */
-  private[graft] val CellAssignExprMaxK = 256
-
-  /** Per-row cell assignment at PRODUCTION K — the mapPartitions probe
-    * over a broadcast centroid matrix that [[cellAssignCol]]'s scaladoc
-    * promised (r12 verdict task 3). Same arithmetic, replicated
-    * bit-for-bit JVM-side:
-    *   - dot products double-accumulate left-to-right over min-length,
-    *     widening float→double per element (FloatDotProduct's loop);
-    *   - centroid norms come from the same driver-side fold;
-    *   - cosines round to 6 decimals via Spark's Round semantics for
-    *     doubles (NaN/Inf pass through, else BigDecimal HALF_UP);
-    *   - the argmax scans cells ASCENDING with a strict-greater update —
-    *     (ccos desc, cell asc) ties, exactly the fold's accumulator rule —
-    *     and compares with Spark SQL's NaN-is-greatest ordering;
-    *   - a NULL embedding assigns cell -1, the fold's accumulator seed.
-    * One broadcast of K×dims doubles per plan, one tight loop per row: no
-    * shuffle, no state — streaming-safe like the expression form (map-like
-    * ops are allowed on streaming Datasets), so the ingest gate can ride
-    * it unchanged. VectorSpec pins bit-identity against the expression
-    * form on the fixture corpus and at a forced-probe K. */
-  private[graft] def cellAssignProbe(df: DataFrame, embCol: String,
-      outCol: String, cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    require(cents.nonEmpty, "cellAssignProbe needs at least one centroid")
-    val spark = df.sparkSession
-    val sorted = cents.sortBy(_._1)
-    val cellIds = sorted.map(_._1).toArray
-    val mat = sorted.map(_._2.toArray).toArray
-    val norms = mat.map(v => math.sqrt(v.foldLeft(0.0)((a, x) => a + x * x)))
-    val bc = spark.sparkContext.broadcast((cellIds, mat, norms))
-    val embIdx = df.schema.fieldIndex(embCol)
-    val elemIsFloat = df.schema(embCol).dataType match {
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType, _) => true
-      case org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.DoubleType, _) => false
-      case t => throw new IllegalArgumentException(
-        s"$embCol must be array<float|double>, got ${t.catalogString}")
-    }
-    val outSchema = df.schema.add(outCol,
-      org.apache.spark.sql.types.LongType, nullable = false)
-    // Spark's Round on double: NaN/Inf unchanged, else BigDecimal HALF_UP
-    def round6(x: Double): Double =
-      if (x.isNaN || x.isInfinite) x
-      else java.math.BigDecimal.valueOf(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-    // Spark SQL double ordering: NaN is greater than everything, NaN = NaN
-    def sqlGt(a: Double, b: Double): Boolean =
-      if (a.isNaN) !b.isNaN else if (b.isNaN) false else a > b
-    df.mapPartitions { it =>
-      val (ids, m, nrms) = bc.value
-      it.map { r =>
-        val cell =
-          if (r.isNullAt(embIdx)) -1L
-          else {
-            val e: Array[Double] =
-              if (elemIsFloat) r.getSeq[Float](embIdx).iterator.map(_.toDouble).toArray
-              else r.getSeq[Double](embIdx).toArray
-            var selfDot = 0.0
-            var i = 0
-            while (i < e.length) { selfDot += e(i) * e(i); i += 1 }
-            val n = math.sqrt(selfDot)
-            var bestS = -2.0
-            var bestCell = -1L
-            var c = 0
-            while (c < ids.length) {
-              val cv = m(c)
-              val len = math.min(e.length, cv.length)
-              var d = 0.0
-              var j = 0
-              while (j < len) { d += e(j) * cv(j); j += 1 }
-              val sc = round6(d / (n * nrms(c)))
-              if (sqlGt(sc, bestS)) { bestS = sc; bestCell = ids(c) }
-              c += 1
-            }
-            bestCell
-          }
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ cell)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-  }
-
-  /** Cell assignment behind ONE signature, dispatching on K (r12 verdict
-    * task 3): the codegen'd expression fold through
-    * [[CellAssignExprMaxK]] cells — zero serialization boundary, stays
-    * inside whole-stage codegen — and the broadcast-matrix
-    * [[cellAssignProbe]] beyond, where the literal tree would not compile
-    * reasonably. Both forms are bit-identical (VectorSpec); callers never
-    * choose. */
+  /** `df` with `outCol` = the [[nearestCell]] of `embCol`: one projection,
+    * no shuffle, no state — streaming-legal, so the ingest gate, the cell
+    * index and its reassignment all ride it. */
   private[graft] def withCellAssigned(df: DataFrame, embCol: String,
       outCol: String, cents: Seq[(Long, Seq[Double])]): DataFrame =
-    if (cents.size <= CellAssignExprMaxK)
-      df.withColumn(outCol, cellAssignCol(col(embCol), cents))
-    else cellAssignProbe(df, embCol, outCol, cents)
+    df.withColumn(outCol, nearestCell(col(embCol), cents)("cell"))
 
   /** Static side of the streaming semantic gate (and any cell probe): the
     * corpus assigned to its quantizer cells with per-vector norms — the
@@ -607,14 +463,12 @@ object VectorQueries {
     * At 100 TB this is a bucketed parquet table keyed by cell, re-read
     * per micro-batch. */
   def corpusCellIndex(spark: SparkSession, dir: String): DataFrame =
-    // per-row assignment, NOT the assignCells window: the k=1 argmax
-    // needs no join and no shuffle, so the index derives in one
-    // scan+project (measured at sf0.1: the window form cost a 400k-row
-    // sort-shuffle per evaluation; a columnar-cache memo was even slower
-    // — per-probe array access dominates). withCellAssigned dispatches
-    // expression-vs-probe on K; both are spec-pinned bit-identical to
-    // the window argmax. At 100 TB this frame is a bucketed parquet
-    // TABLE written once and read per batch.
+    // per-row assignment, NOT the assignCells window: the k=1 rule needs
+    // no join and no shuffle, so the index derives in one scan+project
+    // (measured at sf0.1: the window form cost a 400k-row sort-shuffle
+    // per evaluation; a columnar-cache memo was even slower — per-probe
+    // array access dominates). At 100 TB this frame is a bucketed
+    // parquet TABLE written once and read per batch.
     withCellAssigned(emb(spark, dir).select(col("vec_id"), col("embedding")),
       "embedding", "cell", quantizerRows(spark, dir))
       .withColumn("nrm", norm(col("embedding")))
@@ -647,9 +501,8 @@ object VectorQueries {
     * centroids; this recomputes `cell` for every indexed row under the
     * fresh ones — per-row norms and every other column ride along
     * unchanged (norms are quantizer-independent). One scan + project via
-    * [[withCellAssigned]] (expression or broadcast-matrix probe by K), no
-    * shuffle; at 100 TB the rewrite lands as the new bucketed table and
-    * readers swap over atomically. */
+    * [[withCellAssigned]], no shuffle; at 100 TB the rewrite lands as the
+    * new bucketed table and readers swap over atomically. */
   def reassignIndex(index: DataFrame,
       cents: Seq[(Long, Seq[Double])]): DataFrame =
     withCellAssigned(index.drop("cell"), "embedding", "cell", cents)
@@ -715,7 +568,7 @@ object VectorQueries {
 
   private def ivfAnn(spark: SparkSession, dir: String, nprobe: Int): DataFrame = {
     val e = emb(spark, dir)
-    val cent = trainedCentroids(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
+    val cent = quantizerRows(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
     // cached: the probe reuses the corpus assignment (and per-vector norm);
     // the tiny query side gets its own k=nprobe assignment
     val assigned = registered(
@@ -748,7 +601,7 @@ object VectorQueries {
     * shrinks vs v6. */
   def v13FilteredAnn(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val cent = trainedCentroids(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
+    val cent = quantizerRows(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
     val labels = e.select(col("vec_id"), col("label"))
     val assigned = assignCells(cent, e, 1)
       .join(labels, "vec_id")
@@ -891,7 +744,7 @@ object VectorQueries {
     * ablations. */
   def v15IvfPqAnn(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    val cent = trainedCentroids(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
+    val cent = quantizerRows(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
     val corpCells = assignCells(cent, e, 1)
       .select(col("vec_id").as("vid"), col("cell"))
     val qCells = assignCells(cent, e.filter(col("vec_id") < 3), IvfProbes)
@@ -939,14 +792,14 @@ object VectorQueries {
     * of the pair.
     *
     * Plan shape at 100 TB: quantizer is memoized tiny state (train once,
-    * probe many); assignment is one broadcast join + window; the quadratic
+    * probe many); assignment is one per-row projection; the quadratic
     * surface is bounded WITHIN cells — exactly SemDeDup's published cost
     * model, dialed by the cell count (IvfCells here; ~sqrt(N) cells in
     * production so cells stay ~constant-size). The assigned frame is
     * cached so the self-join's two sides share one computation. Emits
     * (vec_id, cell, is_kept) for the whole corpus. */
   def v8SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    val cent = trainedCentroids(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
+    val cent = quantizerRows(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
     val assigned = registered(
       assignCells(cent, augEmb(spark, dir), 1)
         .withColumn("nrm", norm(col("embedding"))))
@@ -978,7 +831,7 @@ object VectorQueries {
     * join bounded by cell equality. No train-side self-surface at all, so
     * this is strictly cheaper than v8 on the same corpus. */
   def v14SemanticDecontam(spark: SparkSession, dir: String): DataFrame = {
-    val cent = trainedCentroids(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
+    val cent = quantizerRows(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
     val all = augEmb(spark, dir)
     val ta = assignCells(cent, all.filter(col("vec_id") >= DecontamBenchIds), 1)
       .withColumn("nrm", norm(col("embedding")))
@@ -1047,7 +900,8 @@ object VectorQueries {
     * Plan shape at 100 TB: one assignment pass + a K-row aggregate; the
     * report is quantizer-sized, never corpus-sized. */
   def v16CellBalance(spark: SparkSession, dir: String): DataFrame = {
-    val cents = trainedCentroids(spark, dir)
+    import spark.implicits._
+    val cents = quantizerRows(spark, dir)
     val assigned = assignCells(cents, emb(spark, dir), 1)
       .select(col("vec_id"), col("cell"))
     val tot = assigned.agg(count(lit(1)).cast("bigint").as("n_total"))
@@ -1058,7 +912,7 @@ object VectorQueries {
     // the full fair share, not silently vanish from the output.
     val counts = assigned.groupBy(col("cell"))
       .agg(count(lit(1)).cast("bigint").as("n_vecs"))
-    cents.select(col("cell")).join(counts, Seq("cell"), "left")
+    cents.map(_._1).toDF("cell").join(counts, Seq("cell"), "left")
       .select(col("cell"), coalesce(col("n_vecs"), lit(0L)).as("n_vecs"))
       .crossJoin(broadcast(tot))
       .select(col("cell"), col("n_vecs"),
@@ -1314,8 +1168,8 @@ object VectorQueries {
     * the cell by assigned-centroid cosine (desc, vec_id ties), and mark
     * the top ceil(n_cell/4) pruned.
     *
-    * Plan shape at 100 TB: quantizer broadcast (K x dims), assignment is
-    * the one stateless broadcast join + per-vector argmax, then ONE
+    * Plan shape at 100 TB: assignment is the one stateless per-row
+    * [[nearestCell]] projection over the (K x dims) quantizer, then ONE
     * cell-keyed window carries rank and cell size together — a single
     * shuffle keyed by cell, no pairwise surface at all (this is the whole
     * point vs v8: pruning by centroid distance costs O(N), not O(N²/K)).
@@ -1323,7 +1177,7 @@ object VectorQueries {
     * partitions stay bounded. */
   def v11PrototypePrune(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cent = trainedCentroids(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
+    val cent = quantizerRows(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
     val a = assignCells(cent, emb(spark, dir), 1)
       .select(col("vec_id"), col("cell"), col("ccos"))
     val wProto = Window.partitionBy(col("cell"))
@@ -1353,7 +1207,7 @@ object VectorQueries {
     * is uniform within every cell). */
   def v12BalancedSample(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cent = trainedCentroids(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
+    val cent = quantizerRows(spark, dir, cells = IvfCells) // fixture pin: oracle SQL is generated from the same constant
     val a = assignCells(cent, emb(spark, dir), 1)
       .select(col("vec_id"), col("cell"))
     val budget = a.agg((count(lit(1)) cast "bigint").as("n"))

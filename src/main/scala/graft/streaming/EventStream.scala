@@ -333,22 +333,21 @@ object EventStream {
     * drop-the-greater-id pair rule.
     *
     * The arrival's cell is computed PER ROW by [[graft.queries
-    * .VectorQueries.withCellAssigned]] — the batch argmax, dispatched on
-    * K between the pure-expression fold (≤ hundreds of cells) and the
-    * broadcast-centroid-matrix mapPartitions probe (production K up to
-    * 2^16); both bit-identical to the batch assignment, both map-like
-    * and therefore streaming-legal — so the stream side needs no window,
-    * no aggregation, no state store. The kill itself is ONE stream-static
-    * LEFT ANTI join whose condition carries both the cell equality and
-    * the rounded-cosine bar: stateless, and the static index is re-read
-    * per micro-batch so a corpus compaction is picked up live.
+    * .VectorQueries.withCellAssigned]] — the one k=1 nearest-centroid
+    * rule ([[graft.queries.VectorQueries.nearestCell]]) every batch
+    * assignment also runs, so stream and batch assign bit-identically; it
+    * is one projection, streaming-legal — so the stream side needs no
+    * window, no aggregation, no state store. The kill itself is ONE
+    * stream-static LEFT ANTI join whose condition carries both the cell
+    * equality and the rounded-cosine bar: stateless, and the static index
+    * is re-read per micro-batch so a corpus compaction is picked up live.
     *
     * Scale notes: the static side is [[graft.queries.VectorQueries
     * .corpusCellIndex]] — at 100 TB a bucketed parquet table keyed by
     * cell, so the anti-join prunes to the arrival's cell before any
     * cosine is computed (~N/K candidates per arrival, SemDeDup's published
     * cost model); the quantizer stays bounded model state (<= 2^16 cells
-    * by the ivfCellsFor cap). */
+    * by the ivfCellsFor cap), carried in the plan as one literal. */
   def semanticGateAtIngest(vecs: DataFrame, corpusIndex: DataFrame,
       centroids: Seq[(Long, Seq[Double])]): DataFrame = {
     import graft.queries.VectorQueries

@@ -316,8 +316,11 @@ class PlanSpec extends AnyFunSuite {
 
   test("v8 semantic dedup: centroid scoring broadcasts, within-cell pairing never cartesians") {
     val p = planOf(VectorQueries.queries("v8_semantic_dedup")(spark, sf))
+    // centroid scoring is the per-row nearestCell projection over the
+    // tiny quantizer state: no centroid join at all
+    assert(!p.contains("BroadcastNestedLoopJoin"), s"centroid scoring joins:\n$p")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"),
-      s"tiny quantizer state not broadcast:\n$p")
+      s"no small side broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), p)
     // the assigned frame is cached so the pair join's two sides share one
     // assignment computation instead of re-running the window per side
@@ -624,23 +627,37 @@ class PlanSpec extends AnyFunSuite {
 
   test("v11/v12: broadcast quantizer assignment, no pairwise surface, window shuffles only") {
     // the whole point of centroid-distance pruning/sampling vs v8's
-    // within-cell pairs: O(N) plans — the only joins are the broadcast
-    // centroid pairing (and v12's 1-row budget), never a corpus self-join
+    // within-cell pairs: O(N) plans. The quantizer rides in the
+    // assignment's projection (nearestCell), so v11 plans with no join at
+    // all and v12's only join is its broadcast 1-row budget — never a
+    // corpus self-join
     for (name <- Seq("v11_prototype_prune", "v12_balanced_sample")) {
       val p = planOf(graft.queries.VectorQueries.queries(name)(TestSpark.spark, sf))
-      assert(p.contains("BroadcastExchange"),
-        s"$name: quantizer/budget not broadcast:\n$p")
+      if (name == "v11_prototype_prune")
+        assert(!p.contains("Join"), s"$name: a join crept into the assignment:\n$p")
+      else
+        assert(p.contains("BroadcastExchange"), s"$name: budget not broadcast:\n$p")
       assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
         s"$name: a corpus-sized join crept in:\n$p")
       assert(!p.contains("CartesianProduct"), p)
     }
   }
 
+  test("v16_cell_balance: the k=1 assignment plans with no join and no exchange") {
+    // the quantizer is local rows, so assigning every vector its nearest
+    // cell needs no join surface at all: one projection over the scan
+    val p = planOf(VectorQueries.assignCells(VectorQueries.quantizerRows(spark, sf),
+      graft.plans.Tables.table(spark, sf, "embeddings"), 1).select("vec_id", "cell"))
+    assert(!p.contains("Join"), s"assignment joins:\n$p")
+    assert(!p.contains("Exchange"), s"assignment broadcasts or shuffles:\n$p")
+  }
+
   test("v13/v14: probe/benchmark sides broadcast, no cartesian surface") {
     // v13's label filter and v14's benchmark slice must stay on the small
     // (broadcast) side of their joins — the corpus side streams through.
-    // (BroadcastNestedLoopJoin IS expected: assignCells' K-way centroid
-    // pairing broadcasts the 8-row quantizer unconditioned by design.)
+    // (BroadcastNestedLoopJoin IS expected: the k=nprobe query
+    // assignment pairs the queries with the broadcast 8-row quantizer,
+    // unconditioned by design.)
     for (name <- Seq("v13_filtered_ann", "v14_semantic_decontam")) {
       val p = planOf(graft.queries.VectorQueries.queries(name)(TestSpark.spark, sf))
       assert(p.contains("BroadcastExchange"),

@@ -137,7 +137,7 @@ class ScaleSpec extends AnyFunSuite {
     val arrivals = spark.read.parquet(s"$sf/embeddings.parquet")
       .limit(50)
       .select((col("vec_id") + 9500000L).as("vec_id"),
-        VectorQueries.cellAssignCol(col("embedding"), cents).as("cell"))
+        VectorQueries.nearestCell(col("embedding"), cents)("cell").as("cell"))
     ScaleTechniques.writeBucketed(idx, "cell", 8, "cell_index_b")
     ScaleTechniques.writeBucketed(arrivals, "cell", 8, "cell_arrivals_b")
     try {

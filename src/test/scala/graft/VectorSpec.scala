@@ -238,74 +238,59 @@ class VectorSpec extends AnyFunSuite {
     assert(VectorQueries.ivfCellsFor(1000000, maxCells = 128) == 128)
     // K is a real parameter, not a constant: training with K=4 yields
     // exactly the 4 seeded cells (fixture queries pin K=8 for the oracle)
-    val c4 = VectorQueries.trainedCentroids(spark, sf, cells = 4)
-      .select("cell").collect().map(_.getLong(0)).sorted
-    assert(c4.sameElements(Array(0L, 1L, 2L, 3L)))
-    val c8 = VectorQueries.trainedCentroids(spark, sf)
-      .select("cell").distinct().count()
+    val c4 = VectorQueries.quantizerRows(spark, sf, cells = 4).map(_._1).sorted
+    assert(c4 == Seq(0L, 1L, 2L, 3L))
+    val c8 = VectorQueries.quantizerRows(spark, sf).map(_._1).distinct.size
     assert(c8 == 8, "default K must remain the fixture pin")
   }
 
-  test("cell assignment: mapPartitions probe is bit-identical to the expression fold at both K regimes") {
-    // r12 verdict task 3: the production-K probe behind withCellAssigned
-    // must reproduce the expression fold's argmax EXACTLY — same dots,
-    // same round-6, same (ccos desc, cell asc) ties — at the fixture K
-    // (where the dispatcher picks the expression) and at a K past
-    // CellAssignExprMaxK (where it must pick the probe).
+  test("nearestCell equals the window rank 1 at K=8 and K=300, NULL gets -1") {
+    // nearestCell is the only k=1 assignment: withCellAssigned and
+    // assignCells(.., 1) both build it. At the fixture's K=8 and at a
+    // synthetic K=300 it must pick the window path's rank-1 row for every
+    // vector — same cell, bit-identical ccos, (ccos desc, cell asc) ties.
+    import org.apache.spark.sql.expressions.Window
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select("vec_id", "embedding")
-
-    // regime 1: fixture K=8 — force the probe, compare corpus-wide
+    val byRank = Window.partitionBy(col("vec_id"))
+      .orderBy(col("ccos").desc, col("cell").asc)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("vec_id"), col("cell"), col("ccos"))
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "cell").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val cents8 = VectorQueries.quantizerRows(spark, sf)
-    val viaExpr = e.select(col("vec_id"),
-      VectorQueries.cellAssignCol(col("embedding"), cents8).as("cell"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaProbe = VectorQueries.cellAssignProbe(e, "embedding", "cell", cents8)
-      .select("vec_id", "cell")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaProbe == viaExpr, {
-      val diff = viaProbe.collect { case (k, v) if viaExpr(k) != v => (k, v, viaExpr(k)) }
-      s"probe diverges from expression at K=8: ${diff.take(5)}"
-    })
-    assert(viaExpr.nonEmpty)
-
-    // regime 2: K=300 > CellAssignExprMaxK — synthetic centroids from the
-    // fixture's own vectors (rounded like quantizer state); the dispatcher
-    // must pick the probe (plan shows the object boundary), and the probe
-    // must still equal the expression fold run at the same K
-    assert(VectorQueries.CellAssignExprMaxK < 300)
+    // synthetic centroids from the fixture's own vectors, rounded like
+    // quantizer state
     val cents300: Seq[(Long, Seq[Double])] = e.orderBy("vec_id").limit(300)
       .collect().zipWithIndex.map { case (r, i) =>
         i.toLong -> r.getSeq[Float](1).map(f =>
           math.rint(f.toDouble * 1e6) / 1e6).toSeq
       }.toSeq
-    val dispatched = VectorQueries.withCellAssigned(e, "embedding", "cell", cents300)
-    val dp = dispatched.queryExecution.executedPlan.toString
-    assert(dp.contains("MapPartitions"),
-      s"withCellAssigned at K=300 must dispatch to the probe:\n$dp")
-    val got = dispatched.select("vec_id", "cell")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = e.select(col("vec_id"),
-      VectorQueries.cellAssignCol(col("embedding"), cents300).as("cell"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want, {
-      val diff = got.collect { case (k, v) if want(k) != v => (k, v, want(k)) }
-      s"probe diverges from expression at K=300: ${diff.take(5)}"
-    })
-    // a vector that IS centroid 0 must land in cell 0 through the probe
-    assert(got.nonEmpty && got.values.exists(_ == 0L))
+    Seq(8 -> cents8, 300 -> cents300).foreach { case (k, cents) =>
+      assert(cents.size == k)
+      val one = rows(VectorQueries.assignCells(cents, e, 1))
+      val rank1 = rows(VectorQueries.assignCells(cents, e, 2)
+        .withColumn("rk", row_number().over(byRank)).filter(col("rk") === 1))
+      assert(one.nonEmpty && one.size == rank1.size, s"K=$k: vectors missed")
+      assert(one == rank1, {
+        val diff = one.collect { case (v, a) if rank1(v) != a => (v, a, rank1(v)) }
+        s"K=$k: nearestCell diverges from window rank 1: ${diff.take(5)}"
+      })
+      val viaColumn = cells(VectorQueries.withCellAssigned(e, "embedding", "cell", cents))
+      assert(viaColumn == one.map { case (v, (c, _)) => v -> c },
+        s"K=$k: withCellAssigned diverges from assignCells")
+    }
+    // a vector that IS centroid 0 lands in cell 0
+    assert(cells(VectorQueries.withCellAssigned(e, "embedding", "cell", cents300))
+      .values.exists(_ == 0L))
 
-    // null embedding: both forms assign the accumulator seed -1
+    // null embedding: cell -1 through the production column
     import spark.implicits._
     val withNull = Seq((9999L, null: Array[Float])).toDF("vec_id", "embedding")
-    val exprNull = withNull.select(
-      VectorQueries.cellAssignCol(col("embedding"), cents8).as("cell"))
-      .collect().head.getLong(0)
-    val probeNull = VectorQueries
-      .cellAssignProbe(withNull, "embedding", "cell", cents8)
+    val nullCell = VectorQueries.withCellAssigned(withNull, "embedding", "cell", cents8)
       .select("cell").collect().head.getLong(0)
-    assert(exprNull == -1L && probeNull == -1L,
-      s"null embedding: expr=$exprNull probe=$probeNull (want -1/-1)")
+    assert(nullCell == -1L, s"null embedding: cell $nullCell (want -1)")
   }
 
   test("quantizer training is bounded: a corpus past the target trains on the md5-slice sample") {
@@ -653,11 +638,13 @@ class VectorSpec extends AnyFunSuite {
     // and at the trained quantizer it ends at: any divergence in a single
     // assignment would compound across the Lloyd passes.
     import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
     val e = graft.plans.Tables.table(spark, sf, "embeddings")
-    val trained = VectorQueries.trainedCentroids(spark, sf)
-    val seeds = e.filter(col("vec_id") < trained.count())
+    val trained = VectorQueries.quantizerRows(spark, sf)
+    val seeds = e.filter(col("vec_id") < trained.size)
       .select(col("vec_id").as("cell"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cvec"))
+      .as[(Long, Seq[Double])].collect().toSeq
     val byRank = Window.partitionBy(col("vec_id"))
       .orderBy(col("ccos").desc, col("cell").asc)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -681,10 +668,10 @@ class VectorSpec extends AnyFunSuite {
   }
 
   test("an empty centroid frame is refused, not assigned null cells") {
-    // cells = 0 seeds no centroid; the per-row argmax would otherwise give
-    // every vector a null cell where the join shapes give no rows
+    // cells = 0 seeds no centroid; the per-row rule would otherwise give
+    // every vector cell -1 where the join shapes give no rows
     val e = intercept[IllegalArgumentException](
-      VectorQueries.trainedCentroids(spark, sf, cells = 0))
+      VectorQueries.quantizerRows(spark, sf, cells = 0))
     assert(e.getMessage.contains("no centroids"))
   }
 
