@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.queries.VectorQueries
 
@@ -28,7 +27,8 @@ import graft.queries.VectorQueries
   * (`Compaction.audit`, shared with [[CorpusCompaction]]).
   *
   * Scale shape: per-arrival cell assignment is the gate's own pure
-  * expression over the memoized (K x dims) quantizer rows; tier 1 is one
+  * expression over the memoized (K x dims) quantizer rows, computed once
+  * per arrival and kept through both tiers; tier 1 is one
   * anti-join probe of the cell-bucketed index; tier 2 is a batch-sized
   * within-cell self-join. The index is never rescanned — survivors append
   * with their cell and norm precomputed (at 100 TB, a partition-append to
@@ -62,18 +62,13 @@ object VectorCompaction {
       centroids: Seq[(Long, Seq[Double])]): Compacted = {
     import Compaction.pinned
 
-    // tier 1: the semantic gate, batch-side
+    // tier 1: the semantic gate, batch-side; it keeps the cell and norm it
+    // computed for each survivor, which tier 2 and the delta reuse
     val pastCorpus = pinned(graft.streaming.EventStream
-      .semanticGateAtIngest(arrivals, index, centroids))
-
-    // survivors' own artifacts (cell + norm), computed once per row by
-    // the gate's own nearest-centroid rule
-    val assigned = VectorQueries
-      .withCellAssigned(pastCorpus, "embedding", "cell", centroids)
-      .withColumn("nrm", VectorQueries.norm(col("embedding")))
+      .semanticGateAssigned(arrivals, index, centroids))
 
     // tier 2: within-cell batch pairs above the bar → lesser id wins
-    val survivors = pinned(assigned.join(VectorQueries.withinCellDrops(assigned),
+    val survivors = pinned(pastCorpus.join(VectorQueries.withinCellDrops(pastCorpus),
       Seq("vec_id"), "left_anti"))
 
     // survivors stays pinned on success: the returned delta rides it

@@ -349,18 +349,27 @@ object EventStream {
     * cost model); the quantizer stays bounded model state (<= 2^16 cells
     * by the ivfCellsFor cap), carried in the plan as one literal. */
   def semanticGateAtIngest(vecs: DataFrame, corpusIndex: DataFrame,
-      centroids: Seq[(Long, Seq[Double])]): DataFrame = {
+      centroids: Seq[(Long, Seq[Double])]): DataFrame =
+    semanticGateAssigned(vecs, corpusIndex, centroids, "gate_cell", "gate_nrm")
+      .drop("gate_cell", "gate_nrm")
+
+  /** [[semanticGateAtIngest]]'s survivors with the cell and norm the gate
+    * computed for each kept as `cellCol` and `nrmCol` (replacing any
+    * column of that name): the batch compaction appends both, so no
+    * survivor is assigned twice. */
+  private[graft] def semanticGateAssigned(vecs: DataFrame, corpusIndex: DataFrame,
+      centroids: Seq[(Long, Seq[Double])], cellCol: String = "cell",
+      nrmCol: String = "nrm"): DataFrame = {
     import graft.queries.VectorQueries
     val withCell = VectorQueries
-      .withCellAssigned(vecs, "embedding", "gate_cell", centroids)
-      .withColumn("gate_nrm", VectorQueries.norm(col("embedding")))
+      .withCellAssigned(vecs, "embedding", cellCol, centroids)
+      .withColumn(nrmCol, VectorQueries.norm(col("embedding")))
     withCell.join(
         corpusIndex.select(col("cell").as("c_cell"),
           col("embedding").as("c_emb"), col("nrm").as("c_nrm")),
-        VectorQueries.semNear(col("gate_cell"), col("embedding"), col("gate_nrm"),
+        VectorQueries.semNear(col(cellCol), col("embedding"), col(nrmCol),
           col("c_cell"), col("c_emb"), col("c_nrm")),
         "left_anti")
-      .drop("gate_cell", "gate_nrm")
   }
 
   /** Everything the composed ingest gate needs, assembled batch-side once

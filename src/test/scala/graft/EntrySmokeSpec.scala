@@ -22,6 +22,23 @@ object TestSpark {
   }
   val sf = "/root/testdata/sf0.001"
 
+  /** Spark jobs started while `body` runs, counted once the listener bus
+    * has gone quiet. */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      var last = -1
+      while (n.get() != last) { last = n.get(); Thread.sleep(1500) }
+      last
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** Drain an AvailableNow streaming query by SIGNAL and stop it —
     * delegates to the production loop ([[graft.sinks.LandingSink
     * .drainAndStop]], whose scaladoc documents the stateful-AvailableNow

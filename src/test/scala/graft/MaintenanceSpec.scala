@@ -123,23 +123,6 @@ class MaintenanceSpec extends AnyFunSuite {
     } finally Seq(conc, serial).foreach(VectorQueries.evictTrained)
   }
 
-  /** Spark jobs started while `body` runs, counted once the listener bus
-    * has gone quiet. */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      var last = -1
-      while (n.get() != last) { last = n.get(); Thread.sleep(1500) }
-      last
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("maintainAll on cold memos: a fully tripped pass trains each artifact once, as many jobs as a no-trip pass") {
     val (quiet, tripped) = (fixtureCopy("quiet"), fixtureCopy("tripped"))
     // an unassigned index: building a cell index would train the quantizer

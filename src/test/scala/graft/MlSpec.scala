@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.ml.classification.LogisticRegressionModel
+import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.linalg.{Vectors, Vector => MlVector}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, floor}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.MlQueries
@@ -198,5 +203,112 @@ class MlSpec extends AnyFunSuite {
       assert(got.nonEmpty && got.forall { case (id, s) => want.get(id).contains(s) },
         s"stream/batch score divergence: ${got.filterNot { case (id, s) => want.get(id).contains(s) }.take(5)}")
     } finally q.stop()
+  }
+
+  // ---- the local fit against MLlib's ----
+
+  /** (features, label) rows over 64 features: feature 0 is 2.0 in every
+    * row (zero variance, non-zero mean), feature 1 is in every row with a
+    * varying value, 6 draws over features 2–41, 42–63 never occur; about
+    * 85% of the labels are 1, fewer where feature 2 is present. */
+  private def synthetic(n: Int): Seq[(MlVector, Double)] = {
+    val rnd = new scala.util.Random(11)
+    (0 until n).map { i =>
+      val f = scala.collection.mutable.TreeMap[Int, Double](0 -> 2.0, 1 -> (1 + i % 3).toDouble)
+      (0 until 6).foreach(_ => f(2 + rnd.nextInt(40)) = (1 + rnd.nextInt(4)).toDouble)
+      val p1 = if (f.contains(2)) 0.5 else 0.9
+      (Vectors.sparse(64, f.toSeq), if (rnd.nextDouble() < p1) 1.0 else 0.0)
+    }
+  }
+
+  private def frame(rows: Seq[(MlVector, Double)]): DataFrame = {
+    import spark.implicits._
+    rows.zipWithIndex.map { case ((v, y), i) => (i.toLong, v, y) }
+      .toDF("doc_id", "features", "label")
+  }
+
+  /** t19's score column, by doc_id. */
+  private def scoresOf(m: LogisticRegressionModel, df: DataFrame): Map[Long, Long] =
+    m.transform(df).select(col("doc_id"),
+        floor(vector_to_array(col("probability")).getItem(1) * 1000000.0).cast("bigint"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def assertSameFit(local: LogisticRegressionModel, mllib: LogisticRegressionModel,
+      data: DataFrame, what: String): Unit = {
+    val dc = local.coefficients.toArray.zip(mllib.coefficients.toArray)
+      .map { case (a, b) => math.abs(a - b) }.max
+    assert(dc <= 1e-12, s"$what: coefficients differ by $dc")
+    assert(math.abs(local.intercept - mllib.intercept) <= 1e-12,
+      s"$what: intercept ${local.intercept} vs ${mllib.intercept}")
+    assert(local.numClasses == mllib.numClasses && !local.hasSummary, what)
+    def params(m: LogisticRegressionModel) =
+      (m.extractParamMap().toSeq.map(p => p.param.name -> p.value).toMap,
+        m.params.filter(m.isSet).map(_.name).toSet)
+    assert(params(local) == params(mllib), s"$what: param maps differ")
+    val (a, b) = (scoresOf(local, data), scoresOf(mllib, data))
+    assert(a.size == data.count() && a == b,
+      s"$what: ${a.count { case (id, s) => !b.get(id).contains(s) }} scores differ")
+  }
+
+  test("fitLocal reproduces MLlib's fit: sf0.01 and a synthetic sample, within 1e-12 and equal scores") {
+    val dir = graft.plans.VerifyExports.VerifyDir
+    val all = MlQueries.featurized(spark, dir)
+    val train = all.filter(col("doc_id") % 10 < 3)
+    val rows = MlQueries.localSample(train).get
+    assert(rows.size > 100, s"sf0.01 training sample has ${rows.size} rows")
+    assertSameFit(MlQueries.fitLocal(rows), MlQueries.fitSpark(train), all, "sf0.01")
+    val syn = synthetic(600)
+    assert(syn.count(_._2 == 1.0) > 400, "labels not skewed")
+    val local = MlQueries.fitLocal(syn)
+    assertSameFit(local, MlQueries.fitSpark(frame(syn)), frame(syn), "synthetic")
+    assert(local.coefficients(0) == 0.0 && local.coefficients(1) != 0.0,
+      "a zero-variance feature gets coefficient 0, a varying one does not")
+  }
+
+  test("fitLocal on degenerate samples gives MLlib's outcome: one label either way, no varying feature, empty") {
+    val base = synthetic(40)
+    Seq("all labels 1" -> base.map(r => (r._1, 1.0)),
+        "all labels 0" -> base.map(r => (r._1, 0.0)),
+        "every feature constant" -> base.zipWithIndex.map { case (_, i) =>
+          (Vectors.sparse(64, Seq(0 -> 2.0)), if (i % 4 == 0) 0.0 else 1.0) })
+      .foreach { case (what, rows) =>
+        val (local, mllib) = (MlQueries.fitLocal(rows), MlQueries.fitSpark(frame(rows)))
+        assert(local.coefficients.toArray.forall(_ == 0.0) &&
+          local.coefficients == mllib.coefficients, what)
+        assert(local.intercept == mllib.intercept ||
+          math.abs(local.intercept - mllib.intercept) <= 1e-12,
+          s"$what: intercept ${local.intercept} vs ${mllib.intercept}")
+        assert(local.numClasses == mllib.numClasses, what)
+      }
+    assert(MlQueries.fitLocal(base.map(r => (r._1, 0.0))).numClasses == 1)
+    assert(MlQueries.fitLocal(base.map(r => (r._1, 1.0))).intercept == Double.PositiveInfinity)
+    intercept[IllegalArgumentException](MlQueries.fitSpark(frame(base).limit(0)))
+    intercept[IllegalArgumentException](MlQueries.fitLocal(Seq.empty))
+    intercept[IllegalArgumentException](MlQueries.fit(frame(base).limit(0)))
+  }
+
+  test("fit selects the local fit up to ClassifierLocalRows rows and MLlib's above") {
+    val bound = MlQueries.ClassifierLocalRows
+    val rows = synthetic(bound + 1)
+    val (at, over) = (frame(rows.take(bound)), frame(rows))
+    assert(MlQueries.localSample(at).map(_.size).contains(bound))
+    assert(MlQueries.localSample(over).isEmpty)
+    var (atFit, overFit) = (null: LogisticRegressionModel, null: LogisticRegressionModel)
+    val atJobs = jobsOf { atFit = MlQueries.fit(at) }
+    val overJobs = jobsOf { overFit = MlQueries.fit(over) }
+    assert(atJobs <= 2 && overJobs > 10, s"jobs: $atJobs at the bound, $overJobs above it")
+    // each selection is the path it names, called directly
+    def same(a: LogisticRegressionModel, b: LogisticRegressionModel) =
+      a.coefficients == b.coefficients && a.intercept == b.intercept
+    assert(same(atFit, MlQueries.fitLocal(rows.take(bound))))
+    assert(same(overFit, MlQueries.fitSpark(over)))
+    assertSameFit(MlQueries.fitLocal(rows), overFit, over, s"${bound + 1} rows")
+  }
+
+  test("a cold fitted runs at most 2 Spark jobs on the fixture: the L-BFGS iterations run on the driver") {
+    MlQueries.featurized(spark, sf).count() // the tokenized corpus is built once per JVM
+    MlQueries.releaseModels()
+    val jobs = jobsOf(MlQueries.fitted(spark, sf))
+    assert(jobs <= 2, s"a cold fit ran $jobs Spark jobs")
   }
 }

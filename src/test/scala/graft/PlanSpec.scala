@@ -314,7 +314,7 @@ class PlanSpec extends AnyFunSuite {
       s"frame exchange not reused — corpus sampled once per join side:\n$fin")
   }
 
-  test("v8 semantic dedup: centroid scoring broadcasts, within-cell pairing never cartesians") {
+  test("v8 semantic dedup: per-row centroid scoring, within-cell pairing never cartesians") {
     val p = planOf(VectorQueries.queries("v8_semantic_dedup")(spark, sf))
     // centroid scoring is the per-row nearestCell projection over the
     // tiny quantizer state: no centroid join at all
@@ -625,7 +625,7 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("v11/v12: broadcast quantizer assignment, no pairwise surface, window shuffles only") {
+  test("v11/v12: per-row quantizer assignment, no pairwise surface, window shuffles only") {
     // the whole point of centroid-distance pruning/sampling vs v8's
     // within-cell pairs: O(N) plans. The quantizer rides in the
     // assignment's projection (nearestCell), so v11 plans with no join at
