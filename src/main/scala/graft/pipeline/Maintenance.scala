@@ -23,8 +23,9 @@ import graft.queries.{MlQueries, VectorQueries}
   * memos) that measurement has already trained the artifact on the
   * corpus as it now stands; a tripped threshold then keeps it rather
   * than training it again on the same corpus. Only an artifact trained
-  * before the pass is evicted and retrained. The text legs also drop
-  * the tokenized-corpus snapshot when the files under `dir` changed
+  * before the pass is evicted and retrained. Every leg runs this one
+  * rule, its memo's [[graft.plans.TrainOnce.refit]]. The text legs also
+  * drop the tokenized-corpus snapshot when the files under `dir` changed
   * since it was built, so they never measure or train on the corpus as
   * it was.
   *
@@ -39,15 +40,16 @@ import graft.queries.{MlQueries, VectorQueries}
   * be atomic from the caller's view. Tokenizer and classifier are
   * mutually independent and independent of the quantizer (text-side vs
   * vector-side artifacts). The state the legs share is safe under this:
-  * each memo has its own lock, `Tables` is a concurrent map, and
-  * `Snapshot.checkpointed` builds a shared snapshot (the tokenizer's and
-  * classifier's `toks`) once; `Snapshot.dropStale` never drops a build
-  * made under the dir's current stamp, so the second text leg's call
-  * leaves the first leg's rebuild in place. The pass returns only after EVERY leg has
-  * finished, so no job of it is still running when the caller moves on;
-  * failures are rethrown in the fixed order quantizer, tokenizer,
-  * classifier, and the outcome's fields keep that order, so reports stay
-  * reproducible.
+  * every memo is a [[graft.plans.TrainOnce]], which trains outside its
+  * lock, so no leg waits on another leg's training; `Tables` is a
+  * concurrent map; and `Snapshot.checkpointed` builds a shared snapshot
+  * (the tokenizer's and classifier's `toks`) once; `Snapshot.dropStale`
+  * never drops a build made under the dir's current stamp, so the second
+  * text leg's call leaves the first leg's rebuild in place. The pass
+  * returns only after EVERY leg has finished, so no job of it is still
+  * running when the caller moves on; failures are rethrown in the fixed
+  * order quantizer, tokenizer, classifier, and the outcome's fields keep
+  * that order, so reports stay reproducible.
   *
   * The monitor row feeding these thresholds is the oracled
   * `x_maintenance_report`

@@ -203,6 +203,15 @@ object EventQueries {
       .orderBy("cohort_day", "day_offset")
   }
 
+  /** e14's conversion windows (epoch-micros), shared with the streaming
+    * funnel state machine (streaming/EventStream.funnelAtIngest) so batch
+    * and stream cannot drift — the mixHash/Fingerprint discipline. The
+    * oracle SQL inlines the same literals (EntrySmokeSpec would catch an
+    * edit to one side via the driver gate; the constants are the single
+    * Scala-side source). */
+  private[graft] val FunnelClickWindowUs: Long = 3600L * 1000000L
+  private[graft] val FunnelPurchaseWindowUs: Long = 86400L * 1000000L
+
   /** Strict sequential conversion funnel with per-step windows: first
     * view → first click within 1 h of that view → first purchase within
     * 24 h of that click, one row per funnel-entered user with the step
@@ -214,15 +223,6 @@ object EventQueries {
     * filter is pushed into the scan, and step N+1 only joins against the
     * (strictly smaller) survivors of step N, so work decays with funnel
     * depth instead of rescanning the stream per step. */
-  /** e14's conversion windows (epoch-micros), shared with the streaming
-    * funnel state machine (streaming/EventStream.funnelAtIngest) so batch
-    * and stream cannot drift — the mixHash/Fingerprint discipline. The
-    * oracle SQL inlines the same literals (EntrySmokeSpec would catch an
-    * edit to one side via the driver gate; the constants are the single
-    * Scala-side source). */
-  private[graft] val FunnelClickWindowUs: Long = 3600L * 1000000L
-  private[graft] val FunnelPurchaseWindowUs: Long = 86400L * 1000000L
-
   def e14FunnelSteps(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir).select(col("user_id"), col("event_type"), col("ts_us"))
     val v = ev.filter(col("event_type") === "view")

@@ -734,7 +734,6 @@ object ExportQueries {
       "x_forget_audit" -> xForgetAudit,
       "x_suppression_store" -> xSuppressionStore)
 
-  /** DuckDB twin of the whole tier cascade. */
   /** The front door's gate CTE stack (arrivals → quality → exact → band
     * survivors) — ONE definition serving the x_front_door oracle and the
     * x_front_door_audit oracle, so the audited counts and the survivor
@@ -1018,9 +1017,8 @@ object ExportQueries {
         |       CAST((SELECT COUNT(*) FROM sv) AS BIGINT) AS n_appended""".stripMargin))
   }
 
-  /** No oracle possible for the manifest (file-layout-dependent); see the
-    * scaladoc above. The compaction audit IS oracle-checked. */
   /** Empty since r18: the manifest's shard-count tier oracles by the
-    * ceil(rows/cap) single-writer-contiguity contract (see oracleSql). */
+    * ceil(rows/cap) single-writer-contiguity contract (see oracleSql),
+    * and the compaction audit is oracle-checked. */
   val rowsOnly: Set[String] = Set.empty
 }

@@ -43,19 +43,19 @@ import org.apache.spark.sql.functions._
   */
 object MlQueries {
 
-  private val models =
-    scala.collection.mutable.Map[String, LogisticRegressionModel]()
+  /** The fitted classifier per input dir ([[fitted]]). */
+  private val models = new graft.plans.TrainOnce[String, LogisticRegressionModel]
 
-  /** Release memoized model state (test hygiene; bench groups never need
-    * it — the memo IS the measured train-once semantics). */
-  def releaseModels(): Unit = models.synchronized(models.clear())
+  /** Release memoized model state: the hook of specs, and of benchmark
+    * rounds that each start from a cold memo. */
+  def releaseModels(): Unit = models.clear()
 
   /** Release memoized BPE state ([[bpeState]]'s merge table + encoded
     * vocabulary — local rows and a local relation, or a pinned
     * localCheckpoint when [[train]] ran its Spark loop): same test-hygiene
     * hook as [[releaseModels]]; without it a garbage training result for a dir
     * (e.g. a fixed bad input) would be cached until process restart. */
-  def releaseBpe(): Unit = bpeMemo.synchronized(bpeMemo.clear())
+  def releaseBpe(): Unit = bpeMemo.clear()
 
   private val FeatureDim = 1024
 
@@ -111,15 +111,8 @@ object MlQueries {
   private def estimator: LogisticRegression =
     new LogisticRegression().setMaxIter(20).setRegParam(0.01)
 
-  private[graft] def fitted(spark: SparkSession, dir: String): LogisticRegressionModel = {
-    // getOrElseUpdate under the lock is fine here: training is at most
-    // seconds, callers are bench reps / spec calls, and a duplicated concurrent
-    // train would only waste work, not corrupt the memo
-    models.synchronized {
-      models.getOrElseUpdate(dir,
-        fit(featurized(spark, dir).filter(pmod(col("doc_id"), lit(10)) < 3)))
-    }
-  }
+  private[graft] def fitted(spark: SparkSession, dir: String): LogisticRegressionModel =
+    models(dir)(fit(featurized(spark, dir).filter(pmod(col("doc_id"), lit(10)) < 3)))
 
   /** [[fitLocal]] on `train`'s rows when it has at most
     * [[ClassifierLocalRows]] of them, [[fitSpark]] when it has more. */
@@ -131,10 +124,16 @@ object MlQueries {
 
   /** The (features, label) rows of a training frame when it has at most
     * [[ClassifierLocalRows]] of them, None when it has more. */
-  private[graft] def localSample(train: DataFrame): Option[Seq[(MlVector, Double)]] = {
-    val rows = train.select("features", "label").limit(ClassifierLocalRows + 1).collect()
-    if (rows.length > ClassifierLocalRows) None
-    else Some(rows.toSeq.map(r => (r.getAs[MlVector](0), r.getDouble(1))))
+  private[graft] def localSample(train: DataFrame): Option[Seq[(MlVector, Double)]] =
+    boundedCollect(train.select("features", "label"), ClassifierLocalRows)
+      .map(_.toSeq.map(r => (r.getAs[MlVector](0), r.getDouble(1))))
+
+  /** `df`'s rows when it has at most `n` of them, None when it has more:
+    * one `limit(n + 1)` collect, so above the bound it stops once it
+    * holds n + 1 rows. */
+  private def boundedCollect(df: DataFrame, n: Int): Option[Array[Row]] = {
+    val rows = df.limit(n + 1).collect()
+    if (rows.length > n) None else Some(rows)
   }
 
   /** MLlib's distributed fit, for a sample above [[ClassifierLocalRows]].
@@ -370,13 +369,12 @@ object MlQueries {
     * measure hold-out rule agreement, and below the floor evict the
     * fitted-model memo and refit eagerly on the corpus as it now stands
     * (t19's scores, the front door's scoring artifact at its next
-    * redeploy). Train once per pass: when the memo held no model for
-    * `dir` as the pass started, the report itself has just fitted one on
-    * the corpus as it now stands, so a trip keeps that model (and still
-    * reads `retrained`); only a model fitted before the pass is refit.
-    * The re-list also drops the tokenized-corpus snapshot when the files
-    * under `dir` changed ([[graft.plans.Snapshot.dropStale]]), so the
-    * report does not measure the corpus as it was. No exact-reproduction
+    * redeploy). Train once per pass ([[graft.plans.TrainOnce.refit]]): a
+    * model the report itself just fitted on a cold memo survives a trip
+    * (which still reads `retrained`); only a model fitted before the pass
+    * is refit. The re-list also drops the tokenized-corpus snapshot when
+    * the files under `dir` changed ([[graft.plans.Snapshot.dropStale]]),
+    * so the report does not measure the corpus as it was. No exact-reproduction
     * pin here — L-BFGS is deterministic only to machine precision — so
     * MlSpec pins the loop mechanics
     * (no-trip instance stability, tripped rebuild) plus the semantic bar
@@ -385,19 +383,15 @@ object MlQueries {
       agreementFloorMicro: Long = 0L): ClassifierDriftReport = {
     graft.plans.Tables.invalidate(s"$dir/documents.parquet")
     graft.plans.Snapshot.dropStale(dir)
-    val cold = models.synchronized(!models.contains(dir))
-    val report = xClassifierReport(spark, dir).collect()(0)
-    val agreement = report.getAs[Long]("holdout_agreement_micro")
-    // an EMPTY holdout is no evidence of drift: agreement reads 0 there
-    // (the zero-guarded division), and force-refitting on every pass of a
-    // tiny corpus would thrash the model for no signal
-    val drifted = report.getAs[Long]("n_holdout") > 0L &&
-      agreement < agreementFloorMicro
-    if (drifted && !cold) {
-      models.synchronized { models.remove(dir); () }
-      fitted(spark, dir) // refit now, not at the next scoring pass
-    }
-    ClassifierDriftReport(agreement, retrained = drifted)
+    models.refit(_ == dir) {
+      val report = xClassifierReport(spark, dir).collect()(0)
+      val agreement = report.getAs[Long]("holdout_agreement_micro")
+      // an EMPTY holdout is no evidence of drift: agreement reads 0 there
+      // (the zero-guarded division), and force-refitting on every pass of a
+      // tiny corpus would thrash the model for no signal
+      ClassifierDriftReport(agreement, retrained =
+        report.getAs[Long]("n_holdout") > 0L && agreement < agreementFloorMicro)
+    }(_.retrained)(fitted(spark, dir)) // refit now, not at the next scoring pass
   }
 
   // ---- t20: BPE merge learning (tokenizer training) ----
@@ -488,11 +482,9 @@ object MlQueries {
   /** The rows of an atomized word table when it has at most
     * [[BpeLocalWords]] of them, None when it has more. */
   private[graft] def localWords(words: DataFrame)
-      : Option[Seq[(String, Seq[String], Long)]] = {
-    val rows = words.limit(BpeLocalWords + 1).collect()
-    if (rows.length > BpeLocalWords) None
-    else Some(rows.toSeq.map(r => (r.getString(0), r.getSeq[String](1), r.getLong(2))))
-  }
+      : Option[Seq[(String, Seq[String], Long)]] =
+    boundedCollect(words, BpeLocalWords)
+      .map(_.toSeq.map(r => (r.getString(0), r.getSeq[String](1), r.getLong(2))))
 
   /** The merge loop over local rows: the pair counts are recounted each
     * round (a distinct-word table is small enough that this is the
@@ -587,34 +579,21 @@ object MlQueries {
     (merges.toSeq, words)
   }
 
-  private[graft] def learnMerges(words0: DataFrame, k: Int)
-      : Seq[(Int, String, String, Long)] = train(words0, k)._1
-
   private val BpeRounds = 16
 
-  private val bpeMemo = scala.collection.mutable
-    .Map[String, (Seq[(Int, String, String, Long)], DataFrame)]()
+  private val bpeMemo =
+    new graft.plans.TrainOnce[String, (Seq[(Int, String, String, Long)], DataFrame)]
 
   /** The learned merge table for `dir` — the model state a streaming
     * ingest twin ships to the stream side (like t19's fitted model). */
   private[graft] def learnedMerges(spark: SparkSession, dir: String)
       : Seq[(Int, String, String, Long)] = bpeState(spark, dir)._1
 
-  /** Train-once memo shared by t20 (the merge table) and t21 (the encoded
-    * vocabulary) — one training pass serves both, like t19/v4. The
-    * training's Spark jobs run OUTSIDE the lock (the
-    * quantizer-memo discipline): a concurrent duplicate train computes
-    * identical state (the argmax is deterministic), getOrElseUpdate
-    * keeps one, and an independent dir is never blocked behind another
-    * dir's training. */
+  /** Train-once state shared by t20 (the merge table) and t21 (the
+    * encoded vocabulary) — one training pass serves both, like t19/v4. */
   private def bpeState(spark: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) =
-    bpeMemo.synchronized(bpeMemo.get(dir)) match {
-      case Some(s) => s
-      case None =>
-        val built = train(wordFreq(spark, dir), BpeRounds)
-        bpeMemo.synchronized(bpeMemo.getOrElseUpdate(dir, built))
-    }
+    bpeMemo(dir)(train(wordFreq(spark, dir), BpeRounds))
 
   /** What [[retrainTokenizerIfDrifted]] measured and did. */
   case class TokenizerDriftReport(fertilityMicro: Long, nAlarmDocs: Long,
@@ -625,9 +604,8 @@ object MlQueries {
     * [[graft.queries.VectorQueries.retrainIfDrifted]]: re-list the
     * corpus, measure corpus fertility and the alarm-doc tail, and when a
     * threshold trips, evict the trained-BPE memo for `dir` and retrain
-    * eagerly on the corpus as it now stands (once per pass: when the memo
-    * was empty as the pass started, the report has just trained it on
-    * that corpus, and a trip keeps it; the re-list drops a stale
+    * eagerly on the corpus as it now stands (once per pass, by
+    * [[graft.plans.TrainOnce.refit]]; the re-list drops a stale
     * tokenized-corpus snapshot first, as in
     * [[retrainClassifierIfDrifted]]), so every later consumer
     * (t20's table, t21's pricing join, the report itself, and the front
@@ -645,16 +623,13 @@ object MlQueries {
       maxAlarmDocs: Long = Long.MaxValue): TokenizerDriftReport = {
     graft.plans.Tables.invalidate(s"$dir/documents.parquet")
     graft.plans.Snapshot.dropStale(dir)
-    val cold = bpeMemo.synchronized(!bpeMemo.contains(dir))
-    val r = xTokenizerReport(spark, dir).collect()(0)
-    val fert = r.getAs[Long]("fertility_micro")
-    val alarms = r.getAs[Long]("n_alarm_docs")
-    val drifted = fert > fertilityCeilingMicro || alarms > maxAlarmDocs
-    if (drifted && !cold) {
-      bpeMemo.synchronized { bpeMemo.remove(dir); () }
-      bpeState(spark, dir) // retrain now, not at the next pricing pass
-    }
-    TokenizerDriftReport(fert, alarms, retrained = drifted)
+    bpeMemo.refit(_ == dir) {
+      val r = xTokenizerReport(spark, dir).collect()(0)
+      val fert = r.getAs[Long]("fertility_micro")
+      val alarms = r.getAs[Long]("n_alarm_docs")
+      TokenizerDriftReport(fert, alarms,
+        retrained = fert > fertilityCeilingMicro || alarms > maxAlarmDocs)
+    }(_.retrained)(bpeState(spark, dir)) // retrain now, not at the next pricing pass
   }
 
   /** t20 — the learned BPE merge table (rank, left, right, merged symbol,
@@ -679,6 +654,17 @@ object MlQueries {
     df
   }
 
+  /** The (word, word_pieces) projection of the trained vocabulary, with
+    * its verify-scale export as a side effect — ONE definition for t21's
+    * pricing join, the tokenizer report, and the oracle's exported table
+    * (maybeExport is write-once per JVM, so repeated callers are free). */
+  private def vocabPieces(spark: SparkSession, dir: String): DataFrame = {
+    val vocab = bpeState(spark, dir)._2
+      .select(col("word"), size(col("syms")).cast("bigint").as("word_pieces"))
+    graft.plans.VerifyExports.maybeExport(dir, "t21_bpe_vocab")(vocab)
+    vocab
+  }
+
   /** t21 — corpus tokenization under the learned BPE vocabulary: per-doc
     * whitespace-word count, encoded-piece count, and the pieces-per-word
     * fertility in exact integer micro-units (`DIV` — no doubles). This is
@@ -699,17 +685,6 @@ object MlQueries {
     * the (word, word_pieces) table is exported at the verify scale and
     * DuckDB recomputes everything downstream of it independently.
     * BpeSpec still pins the vocab itself against the pure-Scala encoder. */
-  /** The (word, word_pieces) projection of the trained vocabulary, with
-    * its verify-scale export as a side effect — ONE definition for t21's
-    * pricing join, the tokenizer report, and the oracle's exported table
-    * (maybeExport is write-once per JVM, so repeated callers are free). */
-  private def vocabPieces(spark: SparkSession, dir: String): DataFrame = {
-    val vocab = bpeState(spark, dir)._2
-      .select(col("word"), size(col("syms")).cast("bigint").as("word_pieces"))
-    graft.plans.VerifyExports.maybeExport(dir, "t21_bpe_vocab")(vocab)
-    vocab
-  }
-
   def t21BpeEncode(spark: SparkSession, dir: String): DataFrame = {
     val vocab = vocabPieces(spark, dir)
     val docWords = TextQueries.tokenizedCorpus(spark, dir)

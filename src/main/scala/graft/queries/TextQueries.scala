@@ -218,8 +218,7 @@ object TextQueries {
     * checkpointed batch base and every streaming ingest twin
     * (quality/score/band/encode) must segment identically — a second
     * inline copy of this expression is exactly how stream and batch
-    * would silently drift. */
-  /** Whitespace word tokenization — since round 12 the native codegen'd
+    * would silently drift. Since round 12 it is the native codegen'd
     * expression (graft.functions.TokenizeWords, registered via
     * GraftExtensions): one byte scan emitting buffer slices, bit-identical
     * to the HOF `filter(split(...))` chain (TokenizeWordsSpec pins the
@@ -467,8 +466,6 @@ object TextQueries {
           (0 until NumHashes).map(j => col(s"h$j").cast("string")): _*).as("signature"))
       .orderBy("doc_id")
 
-  /** LSH near-dup candidate pairs: 4 bands x 4 rows; pairs sharing any band
-    * key. Equi-join on (band, bkey) — never a cross join. */
   /** Shared checkpointed base for d3/d4: distinct shingles (set semantics;
     * MinHash minima are unaffected) and the candidate pairs derived from
     * them. One materialization per (sfDir, JVM); every consumer — including
@@ -492,6 +489,8 @@ object TextQueries {
   private def cachedCands(spark: SparkSession, dir: String): DataFrame =
     checkpointed(spark, dir, "cands")(candsFrom(cachedSigs(spark, dir)))
 
+  /** LSH near-dup candidate pairs: 4 bands x 4 rows; pairs sharing any band
+    * key. Equi-join on (band, bkey) — never a cross join. */
   def d3MinhashLshPairs(spark: SparkSession, dir: String): DataFrame =
     cachedCands(spark, dir).orderBy("doc_a", "doc_b")
 
@@ -570,8 +569,8 @@ object TextQueries {
 
   /** Unordered signature base: 64 per-bit votes from the two 32-bit halves
     * of the token md5, packed into 16-bit quarters; sim_lo/sim_hi are
-    * quarter-composed, so every packed value stays in [0, 2^32). */
-  /** Shuffle-free signature base (round 12): SimHash is a pure per-doc
+    * quarter-composed, so every packed value stays in [0, 2^32).
+    * Shuffle-free (round 12): SimHash is a pure per-doc
     * map, so the native `simhash_sig` expression (functions/SimhashSig)
     * computes it in one projection over the checkpointed toks — the
     * explode → 64-vote aggregate it replaces shuffled the whole tokenized
@@ -1136,16 +1135,6 @@ object TextQueries {
       .orderBy("doc_id", "rk")
   }
 
-  /** t8 — benchmark decontamination: flag corpus docs sharing >= 3 word
-    * 3-gram shingles with a held-out eval set (base doc_id % 97 == 0 —
-    * the "benchmark") — the train/test-overlap scrub every production
-    * pretraining pipeline runs before training. The benchmark shingle
-    * set is tiny (N/97 docs) and BROADCAST; the corpus side is the
-    * already-checkpointed distinct-shingle base, so the check is one
-    * broadcast equi-join + one groupBy — at 100 TB the eval set stays
-    * broadcast-able by construction (eval sets are small) and no
-    * all-pairs surface exists. The planted corpus mutants of benchmark
-    * docs are guaranteed positives. */
   /** Benchmark-slice membership — ONE definition for t8's scrub verdict
     * and t31's magnitude report (a second inline copy is exactly how the
     * two would silently diverge when the rule moves; the oracle twins
@@ -1161,6 +1150,16 @@ object TextQueries {
       dsh.filter(!isBenchDoc(col("doc_id"))))
   }
 
+  /** t8 — benchmark decontamination: flag corpus docs sharing >= 3 word
+    * 3-gram shingles with a held-out eval set (base doc_id % 97 == 0 —
+    * the "benchmark") — the train/test-overlap scrub every production
+    * pretraining pipeline runs before training. The benchmark shingle
+    * set is tiny (N/97 docs) and BROADCAST; the corpus side is the
+    * already-checkpointed distinct-shingle base, so the check is one
+    * broadcast equi-join + one groupBy — at 100 TB the eval set stays
+    * broadcast-able by construction (eval sets are small) and no
+    * all-pairs surface exists. The planted corpus mutants of benchmark
+    * docs are guaranteed positives. */
   def t8Decontaminate(spark: SparkSession, dir: String): DataFrame = {
     val (bsh, train) = benchSplit(spark, dir)
     train
@@ -1250,21 +1249,6 @@ object TextQueries {
     ("fr", 1L << 30, 2),
     ("zh", 1L << 29, 1))
 
-  /** t9 — training-mix sampling: the per-slice rate + epoch-repeat pass
-    * that turns a raw corpus into a training mixture (downsample the big
-    * web crawl, upsample the high-quality slices — the data-mixing step
-    * every pretraining run tunes; production keys the table by `source`,
-    * the fixture's `lang` column stands in). Membership is decided by a salted md5
-    * slice of the doc_id against a per-language threshold — DETERMINISTIC
-    * sampling, so the mix is reproducible run-to-run and engine-to-engine
-    * (Bernoulli rand() could never hash-match an oracle), and epochs are
-    * emitted by exploding a 1..n sequence. Plan shape at 100 TB: a
-    * stateless filter + generate — embarrassingly parallel, zero shuffle;
-    * the mixing table is query metadata, not data. */
-  /** The mixing columns, shared by batch t9 and the streaming ingest twin
-    * (streaming/EventStream.sampleMixAtIngest) — one definition, so the
-    * sampling decision for a document is identical in both by
-    * construction (the Fingerprint-sharing discipline). */
   /** The x_train_val_split assignment — salted md5 slice of the doc_id
     * against [[SplitValPct]] — shared by the batch split
     * ([[graft.queries.ExportQueries.xTrainValSplit]]) and the streaming
@@ -1279,6 +1263,10 @@ object TextQueries {
           1, 8), 16, 10).cast("bigint") % 100L < SplitValPct,
       lit("val")).otherwise(lit("train"))
 
+  /** The mixing columns, shared by batch t9 and the streaming ingest twin
+    * (streaming/EventStream.sampleMixAtIngest) — one definition, so the
+    * sampling decision for a document is identical in both by
+    * construction (the Fingerprint-sharing discipline). */
   private[graft] def mixHash: Column =
     conv(substring(
         md5(concat(lit("mix:"), col("doc_id").cast("string"))), 1, 8), 16, 10)
@@ -1290,6 +1278,17 @@ object TextQueries {
   private[graft] def mixThreshold: Column = mixCase(_._2)
   private[graft] def mixEpochs: Column = mixCase(_._3.toLong)
 
+  /** t9 — training-mix sampling: the per-slice rate + epoch-repeat pass
+    * that turns a raw corpus into a training mixture (downsample the big
+    * web crawl, upsample the high-quality slices — the data-mixing step
+    * every pretraining run tunes; production keys the table by `source`,
+    * the fixture's `lang` column stands in). Membership is decided by a salted md5
+    * slice of the doc_id against a per-language threshold — DETERMINISTIC
+    * sampling, so the mix is reproducible run-to-run and engine-to-engine
+    * (Bernoulli rand() could never hash-match an oracle), and epochs are
+    * emitted by exploding a 1..n sequence. Plan shape at 100 TB: a
+    * stateless filter + generate — embarrassingly parallel, zero shuffle;
+    * the mixing table is query metadata, not data. */
   def t9SampleMix(spark: SparkSession, dir: String): DataFrame = {
     val thr = mixThreshold
     val epochs = mixEpochs
@@ -2143,10 +2142,9 @@ object TextQueries {
     * An untouched bucket (c_c = c_t = 0) naturally carries the add-one
     * weight N_c − N_t — the OOV leg needs no special case: novel
     * arrival tokens hash into buckets like any other. */
-  private val dsirModels =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
+  private val dsirModels = new graft.plans.TrainOnce[String, Array[Long]]
   private[graft] def dsirBucketWeights(spark: SparkSession, dir: String): Array[Long] =
-    dsirModels.computeIfAbsent(dir, _ => {
+    dsirModels(dir) {
       val tok = cachedToks(spark, dir)
         .select(col("lang"), explode(col("toks")).as("token"))
         .select(col("lang"), dsirBucketCol(col("token")).as("bucket"))
@@ -2162,7 +2160,7 @@ object TextQueries {
         weights(b) = (cT + 1L) * (nC + DsirBuckets) - (cC + 1L) * (nT + DsirBuckets)
       }
       weights
-    })
+    }
 
   /** The t16 signal columns over (text, toks) — ONE definition shared by
     * the batch query and the streaming ingest gate
@@ -2315,11 +2313,6 @@ object TextQueries {
       |    JOIN sizes nb ON s.doc_b = nb.doc_id)
       |  WHERE jaccard >= 0.5)""".stripMargin
 
-  /** The t12 clean-corpus oracle's full CTE stack (everything but the
-    * final SELECT), shared verbatim with the export-counts oracle
-    * ([[graft.queries.ExportQueries]]): the per-language survivor counts
-    * the shard writer must conserve are, by definition, an aggregation of
-    * exactly this survivor set — one definition, two final SELECTs. */
   /** The weighted quality CTE — the SQL rendering of [[qualityMicroCol]]
     * over [[qualitySignals]]' inner select, weights parameterized. ONE
     * definition serving the t12 stack's v1 score and the export-delta
@@ -2339,6 +2332,11 @@ object TextQueries {
        |           len(regexp_extract_all(c.text, '[^A-Za-z0-9\\s]')) AS n_punct
        |    FROM toks t JOIN corpus c ON t.doc_id = c.doc_id))""".stripMargin
 
+  /** The t12 clean-corpus oracle's full CTE stack (everything but the
+    * final SELECT), shared verbatim with the export-counts oracle
+    * ([[graft.queries.ExportQueries]]): the per-language survivor counts
+    * the shard writer must conserve are, by definition, an aggregation of
+    * exactly this survivor set — one definition, two final SELECTs. */
   private[queries] lazy val t12OracleCtes: String =
     s""", $sigsCte,
        |$bandsCte,

@@ -342,11 +342,9 @@ object VectorQueries {
     * many" is exactly how an IVF index is used in production — v4 trains,
     * v6's multi-probe (and any later probe) reuses. Driver-side Seq, not
     * an executor cache: it survives releaseCaches() by design and costs
-    * K x dims x 8 bytes. The build runs OUTSIDE the lock (the fragility
-    * ADVICE flagged in the text registry); a concurrent duplicate build
-    * computes byte-identical centroids, and getOrElseUpdate keeps one. */
+    * K x dims x 8 bytes. Keyed (dir, cells, sampleTarget). */
   private val quantizers =
-    scala.collection.mutable.Map[(String, Int, Long), Seq[(Long, Seq[Double])]]()
+    new graft.plans.TrainOnce[(String, Int, Long), Seq[(Long, Seq[Double])]]
 
   /** The one k=1 nearest-centroid rule: the cell of `e` among the local
     * quantizer rows `cents`, as ONE per-row expression — no join, no
@@ -431,7 +429,7 @@ object VectorQueries {
   private[graft] def quantizerRows(spark: SparkSession, dir: String,
       cells: Int = IvfCells,
       sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] =
-    quantizers.synchronized(quantizers.get((dir, cells, sampleTarget))).getOrElse {
+    quantizers((dir, cells, sampleTarget)) {
       import spark.implicits._
       val e = emb(spark, dir)
       def toLocal(c: DataFrame): Seq[(Long, Seq[Double])] =
@@ -444,10 +442,9 @@ object VectorQueries {
       // fits the budget); the final corpus assignment (assignCells at the
       // consumers) still covers every vector
       val trainSet = trainSampleOf(e, e.count(), sampleTarget)
-      val rows = (1 to LloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
+      (1 to LloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
         toLocal(lloydMeans(assignCells(c, trainSet, 1), "embedding", "cell"))
       }
-      quantizers.synchronized(quantizers.getOrElseUpdate((dir, cells, sampleTarget), rows))
     }
 
   /** `df` with `outCol` = the [[nearestCell]] of `embCol`: one projection,
@@ -628,10 +625,10 @@ object VectorQueries {
   private val PqCodes = 16
   private val PqLloydIters = 1
 
-  /** Trained-codebook memo, keyed by input dir (same train-once contract
-    * and locking shape as [[quantizers]]). Rows are (s, code, cvec). */
+  /** Trained-codebook memo, keyed by input dir (the train-once contract
+    * of [[quantizers]]). Rows are (s, code, cvec). */
   private val pqCodebooks =
-    scala.collection.mutable.Map[String, Seq[(Long, Long, Seq[Double])]]()
+    new graft.plans.TrainOnce[String, Seq[(Long, Long, Seq[Double])]]
 
   /** v7 — product-quantization ANN with an ADC (asymmetric distance
     * computation) scan: each vector is encoded as 8 four-bit codes — the
@@ -698,7 +695,7 @@ object VectorQueries {
     def toLocal(c: DataFrame): Seq[(Long, Long, Seq[Double])] =
       c.select(col("s").cast("bigint"), col("code").cast("bigint"), col("cvec"))
         .as[(Long, Long, Seq[Double])].collect().toSeq
-    val centRows = pqCodebooks.synchronized(pqCodebooks.get(dir)).getOrElse {
+    val centRows = pqCodebooks(dir) {
       val seeds = subs.filter(col("vec_id") < PqCodes)
         .select(col("s"), col("vec_id").as("code"),
           expr("transform(sub, x -> CAST(x AS DOUBLE))").as("cvec"))
@@ -706,11 +703,10 @@ object VectorQueries {
       // quantizerRows discipline); the encode pass below still codes
       // every vector
       val trainSubs = trainSampleOf(subs, e.count())
-      val trained = (1 to PqLloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
+      (1 to PqLloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
         toLocal(lloydMeans(assign(c.toDF("s", "code", "cvec"), trainSubs)
           .join(trainSubs, Seq("vec_id", "s")), "sub", "s", "code"))
       }
-      pqCodebooks.synchronized(pqCodebooks.getOrElseUpdate(dir, trained))
     }
     val cent = centRows.toDF("s", "code", "cvec")
     // encode: 8 four-bit codes per vector — the only corpus-sized state
@@ -960,18 +956,12 @@ object VectorQueries {
 
   /** Drop every trained-model memo for `dir` (coarse quantizer at every
     * (cells, sampleTarget) key, PQ codebooks) so the next consumer
-    * retrains over the corpus as it stands. The spec hook behind
-    * [[retrainIfDrifted]]'s retrain path. */
-  private[graft] def evictTrained(dir: String): Unit = evictTrainedBut(dir, None)
-
-  /** [[evictTrained]], keeping the quantizer memoized at `keep`. */
-  private def evictTrainedBut(dir: String,
-      keep: Option[(String, Int, Long)]): Unit = {
-    quantizers.synchronized {
-      quantizers.keys.filter(k => k._1 == dir && !keep.contains(k)).toList
-        .foreach(quantizers.remove)
-    }
-    pqCodebooks.synchronized(pqCodebooks.remove(dir))
+    * retrains over the corpus as it stands (the release hook of specs
+    * and benchmarks; [[retrainIfDrifted]] evicts through its memos'
+    * refit). */
+  private[graft] def evictTrained(dir: String): Unit = {
+    quantizers.evict(_._1 == dir)
+    pqCodebooks.evict(_ == dir)
   }
 
   /** The index-maintenance loop v16/v17 exist to feed — measure drift,
@@ -986,12 +976,11 @@ object VectorQueries {
     *      pass, so deployments choose whether to pay it per cycle);
     *   4. any monitor past its threshold ⇒ evict the memoized
     *      quantizer + PQ codebooks for `dir` and retrain eagerly (once
-    *      per pass: when the memo held no quantizer for `dir` as the pass
-    *      started, step 2 has just trained one on the corpus as it now
-    *      stands, so a trip keeps that one and drops only the rest), so
-    *      every later consumer (v4/v6/v8/v11/v12, [[corpusCellIndex]],
-    *      the streaming semantic gate's next deployment) probes the
-    *      fresh quantizer; a MATERIALIZED index table redeploys its
+    *      per pass, by [[graft.plans.TrainOnce.refit]]: a quantizer that
+    *      step 2 just trained on a cold memo is kept, and the quantizers
+    *      trained before the pass are dropped), so every later consumer
+    *      (v4/v6/v8/v11/v12, [[corpusCellIndex]], the streaming semantic
+    *      gate's next deployment) probes the fresh quantizer; a MATERIALIZED index table redeploys its
     *      stale assignments in one batch pass via [[reassignIndex]].
     *
     * Thresholds are exact micro-units like the monitors themselves;
@@ -1010,24 +999,22 @@ object VectorQueries {
       maxDeadCells: Long = Long.MaxValue,
       recallFloorMicro: Long = 0L): DriftReport = {
     graft.plans.Tables.invalidate(s"$dir/embeddings.parquet")
-    val key = (dir, IvfCells, TrainSampleTarget)
-    val cold = quantizers.synchronized(!quantizers.contains(key))
-    val bal = v16CellBalance(spark, dir)
-      .agg(sum(col("hot")).as("hot"),
-        sum(when(col("n_vecs") === 0L, 1L).otherwise(0L)).as("dead"))
-      .collect()(0)
-    val (hot, dead) = (bal.getLong(0), bal.getLong(1))
-    val minRecall =
-      if (recallFloorMicro <= 0L) None
-      else Some(v17RecallAudit(spark, dir)
-        .agg(min(col("recall_micro")).as("mr")).collect()(0).getLong(0))
-    val drifted = hot > maxHotCells || dead > maxDeadCells ||
-      minRecall.exists(_ < recallFloorMicro)
-    if (drifted) {
-      evictTrainedBut(dir, if (cold) Some(key) else None)
+    quantizers.refit(_._1 == dir) {
+      val bal = v16CellBalance(spark, dir)
+        .agg(sum(col("hot")).as("hot"),
+          sum(when(col("n_vecs") === 0L, 1L).otherwise(0L)).as("dead"))
+        .collect()(0)
+      val (hot, dead) = (bal.getLong(0), bal.getLong(1))
+      val minRecall =
+        if (recallFloorMicro <= 0L) None
+        else Some(v17RecallAudit(spark, dir)
+          .agg(min(col("recall_micro")).as("mr")).collect()(0).getLong(0))
+      DriftReport(hot, dead, minRecall, retrained = hot > maxHotCells ||
+        dead > maxDeadCells || minRecall.exists(_ < recallFloorMicro))
+    }(_.retrained) {
+      pqCodebooks.evict(_ == dir)
       quantizerRows(spark, dir) // retrain now, not at the next probe
     }
-    DriftReport(hot, dead, minRecall, retrained = drifted)
   }
 
   /** x_drift_report — the maintenance pass's monitor summary as ONE
@@ -1346,10 +1333,6 @@ object VectorQueries {
        |WHERE rk <= 5 ORDER BY qid, rk""".stripMargin
   }
 
-  /** PQ oracle generated from the SAME PqSubspaces/PqSubDim/PqCodes/
-    * PqLloydIters constants as the Spark plan. Subspace and in-subspace
-    * position come from integer bit ops on `pos` (exact in both engines);
-    * every distance is rounded to 6 before its argmin/rank. */
   /** The PQ train/encode chain as CTEs (subvals … codes/qtab) — shared by
     * the v7 and v15 oracles. Internal names are p-prefixed (pcent,
     * psubdb, passign) so the chain composes next to the IVF chain's
@@ -1413,6 +1396,10 @@ object VectorQueries {
        |${assignCte(fin, "qtab", filterQ = true, keepAll = true)}""".stripMargin
   }
 
+  /** PQ oracle generated from the SAME PqSubspaces/PqSubDim/PqCodes/
+    * PqLloydIters constants as the Spark plan. Subspace and in-subspace
+    * position come from integer bit ops on `pos` (exact in both engines);
+    * every distance is rounded to 6 before its argmin/rank. */
   private def pqOracle: String =
     s"""WITH $valsCte,
        |$pqChainCtes

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.MlQueries
@@ -13,11 +14,10 @@ import graft.queries.MlQueries
 class BpeSpec extends AnyFunSuite {
   import TestSpark._
 
-  /** Pure-Scala reference BPE: pair counts over distinct words weighted
-    * by frequency; argmax tie-broken by (count desc, left, right) under
-    * UTF-8 binary ordering (Spark's default string collation); greedy
-    * left-to-right non-overlapping merge application. No Spark types —
-    * written directly from the published algorithm. */
+  /** The merge table [[MlQueries.train]] learns from `words0`. */
+  private def learnMerges(words0: DataFrame, k: Int): Seq[(Int, String, String, Long)] =
+    MlQueries.train(words0, k)._1
+
   /** Symbol atoms are CODE POINTS, matching Spark's split(word, "") —
     * Java regex zero-width matches fall on code-point boundaries, so a
     * supplementary-plane char is ONE symbol; a per-Char (code unit)
@@ -26,6 +26,11 @@ class BpeSpec extends AnyFunSuite {
   private def symbols(w: String): Vector[String] =
     w.codePoints().toArray.toVector.map(cp => new String(Character.toChars(cp)))
 
+  /** Pure-Scala reference BPE: pair counts over distinct words weighted
+    * by frequency; argmax tie-broken by (count desc, left, right) under
+    * UTF-8 binary ordering (Spark's default string collation); greedy
+    * left-to-right non-overlapping merge application. No Spark types —
+    * written directly from the published algorithm. */
   private def refBpe(words: Seq[(String, Long)], k: Int): Seq[(Int, String, String, Long)] = {
     def utf8Lt(a: String, b: String): Boolean = {
       val x = a.getBytes("UTF-8"); val y = b.getBytes("UTF-8")
@@ -95,7 +100,7 @@ class BpeSpec extends AnyFunSuite {
     //   r4: no adjacent pairs remain anywhere -> exhausted at 3 merges
     import spark.implicits._
     val words = Seq(("aaab", 3L), ("ab", 2L)).toDF("word", "freq")
-    val got = MlQueries.learnMerges(words, 16)
+    val got = learnMerges(words, 16)
     val want = Seq((1, "a", "a", 6L), (2, "a", "b", 5L), (3, "aa", "ab", 3L))
     assert(got == want, s"got $got")
     // and the independent reference agrees with the hand computation
@@ -108,7 +113,7 @@ class BpeSpec extends AnyFunSuite {
     // adjacent pair is (𐀀, a) — a code-unit split would instead see the
     // broken pair (\uDC00, a) and a three-symbol word
     val w = "𐀀a"
-    val got = MlQueries.learnMerges(Seq((w, 3L)).toDF("word", "freq"), 1)
+    val got = learnMerges(Seq((w, 3L)).toDF("word", "freq"), 1)
     assert(got == refBpe(Seq((w, 3L)), 1), s"engine/reference diverged: $got")
     assert(got.head._2 == "𐀀",
       s"left symbol is not the full code point: ${got.head}")
@@ -118,7 +123,7 @@ class BpeSpec extends AnyFunSuite {
     import spark.implicits._
     // (x,y) and (b,a) both have count 4; (b,a) must win lexicographically
     val words = Seq(("xy", 4L), ("ba", 4L)).toDF("word", "freq")
-    val first = MlQueries.learnMerges(words, 1)
+    val first = learnMerges(words, 1)
     assert(first == Seq((1, "b", "a", 4L)), s"got $first")
   }
 

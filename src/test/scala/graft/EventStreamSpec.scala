@@ -413,6 +413,11 @@ class EventStreamSpec extends AnyFunSuite {
     q.stop()
   }
 
+  test("DSIR bucket weights train once per dir: a repeat call returns the same instance") {
+    import graft.queries.TextQueries
+    assert(TextQueries.dsirBucketWeights(spark, sf) eq TextQueries.dsirBucketWeights(spark, sf))
+  }
+
   test("streaming DSIR scoring equals batch t26 per doc; novel-token and NULL contracts hold") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -12,6 +12,9 @@ existing checkout of the base to use instead (it keeps its build between
 invocations). Each pair runs `perfbench/run.py` once on each side with the
 same seed (pair i uses seed + i), alternating which side goes first. Both
 sides get the run length from BENCHMARK.json unless `--seconds` is given.
+Each run's line shows how many units (rounds, drains) its window held, and
+the summary each side's median unit count: a median over few units moves
+when one more unit fits the window.
 
 For every end-to-end metric of BENCHMARK.json this prints each side's
 median and quartiles, how many pairs the change won (ties count for
@@ -40,7 +43,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def run_once(checkout, workload, seed, seconds, trace=0):
-    """The result line of one benchmark run, or None if it failed."""
+    """The result line of one benchmark run, or None if it failed. Its
+    `units` is the number of units the run measured, from the `units` field
+    of the report line before it (None when that line is missing)."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
@@ -48,7 +53,10 @@ def run_once(checkout, workload, seed, seconds, trace=0):
     lines = [l for l in p.stdout.splitlines() if l.strip()]
     if p.returncode != 0 or not lines:
         return None
-    return json.loads(lines[-1])
+    result = json.loads(lines[-1])
+    report = json.loads(lines[-2]).get("report", {}) if len(lines) > 1 else {}
+    result["units"] = report.get("units")
+    return result
 
 
 def quartiles(xs):
@@ -65,6 +73,10 @@ def summarize(workload, runs, metrics):
               for i, side in enumerate(("base", "change"))}
     print(f"\n{workload}: {len(pairs)} complete pairs of {len(runs)}; "
           f"failed or incorrect runs: base {failed['base']}, change {failed['change']}")
+    units = {side: [r[i]["units"] for r in pairs if r[i]["units"] is not None]
+             for i, side in enumerate(("base", "change"))}
+    print("median units per run: " + ", ".join(
+        f"{side} {statistics.median(u) if u else 'n/a'}" for side, u in units.items()))
     print(f"{'metric':<14}{'base med [q1, q3]':>30}{'change med [q1, q3]':>30}"
           f"{'wins':>8}  verdict")
     for m in metrics:
@@ -149,8 +161,8 @@ def main():
                     shown = ({k: round(v["value"], 4) for k, v in r["metrics"].items()}
                              if r else "run failed")
                     print(f"{w} pair {i + 1} seed {seed} {side}: "
-                          f"{'correct' if r and r['correct'] else 'NOT correct'} {shown}",
-                          flush=True)
+                          f"{'correct' if r and r['correct'] else 'NOT correct'} "
+                          f"units {r['units'] if r else '-'} {shown}", flush=True)
                 runs.append((got["base"], got["change"]))
             summarize(w, runs, bench["end_to_end"])
             if a.traced:
