@@ -12,9 +12,9 @@ package graft
   * latest entries, and bench_out.json always holds the full line. Per-rep
   * detail goes to stderr.
   *
-  * Measurement discipline: each query runs REPS times (default 3) and
-  * reports the median — BASELINE.md notes ±15 s run-to-run variance at
-  * sf0.1, so one-shot numbers mislead both builder and judge. Queries run
+  * Measurement discipline: each query's count() runs REPS times (default
+  * 3) and reports the median — BASELINE.md notes ±15 s run-to-run variance
+  * at sf0.1, so one-shot numbers mislead both builder and judge. Queries run
   * in dependency-aware groups: the shared text caches are warmed as their
   * own attributable entry, the d/t block runs while those caches are hot,
   * then the caches are RELEASED before the unrelated groups run (round 2
@@ -163,29 +163,10 @@ object Bench {
         SparkEntry.queries.filter { case (k, _) => sel(k) }
       case None => SparkEntry.queries
     }
-    // r19 optimization round (VERDICT r18 task 5, guide §1.4): count() as
-    // the timed action lets the optimizer prune columns and subtrees, so
-    // it undercounts output-side cost. The fix is a PARALLEL re-anchor,
-    // not a silent switch: every existing entry keeps its name, its
-    // count() action, and its methodology (so every anchor and every
-    // round-over-round comparison stays valid), and each query ADDITIONALLY
-    // reports a `noop_<name>` entry timed against the built-in no-op sink
-    // — "eagerly computes every column of every row and discards the
-    // result". Both actions run back-to-back per query (same cache/memo
-    // state, same host window), reps and median discipline identical.
-    // BASELINE_anchors.json has no anchors for the noop entries, so they
-    // take no recovery rep and no violation bar. SPARK_GRAFT_BENCH_NOOP=0
-    // restores the r18 entry set for A/B runs; the driver sets no env, so
-    // the contract run carries both measurement sets.
-    val noopAction = !sys.env.get("SPARK_GRAFT_BENCH_NOOP").contains("0")
+    // the timed action is count(), the one action every anchor in
+    // BASELINE_anchors.json and every round-over-round total was read with
     def run(names: Seq[String]): Seq[(String, Double)] =
-      names.flatMap { n =>
-        val counted = timed(n) { all(n)(spark, sfDir).count(); () }
-        if (!noopAction) Seq(counted)
-        else Seq(counted, timed(s"noop_$n") {
-          all(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        })
-      }
+      names.map(n => timed(n) { all(n)(spark, sfDir).count(); () })
 
     // The text/dedup queries share cached bases (tokens, shingles, LSH
     // candidates, verified Jaccard pairs, SimHash signatures). Materialize
@@ -221,41 +202,36 @@ object Bench {
     // driver artifact) — the same declining-reps signature the d1 codegen
     // warm-up retired. Touch each memo ONCE here, as its own attributable
     // entry, so every later rep measures the query and not the training.
-    // Default ON (the driver sets no env); SPARK_GRAFT_WARM_MODELS=0
-    // restores rep-1-pays-training for A/B runs. Runs right after the
-    // text BLOCK, while the shared caches are still pinned: BPE and the
-    // classifier featurizer both ride the tokenized-corpus bases, so
-    // training here is marginal model cost only (measured ~3 s cheaper
-    // than training before the block) — and before the vector block, so
-    // the quantizer stage plays the same role for v4+.
+    // Runs right after the text BLOCK, while the shared caches are still
+    // pinned: BPE and the classifier featurizer both ride the
+    // tokenized-corpus bases, so training here is marginal model cost only
+    // (measured ~3 s cheaper than training before the block) — and before
+    // the vector block, so the quantizer stage plays the same role for v4+.
     val modelStages = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    val warmModels =
-      if (sys.env.get("SPARK_GRAFT_WARM_MODELS").contains("0"))
-        Seq.empty[(String, Double)]
-      else {
-        val h0 = HostTelemetry.sample()
-        def stage(n: String, needed: Boolean)(body: => Unit): Unit =
-          if (needed) modelStages += n -> once("warm_model_memos")(body)
-        stage("bpe",
-          all.contains("t20_bpe_merges") || all.contains("t21_bpe_encode")) {
-          graft.queries.MlQueries.learnedMerges(spark, sfDir); ()
-        }
-        stage("classifier", all.contains("t19_quality_classifier")) {
-          graft.queries.MlQueries.fitted(spark, sfDir); ()
-        }
-        stage("quantizer", vecNames.nonEmpty) {
-          graft.queries.VectorQueries.quantizerRows(spark, sfDir); ()
-        }
-        if (modelStages.isEmpty) Seq.empty[(String, Double)]
-        else {
-          hostLog("warm_model_memos") =
-            HostTelemetry.Window(h0, HostTelemetry.sample())
-          val t = modelStages.map(_._2).sum
-          System.err.println(f"[bench] warm_model_memos             once  =$t%8.3f  (" +
-            modelStages.map { case (n, s) => f"$n=$s%.3f" }.mkString(",") + ")")
-          Seq("warm_model_memos" -> t)
-        }
+    val warmModels = {
+      val h0 = HostTelemetry.sample()
+      def stage(n: String, needed: Boolean)(body: => Unit): Unit =
+        if (needed) modelStages += n -> once("warm_model_memos")(body)
+      stage("bpe",
+        all.contains("t20_bpe_merges") || all.contains("t21_bpe_encode")) {
+        graft.queries.MlQueries.learnedMerges(spark, sfDir); ()
       }
+      stage("classifier", all.contains("t19_quality_classifier")) {
+        graft.queries.MlQueries.fitted(spark, sfDir); ()
+      }
+      stage("quantizer", vecNames.nonEmpty) {
+        graft.queries.VectorQueries.quantizerRows(spark, sfDir); ()
+      }
+      if (modelStages.isEmpty) Seq.empty[(String, Double)]
+      else {
+        hostLog("warm_model_memos") =
+          HostTelemetry.Window(h0, HostTelemetry.sample())
+        val t = modelStages.map(_._2).sum
+        System.err.println(f"[bench] warm_model_memos             once  =$t%8.3f  (" +
+          modelStages.map { case (n, s) => f"$n=$s%.3f" }.mkString(",") + ")")
+        Seq("warm_model_memos" -> t)
+      }
+    }
     // residency evidence (round-4 verdict ask): the d/t block reads parquet
     // checkpoints — bytes on disk, not evictable RAM. A future d-spike with
     // nonzero ckptBytes here is NOT a cache-residency regression.
@@ -399,14 +375,6 @@ object Bench {
     val qs = results.map { case (k, v) => s"${q(k)}:${f3(v)}" }.mkString("{", ",", "}")
     val errJson = errors.map(q).mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    // both totals, explicitly (the parallel-re-anchor contract): "value"
-    // stays the sum over ALL entries; these two keys split it by timed
-    // action so the old-action total remains directly comparable to
-    // r18-and-earlier rounds without re-deriving it from the map.
-    val totalCount = results.collect {
-      case (k, v) if !k.startsWith("noop_") => v }.sum
-    val totalNoop = results.collect {
-      case (k, v) if k.startsWith("noop_") => v }.sum
     // r16 verdict task 4: the driver's 2000-char stdout tail truncated
     // ~70 of 146 per-query entries out of BENCH_r16.json, leaving the 11
     // past-bar entries invisible in the driver artifact. Emit the
@@ -453,7 +421,7 @@ object Bench {
     // metric/value last ⇒ the truncation window always retains the total,
     // errors, and the newest (alphabetically-late) entries; the full
     // untruncated line lives in bench_out.json either way.
-    val line = s"""{"queries":$qs,"errors":$errJson,"sf":${q(sfDir)},"reps":$reps,"violations":$violations,"total_count_action":${f3(totalCount)},"total_noop_action":${f3(totalNoop)},"metric":"total","unit":"sec","value":${f3(total)}}"""
+    val line = s"""{"queries":$qs,"errors":$errJson,"sf":${q(sfDir)},"reps":$reps,"violations":$violations,"metric":"total","unit":"sec","value":${f3(total)}}"""
     // bench_out.json carries the FULL record: the stdout line PLUS warm's
     // per-stage attribution (r8 verdict ask). It lives here and not on
     // stdout because the driver keeps only the last ~2000 chars of stdout

@@ -97,7 +97,8 @@ object GenData {
     * task 7 — the skewed-fixture leg the uniform generator cannot
     * exercise): `src_k = floor(20·u⁴)` puts ≈47% of docs in src0 with a
     * power-law tail — the hot-domain shape a real crawl has and the
-    * input the AQE-skew/salting SCALING evidence (SkewProbe) measures.
+    * input the AQE-skew/salting evidence in BASELINE.md's SCALING
+    * section measures.
     * Everything else — dup structure, lang mix, text marginals, every
     * other table — stays byte-identical to the uniform variant. */
   def generate(spark: SparkSession, templateDir: String, outDir: String,

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local session the measuring and dumping mains run on (Bench,
-  * Verify, DumpPlans, SkewProbe, ProbeScale): `local[SPARK_GRAFT_CPUS]`
+  * Verify, DumpPlans): `local[SPARK_GRAFT_CPUS]`
   * (default 4) with as many shuffle partitions, UTC, the graft native
   * expressions and no UI. events.parquet carries TIMESTAMP(NANOS), which
   * Spark's vectorized reader rejects, so it reads as epoch-nanos long

@@ -73,7 +73,7 @@ object ScaleTechniques {
     * earlier partitions. Everything stays in codegen'd DataFrame ops (a
     * first cut walked partitions with mapPartitions over df.rdd; the
     * Row-boxing tax made it 2.4x SLOWER than the straggler it removes —
-    * measured, SkewProbe r18):
+    * measured r18, BASELINE.md SCALING):
     *
     *  - local position = monotonically_increasing_id minus the partition
     *    base (the id is partitionId·2^33 + index, assigned in sorted
@@ -91,10 +91,11 @@ object ScaleTechniques {
     * two range exchanges (observed r18), so the stateless form pays the
     * range shuffle twice — deliberately accepted over a persist-based
     * form whose cache lifecycle the caller would own. Measured
-    * consequence (SkewProbe rank legs, sf1-skew and 16x amplified): at
-    * local[32] the rewrite is SLOWER in wall clock than the hash window
-    * (~1.9x at 9M rows / 47%-hot), because a single-task in-memory sort
-    * of a few million rows is cheap relative to an extra full-data pass.
+    * consequence (BASELINE.md SCALING, rank-recovery legs, sf1-skew and
+    * 16x amplified): at local[32] the rewrite is SLOWER in wall clock than
+    * the hash window (~1.9x at 9M rows / 47%-hot), because a single-task
+    * in-memory sort of a few million rows is cheap relative to an extra
+    * full-data pass.
     * The rewrite's real claim is the bound, not local wall time: max
     * partition = N/P regardless of skew, where the hash window's hot
     * partition (47% of the data in ONE task) stops fitting executor

@@ -41,13 +41,11 @@ object Snapshot {
     * — one epoch, bumped on any build change, is the safe contract.) */
   private val logicEpoch = "e18a" // r18: repartition-width builds; fps derives from toks
 
-  /** Escape hatch for dev loops: -Dgraft.snapshot.reuse=false (or env
-    * GRAFT_SNAPSHOT_REUSE=false) forces every build to run, ignoring and
-    * overwriting on-disk snapshots. The driver never sets it. */
+  /** Escape hatch for dev loops: -Dgraft.snapshot.reuse=false forces
+    * every build to run, ignoring and overwriting on-disk snapshots. The
+    * driver never sets it. */
   private def reuseEnabled: Boolean =
-    sys.props.get("graft.snapshot.reuse")
-      .orElse(sys.env.get("GRAFT_SNAPSHOT_REUSE"))
-      .forall(_.toLowerCase != "false")
+    sys.props.get("graft.snapshot.reuse").forall(_.toLowerCase != "false")
 
   /** One registered snapshot: its promise, and the fixture stamp its
     * build or adoption ran under (null until the winner has computed it). */

@@ -41,9 +41,8 @@ object TextQueries {
   /** Registry of every DataFrame this module persists. Since round 9 the
     * text pipeline registers NOTHING here — every shared base, including
     * the tokenized corpus, is a parquet checkpoint (see below), so there is
-    * no executor memory to pin. The release API stays: callers
-    * (Bench, long-lived sessions) invoke it unconditionally, and a future
-    * RAM-cached base would re-enter the same lifecycle. */
+    * no executor memory to pin. A future RAM-cached base would re-enter
+    * the same lifecycle through [[releaseCaches]]. */
   private val cacheRegistry =
     scala.collection.mutable.ArrayBuffer[DataFrame]()
 
@@ -71,10 +70,15 @@ object TextQueries {
   def checkpointBytes: Long = graft.plans.Snapshot.bytes
 
   /** Unpersist every cache this module created (blocking=false: eviction
-    * proceeds in the background, callers don't wait). Idempotent. */
-  def releaseCaches(): Unit = cacheRegistry.synchronized {
-    cacheRegistry.foreach(_.unpersist(blocking = false))
-    cacheRegistry.clear()
+    * proceeds in the background, callers don't wait) and drop the DSIR
+    * weight memo, so the next [[dsirBucketWeights]] recounts the corpus as
+    * it now stands (a dir grown in place gets fresh weights). Idempotent. */
+  def releaseCaches(): Unit = {
+    cacheRegistry.synchronized {
+      cacheRegistry.foreach(_.unpersist(blocking = false))
+      cacheRegistry.clear()
+    }
+    dsirModels.clear()
   }
 
   /** Live registered-cache count (spec hook). */
@@ -1783,7 +1787,8 @@ object TextQueries {
     * WindowGroupLimit pushdown (the t24 pin), so each domain's partition
     * retains K rows before the exchange where the filter form is used.
     * Skewed domains (one host = half the crawl) are exactly why the cap
-    * exists; the salting/AQE-skew toolbox applies to the window shuffle. */
+    * exists; the salting/AQE-skew toolbox applies to the window shuffle
+    * (BASELINE.md's SCALING section measures t29 on the skewed fixture). */
   def t29DomainCap(spark: SparkSession, dir: String): DataFrame =
     t29DomainCapWith(spark, dir, DomainCap)
 
@@ -1796,22 +1801,15 @@ object TextQueries {
       cap: Long): DataFrame = {
     val w = Window.partitionBy(col("source"))
       .orderBy(col("priority"), col("doc_id"))
-    t29Input(spark, dir)
-      .withColumn("cap_rank", row_number().over(w).cast("bigint"))
-      .select(col("doc_id"), col("source"), col("cap_rank"),
-        (col("cap_rank") <= cap).cast("bigint").as("kept"))
-      .orderBy("doc_id")
-  }
-
-  /** t29's ranked universe (doc, source, derived priority) — shared with
-    * SkewProbe's rank-recovery leg so the probe measures the REAL query's
-    * input, not a lookalike. */
-  private[graft] def t29Input(spark: SparkSession, dir: String): DataFrame = {
     val pr = conv(substring(
         md5(concat(lit("cap:"), col("doc_id").cast("string"))), 1, 8), 16, 10)
       .cast("bigint")
     graft.plans.Tables.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"), pr.as("priority"))
+      .withColumn("cap_rank", row_number().over(w).cast("bigint"))
+      .select(col("doc_id"), col("source"), col("cap_rank"),
+        (col("cap_rank") <= cap).cast("bigint").as("kept"))
+      .orderBy("doc_id")
   }
 
   /** t30's per-sequence token budget (a short fixture-visible context
@@ -2136,9 +2134,10 @@ object TextQueries {
 
   /** The streaming gate's model state: t26's per-bucket weight
     * w(b) = (c_t+1)·(N_c+B) − (c_c+1)·(N_t+B) as a B-length array —
-    * collected once per dataset per JVM (the t20/t19 model-state
-    * discipline: bounded driver scalars are legitimate for MODEL state,
-    * never for data; B is fixed, so this stays 10k longs at 100 TB).
+    * collected once per dataset until [[releaseCaches]] (the t20/t19
+    * model-state discipline: bounded driver scalars are legitimate for
+    * MODEL state, never for data; B is fixed, so this stays 10k longs at
+    * 100 TB).
     * An untouched bucket (c_c = c_t = 0) naturally carries the add-one
     * weight N_c − N_t — the OOV leg needs no special case: novel
     * arrival tokens hash into buckets like any other. */

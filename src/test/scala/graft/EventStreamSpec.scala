@@ -418,6 +418,28 @@ class EventStreamSpec extends AnyFunSuite {
     assert(TextQueries.dsirBucketWeights(spark, sf) eq TextQueries.dsirBucketWeights(spark, sf))
   }
 
+  test("DSIR bucket weights: releaseCaches lets a dir grown in place recount its corpus") {
+    import org.apache.spark.sql.functions.col
+    import graft.queries.TextQueries
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val dir = java.nio.file.Files.createTempDirectory("graft-dsir-grown").toString
+    docs.filter(col("doc_id") % 2 === 0).write.parquet(s"$dir/documents.parquet")
+    val before = TextQueries.dsirBucketWeights(spark, dir)
+    docs.filter(col("doc_id") % 2 === 1)
+      .write.mode("append").parquet(s"$dir/documents.parquet")
+    graft.plans.Tables.invalidate(s"$dir/documents.parquet")
+    graft.plans.Snapshot.dropStale(dir)
+    TextQueries.releaseCaches()
+    val after = TextQueries.dsirBucketWeights(spark, dir)
+    val kept = after eq before
+    assert(!kept, "releaseCaches kept the weights of the corpus as first read")
+    // the reference: a fresh dir holding the grown corpus from the start
+    val fresh = java.nio.file.Files.createTempDirectory("graft-dsir-fresh").toString
+    spark.read.parquet(s"$dir/documents.parquet").write.parquet(s"$fresh/documents.parquet")
+    assert(after.sameElements(TextQueries.dsirBucketWeights(spark, fresh)))
+    assert(!after.sameElements(before), "the grown corpus must count differently")
+  }
+
   test("streaming DSIR scoring equals batch t26 per doc; novel-token and NULL contracts hold") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

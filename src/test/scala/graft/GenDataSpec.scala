@@ -116,7 +116,7 @@ class GenDataSpec extends AnyFunSuite {
   }
 
   test("skewedSource variant: hot-domain histogram, everything else identical") {
-    // the SkewProbe fixture's contract (r17): skew changes ONLY the
+    // the skewed fixture's contract (r17): skew changes ONLY the
     // documents source column's histogram — a hot domain holding ~half
     // the corpus with a power-law tail — so a uniform-vs-skew
     // measurement difference is attributable to the key distribution
