@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,13 +31,23 @@ import org.apache.spark.sql.functions._
   * The audit is oracled as is: `x_compact_audit`
   * ([[graft.queries.ExportQueries.xCompactAudit]]) runs this function on
   * a fixed arrival batch and returns its `audit`, which DuckDB recomputes.
-  * Both compactions count their tiers in one action over the pinned tier
-  * frames (`Compaction.audit`).
+  *
+  * Two forms, one set of tiers. A batch whose rows and corpus hits fit
+  * `Compaction.LocalRows` runs on the driver ([[compactLocal]]): ONE
+  * bounded collect of a tagged union — the arrivals with their fp and
+  * band keys, the batch fps found in the fp table, the batch (band, bkey)
+  * pairs found in the band table — then the four tiers as set logic over
+  * those rows. The fps and band keys are computed by Spark, by the same
+  * native expressions as the gates. A larger batch runs the cascade in
+  * Spark ([[compactSpark]]): pinned tier frames, one audit action
+  * (`Compaction.audit`), deltas staged on first access.
   *
   * Scale shape: every step is proportional to the ARRIVAL batch, never
-  * the corpus — per-row fingerprints and band keys (zero shuffle), one
-  * batch-keyed window, two anti-join probes of bucketed corpus tables,
-  * one batch-sized band self-join. The existing corpus is never rescanned
+  * the corpus. The driver form probes the fp and band tables with one
+  * semi-join each at the batch's own keys. The Spark form computes
+  * per-row fingerprints and band keys (zero shuffle), one batch-keyed
+  * window, two anti-join probes of bucketed corpus tables and one
+  * batch-sized band self-join. The existing corpus is never rescanned
   * or rewritten: survivors and their artifacts APPEND (at 100 TB,
   * partition-appends to the bucketed fp/band tables). */
 object CorpusCompaction {
@@ -59,45 +69,135 @@ object CorpusCompaction {
     * the fingerprint append lands, a recomputed survivor set sees its own
     * docs in the corpus fp table and goes empty, so the band delta
     * appends nothing and the band gate silently never learns the batch).
-    * The API closes that mode by construction: the first access to ANY
-    * delta snapshots ALL THREE together (`localCheckpoint(true)` cuts the
-    * file lineage), so no append the caller can issue afterwards — and no
-    * append can precede a delta read — invalidates a sibling delta.
-    * Audit-only consumers never touch the deltas and pay nothing.
-    * EventStreamSpec's soak pins the loop end to end. */
+    * The API closes that mode by construction. The driver form's deltas
+    * are local rows with no file lineage at all. The Spark form's first
+    * access to ANY delta snapshots ALL THREE together
+    * (`localCheckpoint(true)` cuts the file lineage), so no append the
+    * caller can issue afterwards — and no append can precede a delta
+    * read — invalidates a sibling delta. Audit-only consumers never touch
+    * the deltas and pay nothing. EventStreamSpec's soak pins the loop end
+    * to end. */
   final class Compacted private[pipeline] (
       corpusBase: DataFrame, fpsBase: DataFrame, bandsBase: DataFrame,
       val audit: DataFrame,
-      appendedPlan: DataFrame, newFpsPlan: DataFrame,
-      newBandsPlan: DataFrame,
+      stage: () => (DataFrame, DataFrame, DataFrame),
       pinnedBases: Seq[DataFrame]) {
     // one staging point for all three deltas: snapshotting them together
     // is what makes the first append unable to corrupt a later read
-    private lazy val staged: (DataFrame, DataFrame, DataFrame) =
-      (appendedPlan.localCheckpoint(true),
-        newFpsPlan.localCheckpoint(true),
-        newBandsPlan.localCheckpoint(true))
-    /** Survivor-row delta (lineage-free snapshot, safe to append back). */
+    private lazy val staged = stage()
+    /** Survivor-row delta (lineage-free, safe to append back). */
     lazy val appended: DataFrame = staged._1
-    /** Fingerprint-table delta (lineage-free snapshot). */
+    /** Fingerprint-table delta (lineage-free). */
     lazy val newFingerprints: DataFrame = staged._2
-    /** Band-table delta (lineage-free snapshot). */
+    /** Band-table delta (lineage-free). */
     lazy val newBands: DataFrame = staged._3
     /** Post-state unions, for consumers that want one frame; built over
       * the staged deltas so they too survive an append-back. */
     lazy val corpus: DataFrame = corpusBase.unionByName(appended)
     lazy val fingerprints: DataFrame = fpsBase.unionByName(newFingerprints)
     lazy val bands: DataFrame = bandsBase.unionByName(newBands)
-    /** Drop the survivor pin backing the delta plans. Call once the
-      * artifacts are materialized (written, or superseded by the next
-      * round): an incremental loop that never releases accumulates one
-      * pinned batch per round for the session lifetime (r11 advice).
-      * Deltas staged later still evaluate correctly — they just recompute
-      * their cascade uncached. */
+    /** Drop the survivor pin backing the Spark form's delta plans (the
+      * driver form pins nothing). Call once the artifacts are
+      * materialized (written, or superseded by the next round): an
+      * incremental loop that never releases accumulates one pinned batch
+      * per round for the session lifetime (r11 advice). Deltas staged
+      * later still evaluate correctly — they just recompute their
+      * cascade uncached. */
     def release(): Unit = pinnedBases.foreach(_.unpersist(blocking = false))
   }
 
+  private val Kills = Seq("batch_exact", "corpus_exact", "corpus_near", "batch_near")
+
   def compact(arrivals: DataFrame, corpus: DataFrame,
+      corpusFps: DataFrame, corpusBands: DataFrame): Compacted =
+    localBatch(arrivals, corpusFps, corpusBands) match {
+      case Some(rows) => compactLocal(arrivals, corpus, corpusFps, corpusBands, rows)
+      case None => compactSpark(arrivals, corpus, corpusFps, corpusBands)
+    }
+
+  /** `arrivals` with the exact gate's fp and the band gate's key array. */
+  private def keyed(arrivals: DataFrame): DataFrame = arrivals
+    .withColumn("fp", graft.ops.Fingerprint.col(col("text")))
+    .withColumn("bk_arr", graft.queries.TextQueries.bandKeysCol(col("text")))
+
+  /** The rows [[compactLocal]] runs on, when there are at most
+    * `Compaction.LocalRows` of them: a union tagged 0 for each arrival
+    * (its columns as `row`, with `fp` and `bk_arr`), 1 for each batch fp
+    * found in `corpusFps`, 2 for each batch (band, bkey) pair found in
+    * `corpusBands`. None when there are more. */
+  private[graft] def localBatch(arrivals: DataFrame, corpusFps: DataFrame,
+      corpusBands: DataFrame): Option[Array[Row]] = {
+    val batch = keyed(arrivals)
+    val fpHits = batch.select(col("fp"))
+      .join(corpusFps.select(col("fp")), Seq("fp"), "left_semi")
+    val bandHits = batch
+      .select(posexplode(col("bk_arr")).as(Seq("band", "bkey")))
+      .filter(col("band") < graft.queries.TextQueries.Bands)
+      .join(corpusBands.select(col("band"), col("bkey")), Seq("band", "bkey"), "left_semi")
+    val rows = batch.select(struct(arrivals.columns.toIndexedSeq.map(col): _*).as("row"),
+      col("fp"), col("bk_arr"))
+    val tagged = Seq(rows, fpHits, bandHits).zipWithIndex
+      .map { case (df, i) => df.withColumn("tag", lit(i)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    graft.plans.BoundedCollect(tagged, Compaction.LocalRows)
+  }
+
+  /** The four tiers over [[localBatch]]'s rows, each as the Spark form
+    * decides it:
+    *   1. the least doc_id of each fp stays (null fps are one group);
+    *   2. an fp found in the fp table dies (a null fp is never found);
+    *   3. a doc whose key at band b < `Bands` was found with band b dies
+    *      (an empty key array passes);
+    *   4. a doc dies when a lesser doc_id among tier 3's survivors shares
+    *      one of its (band, bkey) pairs.
+    * The deltas are local rows under the Spark form's schemas. */
+  private def compactLocal(arrivals: DataFrame, corpus: DataFrame,
+      corpusFps: DataFrame, corpusBands: DataFrame, rows: Array[Row]): Compacted = {
+    import scala.jdk.CollectionConverters._
+    final case class Doc(row: Row, id: Long, fp: String, keys: Seq[(Int, String)])
+    val idAt = arrivals.schema.fieldIndex("doc_id")
+    val byTag = rows.groupBy(_.getAs[Int]("tag")).withDefaultValue(Array.empty)
+    val docs = byTag(0).toSeq.map { r =>
+      val row = r.getAs[Row]("row")
+      Doc(row, row.getAs[Number](idAt).longValue, r.getAs[String]("fp"),
+        r.getAs[Seq[String]]("bk_arr").zipWithIndex.map(_.swap))
+    }
+    val fpHits = byTag(1).map(_.getAs[String]("fp")).toSet
+    val bandHits = byTag(2).map(r => (r.getAs[Int]("band"), r.getAs[String]("bkey"))).toSet
+
+    val firsts = docs.indices.groupBy(i => docs(i).fp).values
+      .map(_.minBy(i => docs(i).id)).toSet
+    val batchUnique = docs.indices.filter(firsts).map(docs)
+    val pastExact = batchUnique.filterNot(d => d.fp != null && fpHits(d.fp))
+    val pastNear = pastExact.filterNot(_.keys.exists(bandHits))
+    val least = pastNear.flatMap(d => d.keys.map(_ -> d.id))
+      .groupMapReduce(_._1)(_._2)(math.min)
+    val survivors = pastNear.filterNot(d => d.keys.exists(k => least(k) < d.id))
+
+    val spark = arrivals.sparkSession
+    val batch = keyed(arrivals)
+    def local(schema: org.apache.spark.sql.types.StructType, rs: Seq[Row]) =
+      spark.createDataFrame(rs.asJava, schema)
+    val appended = local(arrivals.schema, survivors.map(_.row))
+    val newFps = local(batch.select(col("doc_id"), col("fp")).schema,
+      survivors.map(d => Row(d.row.get(idAt), d.fp)))
+    val newBands = local(batch.select(col("doc_id"),
+        posexplode(col("bk_arr")).as(Seq("band", "bkey"))).schema,
+      survivors.flatMap(d => d.keys.map { case (b, k) => Row(d.row.get(idAt), b, k) }))
+    new Compacted(
+      corpus,
+      corpusFps.select("doc_id", "fp"),
+      corpusBands.select("doc_id", "band", "bkey"),
+      Compaction.localAudit(spark,
+        Seq(docs, batchUnique, pastExact, pastNear, survivors).map(_.size), Kills),
+      () => (appended, newFps, newBands),
+      pinnedBases = Nil)
+  }
+
+  /** The cascade in Spark, for a batch above `Compaction.LocalRows`: each
+    * tier frame pinned, the audit in one action, the deltas staged on
+    * first access. */
+  private[graft] def compactSpark(arrivals: DataFrame, corpus: DataFrame,
       corpusFps: DataFrame, corpusBands: DataFrame): Compacted = {
     val cols = arrivals.columns
 
@@ -145,8 +245,7 @@ object CorpusCompaction {
     // survivors stays pinned on success: the returned deltas ride it; the
     // upstream tier pins have served the audit either way
     val audit = try Compaction.audit(
-      Seq(arrivals, batchUnique, pastExact, pastNear, survivors),
-      Seq("batch_exact", "corpus_exact", "corpus_near", "batch_near"))
+      Seq(arrivals, batchUnique, pastExact, pastNear, survivors), Kills)
     catch { case e: Throwable => survivors.unpersist(blocking = false); throw e }
     finally Seq(batchUnique, pastExact, pastNear).foreach(_.unpersist(blocking = false))
 
@@ -155,7 +254,8 @@ object CorpusCompaction {
       corpusFps.select("doc_id", "fp"),
       corpusBands.select("doc_id", "band", "bkey"),
       audit,
-      appended, newFps, newBands,
+      () => (appended.localCheckpoint(true), newFps.localCheckpoint(true),
+        newBands.localCheckpoint(true)),
       pinnedBases = Seq(survivors))
   }
 }

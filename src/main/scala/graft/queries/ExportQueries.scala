@@ -237,6 +237,16 @@ object ExportQueries {
     * the fold production runs — CompactionSpec pins tier semantics, the
     * oracle pins the numbers. */
   def xCompactAudit(spark: SparkSession, dir: String): DataFrame = {
+    val (arrivals, d, fps, bands) = xCompactInputs(spark, dir)
+    val compacted = graft.pipeline.CorpusCompaction.compact(arrivals, d, fps, bands)
+    compacted.release() // the audit is local rows; no delta is read
+    compacted.audit
+  }
+
+  /** [[xCompactAudit]]'s arrival batch and the corpus, fp table and band
+    * table it is compacted against. */
+  private[graft] def xCompactInputs(spark: SparkSession, dir: String)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     import spark.implicits._
     val d = graft.plans.Tables.table(spark, dir, "documents")
       .select("doc_id", "text", "lang")
@@ -248,10 +258,7 @@ object ExportQueries {
         .select((col("doc_id") + 4000000L).as("doc_id"),
           regexp_replace(col("text"), "^\\S+\\s+", "").as("text"), col("lang")))
       .unionByName(novels)
-    val compacted = graft.pipeline.CorpusCompaction.compact(arrivals, d,
-      TextQueries.cachedFps(spark, dir), TextQueries.corpusBandTable(spark, dir))
-    compacted.release() // the audit is local rows; the survivor pin is unused
-    compacted.audit
+    (arrivals, d, TextQueries.cachedFps(spark, dir), TextQueries.corpusBandTable(spark, dir))
   }
 
   /** Seed + shard count for the export shuffle under the FIXTURE policy

@@ -125,16 +125,8 @@ object MlQueries {
   /** The (features, label) rows of a training frame when it has at most
     * [[ClassifierLocalRows]] of them, None when it has more. */
   private[graft] def localSample(train: DataFrame): Option[Seq[(MlVector, Double)]] =
-    boundedCollect(train.select("features", "label"), ClassifierLocalRows)
+    graft.plans.BoundedCollect(train.select("features", "label"), ClassifierLocalRows)
       .map(_.toSeq.map(r => (r.getAs[MlVector](0), r.getDouble(1))))
-
-  /** `df`'s rows when it has at most `n` of them, None when it has more:
-    * one `limit(n + 1)` collect, so above the bound it stops once it
-    * holds n + 1 rows. */
-  private def boundedCollect(df: DataFrame, n: Int): Option[Array[Row]] = {
-    val rows = df.limit(n + 1).collect()
-    if (rows.length > n) None else Some(rows)
-  }
 
   /** MLlib's distributed fit, for a sample above [[ClassifierLocalRows]].
     * repartition(1) + cache before fit (r17 verdict task 3): each of
@@ -448,7 +440,7 @@ object MlQueries {
     * over DISTINCT words weighted by frequency.
     *
     * The word table is atomized in Spark ([[symsCol]]) and pinned once.
-    * When it has at most [[BpeLocalWords]] rows (one `limit` collect
+    * When it has at most [[BpeLocalWords]] rows (one bounded collect
     * tells, exactly), the loop runs over those rows on the driver
     * ([[trainLocal]]): each Spark round is a shuffle job plus a 1-row
     * collect, and on a model-sized table those job launches, not the
@@ -483,7 +475,7 @@ object MlQueries {
     * [[BpeLocalWords]] of them, None when it has more. */
   private[graft] def localWords(words: DataFrame)
       : Option[Seq[(String, Seq[String], Long)]] =
-    boundedCollect(words, BpeLocalWords)
+    graft.plans.BoundedCollect(words, BpeLocalWords)
       .map(_.toSeq.map(r => (r.getString(0), r.getSeq[String](1), r.getLong(2))))
 
   /** The merge loop over local rows: the pair counts are recounted each

@@ -85,16 +85,20 @@ object VectorQueries {
 
   /** The greater `vec_id` of every near pair within a cell of `assigned`
     * (vec_id, embedding, cell, nrm): the pairwise drop set of v8 and of
-    * [[graft.pipeline.VectorCompaction.compact]]'s intra-batch tier. The
-    * id order is tested before the cosine, so each pair is scored once. */
-  private[graft] def withinCellDrops(assigned: DataFrame): DataFrame = {
+    * [[graft.pipeline.VectorCompaction.compact]]'s intra-batch tier. */
+  private[graft] def withinCellDrops(assigned: DataFrame): DataFrame =
+    withinCellPairs(assigned).select(col("vec_b").as("vec_id")).distinct()
+
+  /** Every near pair (vec_a < vec_b) within a cell of `assigned`. The id
+    * order is tested before the cosine, so each pair is scored once. */
+  private[graft] def withinCellPairs(assigned: DataFrame): DataFrame = {
     val a = assigned.select(col("vec_id").as("vec_a"), col("embedding").as("ea"),
       col("cell"), col("nrm").as("na"))
     val b = assigned.select(col("vec_id").as("vec_b"), col("embedding").as("eb"),
       col("cell").as("cell_b"), col("nrm").as("nb"))
     a.join(b, col("vec_a") < col("vec_b") &&
         semNear(col("cell"), col("ea"), col("na"), col("cell_b"), col("eb"), col("nb")))
-      .select(col("vec_b").as("vec_id")).distinct()
+      .select("vec_a", "vec_b")
   }
 
   /** Per-query top-k: rank each `qid`'s rows by `score` (ties by `vid`
@@ -858,12 +862,20 @@ object VectorQueries {
     * recomputes both kill tiers over the shared Lloyd chain, so the
     * oracle checks the fold path the batch pipeline runs, not a copy. */
   def xVcompactAudit(spark: SparkSession, dir: String): DataFrame = {
+    val compacted = graft.pipeline.VectorCompaction
+      .compact(xVcompactArrivals(spark, dir), corpusCellIndex(spark, dir), quantizerRows(spark, dir))
+    compacted.release() // the audit is local rows; the delta is not read
+    compacted.audit
+  }
+
+  /** [[xVcompactAudit]]'s arrival batch. */
+  private[graft] def xVcompactArrivals(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
     def neg(c: Column): Column = transform(c, x => -x)
     def nudgedNeg(c: Column): Column = concat(
       array((element_at(c, 1).cast("double") * -1.01).cast("float")),
       transform(slice(c, lit(2), size(c) - 1), x => -x))
-    val arrivals = e.filter(col("vec_id") % 45 === 0)
+    e.filter(col("vec_id") % 45 === 0)
       .select((col("vec_id") + 5000000L).as("vec_id"), col("embedding"))
       .unionByName(e.filter(col("vec_id") % 50 === 3)
         .select((col("vec_id") + 6000000L).as("vec_id"),
@@ -874,10 +886,6 @@ object VectorQueries {
       .unionByName(e.filter(col("vec_id") % 100 === 7)
         .select((col("vec_id") + 8000000L).as("vec_id"),
           nudgedNeg(col("embedding")).as("embedding")))
-    val compacted = graft.pipeline.VectorCompaction
-      .compact(arrivals, corpusCellIndex(spark, dir), quantizerRows(spark, dir))
-    compacted.release() // the audit is local rows; the survivor pin is unused
-    compacted.audit
   }
 
   /** v16's imbalance alert bar: a cell holding more than twice its fair

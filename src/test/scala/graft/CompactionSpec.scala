@@ -223,4 +223,242 @@ class CompactionSpec extends AnyFunSuite {
         s"a failed $what left a tier pinned")
     }
   }
+
+  /** A frame's rows as comparable, sorted values. */
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().toSeq.map(_.toSeq.map {
+      case s: scala.collection.Seq[_] => s.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted
+
+  private def sameFrame(a: DataFrame, b: DataFrame, what: String): Unit = {
+    assert(a.schema == b.schema, s"$what: schemas differ")
+    assert(rowsOf(a) == rowsOf(b), s"$what: rows differ")
+  }
+
+  private def sameCorpusResult(local: CorpusCompaction.Compacted,
+      viaSpark: CorpusCompaction.Compacted, what: String): Unit = {
+    sameFrame(local.audit, viaSpark.audit, s"$what audit")
+    sameFrame(local.appended, viaSpark.appended, s"$what appended")
+    sameFrame(local.newFingerprints, viaSpark.newFingerprints, s"$what newFingerprints")
+    sameFrame(local.newBands, viaSpark.newBands, s"$what newBands")
+  }
+
+  private def isLocal(df: DataFrame): Boolean = df.queryExecution.analyzed
+    .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  test("each compaction runs on the driver up to LocalRows collected rows and in Spark above") {
+    import graft.pipeline.VectorCompaction
+    import graft.queries.VectorQueries
+    val bound = graft.pipeline.Compaction.LocalRows
+    val (corpus, fps, bands) = artifacts()
+    // a null text has a null fp and no band keys: one collected row each
+    def texts(n: Int) = spark.range(n).select((col("id") + 9600000L).as("doc_id"),
+      lit(null).cast("string").as("text"), lit("en").as("lang"))
+    assert(CorpusCompaction.localBatch(texts(bound), fps, bands).map(_.length).contains(bound))
+    assert(CorpusCompaction.localBatch(texts(bound + 1), fps, bands).isEmpty)
+    val at = CorpusCompaction.compact(texts(bound), corpus, fps, bands)
+    val over = CorpusCompaction.compact(texts(bound + 1), corpus, fps, bands)
+    try {
+      assert(isLocal(at.appended) && !isLocal(over.appended))
+      // null fps are one group: its least doc_id is the one survivor
+      assert(rowsOf(at.audit) == Seq(s"$bound|${bound - 1}|0|0|0|1"))
+      assert(rowsOf(over.audit) == Seq(s"${bound + 1}|$bound|0|0|0|1"))
+      sameCorpusResult(at, CorpusCompaction.compactSpark(texts(bound), corpus, fps, bands), "at the bound")
+    } finally { at.release(); over.release() }
+
+    // a null embedding is collected once and passed once by the gate; an
+    // exact copy of a corpus vector once, as the gate kills it
+    val cents = VectorQueries.quantizerRows(spark, sf)
+    val index = VectorQueries.corpusCellIndex(spark, sf)
+    val nulls = spark.range(bound / 2).select((col("id") + 9600000L).as("vec_id"),
+      lit(null).cast("array<float>").as("embedding"))
+    val copy = spark.read.parquet(s"$sf/embeddings.parquet").filter(col("vec_id") === 13L)
+      .select(lit(9700000L).as("vec_id"), col("embedding"))
+    assert(VectorCompaction.localBatch(nulls, index, cents).map(_.length).contains(bound))
+    assert(VectorCompaction.localBatch(nulls.unionByName(copy), index, cents).isEmpty)
+    val vAt = VectorCompaction.compact(nulls, index, cents)
+    val vOver = VectorCompaction.compact(nulls.unionByName(copy), index, cents)
+    try {
+      assert(isLocal(vAt.appended) && !isLocal(vOver.appended))
+      assert(rowsOf(vAt.audit) == Seq(s"${bound / 2}|0|0|${bound / 2}"))
+      assert(rowsOf(vOver.audit) == Seq(s"${bound / 2 + 1}|1|0|${bound / 2}"))
+    } finally { vAt.release(); vOver.release() }
+  }
+
+  test("on the oracled fixtures both compaction forms give the same audit and deltas") {
+    import graft.pipeline.VectorCompaction
+    import graft.queries.{ExportQueries, VectorQueries}
+    val (arrivals, d, fps, bands) = ExportQueries.xCompactInputs(spark, sf)
+    val local = CorpusCompaction.compact(arrivals, d, fps, bands)
+    val viaSpark = CorpusCompaction.compactSpark(arrivals, d, fps, bands)
+    try {
+      assert(isLocal(local.appended))
+      // the fixture kills in every tier
+      assert(local.audit.collect()(0).toSeq.forall(_.asInstanceOf[Long] > 0), rowsOf(local.audit))
+      sameCorpusResult(local, viaSpark, "x_compact_audit")
+    } finally { local.release(); viaSpark.release() }
+
+    val (vecs, index, cents) = (VectorQueries.xVcompactArrivals(spark, sf),
+      VectorQueries.corpusCellIndex(spark, sf), VectorQueries.quantizerRows(spark, sf))
+    val vLocal = VectorCompaction.compact(vecs, index, cents)
+    val vSpark = VectorCompaction.compactSpark(vecs, index, cents)
+    try {
+      assert(isLocal(vLocal.appended))
+      assert(vLocal.audit.collect()(0).toSeq.forall(_.asInstanceOf[Long] > 0), rowsOf(vLocal.audit))
+      sameFrame(vLocal.audit, vSpark.audit, "x_vcompact_audit audit")
+      sameFrame(vLocal.appended, vSpark.appended, "x_vcompact_audit appended")
+    } finally { vLocal.release(); vSpark.release() }
+  }
+
+  test("degenerate batches: both forms agree, and every delta appends back into the dir it was read from") {
+    import spark.implicits._
+    val seedDocs = Seq(
+      (1L, "the aardwolf and the bontebok walk to the edge of the pan and the " +
+        "civet is resting in the reeds while the duiker and the eland " +
+        "drink from the pool in the shade of the old acacia by the track", "en"),
+      (2L, "a heron is standing in the marsh and the ibis is wading to the " +
+        "bank of the stream while a jacana steps on the lily", "en"))
+    val near = seedDocs(0)._2.split("\\s+", 2).last
+    val novel = "plugh xyzzy grault garply waldo fred thud plugh xyzzy grault"
+    val cases: Seq[(String, Seq[(Long, String, String)])] = Seq(
+      "an empty batch" -> Nil,
+      "a null text" -> Seq((9800001L, null, "en"), (9800002L, novel, "en")),
+      "texts under 3 tokens" -> Seq((9800001L, "two words", "en"), (9800002L, "one", "en"),
+        (9800003L, "two words", "en")),
+      "two arrivals with one fp" -> Seq((9800002L, novel, "en"), (9800001L, s" ${novel.toUpperCase} ", "en")),
+      "a batch in which every row dies" -> Seq((9800001L, seedDocs(0)._2, "en"),
+        (9800002L, near, "en"), (9800003L, seedDocs(1)._2, "en"), (9800004L, seedDocs(1)._2, "en")))
+    val root = java.nio.file.Files.createTempDirectory("graft-compact-degenerate")
+    try cases.zipWithIndex.foreach { case ((what, batch), i) =>
+      val results = Seq("local", "spark").map { form =>
+        val dir = s"$root/$i-$form"
+        val seed = seedDocs.toDF("doc_id", "text", "lang")
+        seed.write.parquet(s"$dir/corpus")
+        seed.select(col("doc_id"), graft.ops.Fingerprint.col(col("text")).as("fp"))
+          .write.parquet(s"$dir/fps")
+        seed.select(col("doc_id"),
+          posexplode(TextQueries.bandKeysCol(col("text"))).as(Seq("band", "bkey")))
+          .write.parquet(s"$dir/bands")
+        batch.toDF("doc_id", "text", "lang").write.parquet(s"$dir/arrivals")
+        def read(t: String) = spark.read.parquet(s"$dir/$t")
+        val run = if (form == "local") CorpusCompaction.compact _ else CorpusCompaction.compactSpark _
+        val r = run(read("arrivals"), read("corpus"), read("fps"), read("bands"))
+        assert(isLocal(r.audit))
+        assert(isLocal(r.appended) == (form == "local"), s"$what: $form form not taken")
+        // the r13 order: the fp delta lands before the other deltas are read
+        r.newFingerprints.write.mode("append").parquet(s"$dir/fps")
+        r.newBands.write.mode("append").parquet(s"$dir/bands")
+        r.appended.write.mode("append").parquet(s"$dir/corpus")
+        r.release()
+        val n = r.audit.collect()(0).getLong(5)
+        assert(read("corpus").count() == 2 + n && read("fps").count() == 2 + n,
+          s"$what ($form): the corpus and fp deltas did not append $n rows")
+        val bandRows = r.appended.select(sum(size(TextQueries.bandKeysCol(col("text")))))
+          .collect()(0).getAs[Any](0) match { case null => 0L; case v: Long => v }
+        assert(read("bands").count() == 2 * TextQueries.Bands + bandRows,
+          s"$what ($form): the band delta did not append $bandRows rows")
+        if (what.contains("every row dies")) assert(n == 0, s"$form: ${rowsOf(r.audit)}")
+        r
+      }
+      sameCorpusResult(results(0), results(1), what)
+    } finally graft.plans.Snapshot.deleteTree(root)
+  }
+
+  test("degenerate vector batches: both forms agree") {
+    import spark.implicits._
+    import graft.pipeline.VectorCompaction
+    import graft.queries.VectorQueries
+    val cents = VectorQueries.quantizerRows(spark, sf)
+    val index = VectorQueries.corpusCellIndex(spark, sf)
+    val base = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toMap
+    val cases: Seq[(String, Seq[(Long, Seq[Float])])] = Seq(
+      "an empty batch" -> Nil,
+      "a null embedding" -> Seq((9900001L, null), (9900002L, base(31L).map(x => -x))),
+      "a batch in which every row dies" -> Seq((9900001L, base(13L)), (9900002L, base(31L))))
+    cases.foreach { case (what, batch) =>
+      val arrivals = batch.toDF("vec_id", "embedding")
+      val local = VectorCompaction.compact(arrivals, index, cents)
+      val viaSpark = VectorCompaction.compactSpark(arrivals, index, cents)
+      try {
+        assert(isLocal(local.appended))
+        sameFrame(local.audit, viaSpark.audit, s"$what audit")
+        sameFrame(local.appended, viaSpark.appended, s"$what appended")
+      } finally { local.release(); viaSpark.release() }
+    }
+  }
+
+  test("both compaction forms match band keys at every band, not only the first") {
+    import spark.implicits._
+    def keys(t: String): Seq[String] = Seq(t).toDF("text")
+      .select(TextQueries.bandKeysCol(col("text"))).collect()(0).getSeq[String](0)
+    // a one-word edit of `t` whose band-0 key differs from t's while a
+    // later band's key is the same
+    def laterBandVariant(t: String): String = {
+      val (words, k) = (t.split(" "), keys(t))
+      val found = words.indices.iterator.map(i => words.updated(i, s"qx$i").mkString(" "))
+        .find { v => val kv = keys(v)
+          kv.head != k.head && kv.indices.drop(1).exists(b => kv(b) == k(b)) }
+      assert(found.isDefined, s"no later-band variant of: $t"); found.get
+    }
+    val inCorpus = "the marmot and the pika sit on the scree and the raven is calling " +
+      "from the crag while the tahr and the urial climb to the ridge"
+    val novel = "a heron is standing in the marsh and the ibis is wading to the " +
+      "bank of the stream while a jacana steps on the lily and the kite turns"
+    val corpus = Seq((1L, inCorpus, "en")).toDF("doc_id", "text", "lang")
+    val fps = corpus.select(col("doc_id"), graft.ops.Fingerprint.col(col("text")).as("fp"))
+    val bands = corpus.select(col("doc_id"),
+      posexplode(TextQueries.bandKeysCol(col("text"))).as(Seq("band", "bkey")))
+    val arrivals = Seq(
+      (9400001L, laterBandVariant(inCorpus), "en"), // tier 3 at a later band
+      (9400002L, novel, "en"),                      // survives
+      (9400003L, laterBandVariant(novel), "en")     // tier 4 at a later band
+    ).toDF("doc_id", "text", "lang")
+    val local = CorpusCompaction.compact(arrivals, corpus, fps, bands)
+    val viaSpark = CorpusCompaction.compactSpark(arrivals, corpus, fps, bands)
+    try {
+      assert(isLocal(local.appended))
+      assert(rowsOf(viaSpark.audit) == Seq("3|0|0|1|1|1"))
+      sameCorpusResult(local, viaSpark, "later-band matches")
+    } finally { local.release(); viaSpark.release() }
+  }
+
+  test("both vector forms keep a near pair's greater end when its lesser end died at the corpus tier") {
+    import spark.implicits._
+    import graft.pipeline.VectorCompaction
+    import graft.queries.VectorQueries
+    val cents = VectorQueries.quantizerRows(spark, sf)
+    val index = VectorQueries.corpusCellIndex(spark, sf)
+    val base = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().sortBy(_._1)
+    // c rotated by angle θ toward a unit direction u orthogonal to c:
+    // cos(θ = 0.03) = 0.99955 clears the 0.999 bar, cos(0.06) = 0.9982 does not
+    def rotated(c: Seq[Float], d: Seq[Float], theta: Double): Seq[Float] = {
+      val cn = math.sqrt(c.map(x => x.toDouble * x).sum)
+      val ch = c.map(_ / cn)
+      val proj = d.zip(ch).map { case (x, y) => x * y }.sum
+      val u0 = d.zip(ch).map { case (x, y) => x - proj * y }
+      val un = math.sqrt(u0.map(x => x * x).sum)
+      ch.zip(u0).map { case (x, y) => (math.cos(theta) * x + math.sin(theta) * y / un).toFloat }
+    }
+    def cells(vs: Seq[Seq[Float]]): Seq[Long] = VectorQueries.withCellAssigned(
+        vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("vec_id", "embedding"),
+        "embedding", "cell", cents)
+      .orderBy("vec_id").select("cell").as[Long].collect().toSeq
+    // a corpus vector whose two rotations stay in its cell
+    val (lesser, greater) = base.sliding(2).map { case Array((_, c), (_, d)) =>
+      (c, rotated(c, d, 0.03), rotated(c, d, 0.06)) }
+      .find { case (c, a, b) => cells(Seq(c, a, b)).distinct.size == 1 }
+      .map { case (_, a, b) => (a, b) }.get
+    val arrivals = Seq((9400001L, lesser), (9400002L, greater)).toDF("vec_id", "embedding")
+    val local = VectorCompaction.compact(arrivals, index, cents)
+    val viaSpark = VectorCompaction.compactSpark(arrivals, index, cents)
+    try {
+      assert(isLocal(local.appended))
+      assert(rowsOf(viaSpark.audit) == Seq("2|1|0|1"))
+      sameFrame(local.audit, viaSpark.audit, "audit")
+      sameFrame(local.appended, viaSpark.appended, "appended")
+    } finally { local.release(); viaSpark.release() }
+  }
 }

@@ -3,7 +3,7 @@
 
     python3 tools/ab_pairs.py --workload dispatch --pairs 10 --seed 101
     python3 tools/ab_pairs.py --base HEAD~1 --workload batch_round
-    python3 tools/ab_pairs.py --workload batch_round --traced
+    python3 tools/ab_pairs.py --workload batch_round --traced 3
 
 Run from the repository root. The base revision (default HEAD, so the
 uncommitted change is what is measured) is checked out into a temporary
@@ -26,10 +26,12 @@ base's interquartile range, relative to its median, is wider than the
 metric's bound, so the runs cannot tell a change within the bound from
 none, unless every change run reads better than every base run.
 
-With `--traced`, after the pairs of a workload it runs one `--trace 1` run
-per side at the first seed and prints every per-layer metric of
-BENCHMARK.json as base -> change, so the same command shows in which layer
-a saving landed. It changes nothing under perfbench/.
+With `--traced N` (N defaults to 1), after the pairs of a workload it runs
+N pairs of `--trace 1` runs at the first N seeds, alternating which side
+goes first, and prints the median of every per-layer metric of
+BENCHMARK.json per side as base -> change, with each side's range, so the
+same command shows in which layer a saving landed; one traced run cannot
+tell a saving from run-to-run noise. It changes nothing under perfbench/.
 """
 import argparse
 import json
@@ -105,21 +107,25 @@ def summarize(workload, runs, metrics):
 
 
 def traced(workload, runs, metrics):
-    """Per-layer metrics of one traced run per side, base -> change."""
-    base, change = runs
-    print(f"\n{workload} traced, base -> change:")
-    for side, r in (("base", base), ("change", change)):
-        if r is None or not r["correct"]:
-            print(f"  {side} traced run {'failed' if r is None else 'NOT correct'}")
-    if base is None or change is None:
+    """Per-layer metrics of the traced pairs: each side's median, base ->
+    change, and each side's range over its runs."""
+    print(f"\n{workload} traced, {len(runs)} pairs, median base -> change [base range; change range]:")
+    for i, pair in enumerate(runs):
+        for side, r in zip(("base", "change"), pair):
+            if r is None or not r["correct"]:
+                print(f"  pair {i + 1} {side} traced run {'failed' if r is None else 'NOT correct'}")
+    done = [(b, c) for b, c in runs if b is not None and c is not None]
+    if not done:
         return
     for m in metrics:
-        b = base["metrics"].get(m["name"], {}).get("value")
-        c = change["metrics"].get(m["name"], {}).get("value")
-        if b is None or c is None:
+        b = [r["metrics"][m["name"]]["value"] for r, _ in done if m["name"] in r["metrics"]]
+        c = [r["metrics"][m["name"]]["value"] for _, r in done if m["name"] in r["metrics"]]
+        if not b or not c:
             continue
-        rel = f"{(c - b) / abs(b):+.1%}" if b else ""
-        print(f"  {m['name']:<32}{b:>14.4g} -> {c:<14.4g}{rel:>8}  {m['unit']}")
+        bm, cm = statistics.median(b), statistics.median(c)
+        rel = f"{(cm - bm) / abs(bm):+.1%}" if bm else ""
+        print(f"  {m['name']:<32}{bm:>12.4g} -> {cm:<12.4g}{rel:>8}  {m['unit']:<6}"
+              f"[{min(b):.4g}, {max(b):.4g}; {min(c):.4g}, {max(c):.4g}]")
 
 
 def main():
@@ -134,8 +140,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
     ap.add_argument("--seconds", type=float, default=bench["run_seconds"])
-    ap.add_argument("--traced", action="store_true",
-                    help="then one traced run per side at the first seed")
+    ap.add_argument("--traced", type=int, nargs="?", const=1, default=0, metavar="N",
+                    help="then N pairs of traced runs at the first N seeds (default 1)")
     a = ap.parse_args()
     workloads = a.workload or [w["name"] for w in bench["workloads"]]
 
@@ -166,8 +172,12 @@ def main():
                 runs.append((got["base"], got["change"]))
             summarize(w, runs, bench["end_to_end"])
             if a.traced:
-                traced(w, [run_once(checkout, w, a.seed, a.seconds, trace=1)
-                           for checkout in (base_dir, ROOT)], bench["per_layer"])
+                pairs = []
+                for i in range(a.traced):
+                    order = [base_dir, ROOT] if i % 2 == 0 else [ROOT, base_dir]
+                    got = {c: run_once(c, w, a.seed + i, a.seconds, trace=1) for c in order}
+                    pairs.append((got[base_dir], got[ROOT]))
+                traced(w, pairs, bench["per_layer"])
     finally:
         if worktree:
             subprocess.run(["git", "worktree", "remove", "--force", worktree], cwd=ROOT)
