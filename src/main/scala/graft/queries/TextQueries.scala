@@ -36,16 +36,6 @@ object TextQueries {
     * < [[Bands]]). */
   val SimhashMaxHamming = 3
 
-  // ---- cache lifecycle ----
-
-  /** Registry of every DataFrame this module persists. Since round 9 the
-    * text pipeline registers NOTHING here — every shared base, including
-    * the tokenized corpus, is a parquet checkpoint (see below), so there is
-    * no executor memory to pin. A future RAM-cached base would re-enter
-    * the same lifecycle through [[releaseCaches]]. */
-  private val cacheRegistry =
-    scala.collection.mutable.ArrayBuffer[DataFrame]()
-
   // ---- shared-base checkpointing ----
 
   /** The shared bases below are CHECKPOINTED to local parquet rather
@@ -69,20 +59,11 @@ object TextQueries {
     * reflects text bytes only. */
   def checkpointBytes: Long = graft.plans.Snapshot.bytes
 
-  /** Unpersist every cache this module created (blocking=false: eviction
-    * proceeds in the background, callers don't wait) and drop the DSIR
-    * weight memo, so the next [[dsirBucketWeights]] recounts the corpus as
-    * it now stands (a dir grown in place gets fresh weights). Idempotent. */
-  def releaseCaches(): Unit = {
-    cacheRegistry.synchronized {
-      cacheRegistry.foreach(_.unpersist(blocking = false))
-      cacheRegistry.clear()
-    }
-    dsirModels.clear()
-  }
-
-  /** Live registered-cache count (spec hook). */
-  def activeCacheCount: Int = cacheRegistry.synchronized(cacheRegistry.size)
+  /** Drop the DSIR weight memo, so the next [[dsirBucketWeights]]
+    * recounts the corpus as it now stands (a dir grown in place gets fresh
+    * weights). The module persists no DataFrame: every shared base is a
+    * parquet checkpoint. Idempotent. */
+  def releaseCaches(): Unit = dsirModels.clear()
 
   /** Per-stage attribution of the LAST [[warmShared]] run: (stage,
     * seconds, rows, cumulative checkpoint bytes). Bench emits this into

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** [EXT] similarity search over the `embeddings` table (builder brief):
@@ -263,7 +263,10 @@ object VectorQueries {
     * (65536 cells × 64 dims ≈ 32 MB of doubles): the k>1 probe broadcasts
     * it, and [[nearestCell]] ships it with each task as one plan literal.
     * No caller trains near the cap (every query pins [[IvfCells]]); one
-    * that did would want the k=1 centroids broadcast, not inlined. */
+    * that did would want the k=1 centroids broadcast, not inlined. K also
+    * picks where the quantizer trains: a √N-sized one fits
+    * [[LocalLloydCosines]] (K x N) up to about 2,600 vectors and trains on
+    * the driver, and in Spark above. */
   private[graft] def ivfCellsFor(n: Long, maxCells: Int = 1 << 16): Int =
     math.min(maxCells.toLong,
       math.max(1L, math.round(math.sqrt(n.toDouble)))).toInt
@@ -324,9 +327,12 @@ object VectorQueries {
     * every distance rounded to 6 decimals BEFORE the argmax (cell-asc
     * tie-break) so both engines quantize identically. Each query then probes
     * only its own cell. Plan shape at 100 TB: centroids are tiny (K x dims)
-    * local rows; each Lloyd pass is one per-row [[nearestCell]] projection
-    * + one groupBy shuffle over the corpus, the probe is a cell equi-join —
-    * no cross join, no corpus shuffle beyond the per-pass aggregation. */
+    * local rows. The quantizer trains on the bounded md5-slice sample, in
+    * Spark: each Lloyd pass is one per-row [[nearestCell]] projection + one
+    * groupBy shuffle over the sample (a corpus within
+    * [[LocalLloydCosines]], like the fixtures, trains on the driver after
+    * one collect). The probe is a cell equi-join — no cross join, no
+    * corpus shuffle. */
   def v4IvfAnn(spark: SparkSession, dir: String): DataFrame =
     ivfAnn(spark, dir, nprobe = 1)
 
@@ -424,32 +430,141 @@ object VectorQueries {
   /** The memoized IVF quantizer's local rows (cell, cvec) — the (K x dims)
     * model state every assignment takes. Lloyd: seeds -> (assign -> mean)
     * x LloydIters; means rounded to 6 so the quantizer state is
-    * cross-engine identical after every pass. Each pass's centroids are
-    * collected to local rows before the next assignment: without the cut,
-    * every assignment embeds the full prior-iteration lineage and the
-    * corpus gets re-scored once per downstream action per iteration (the
-    * round-2 v4 regression). The corpus itself never leaves the
-    * executors. */
+    * cross-engine identical after every pass.
+    *
+    * A corpus of at most [[localLloydRows]]`(cells)` vectors is trained
+    * on the driver ([[lloydLocal]]): ONE bounded collect of (vec_id,
+    * embedding), and no further Spark job. The collected corpus holds the
+    * seeds and is the training set, sliced by [[trainSampleOf]] when it
+    * has more than `sampleTarget` vectors. A larger corpus — the sampled
+    * branch at production scale, or any K x N past the bound — trains in
+    * Spark ([[lloydSpark]]), where the corpus never leaves the executors.
+    * Both loops assign through [[nearestCell]] and return the same rows. */
   private[graft] def quantizerRows(spark: SparkSession, dir: String,
       cells: Int = IvfCells,
       sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] =
     quantizers((dir, cells, sampleTarget)) {
-      import spark.implicits._
-      val e = emb(spark, dir)
-      def toLocal(c: DataFrame): Seq[(Long, Seq[Double])] =
-        c.select(col("cell").cast("bigint"), col("cvec"))
-          .as[(Long, Seq[Double])].collect().toSeq
-      val seeds = e.filter(col("vec_id") < cells)
-        .select(col("vec_id").as("cell"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cvec"))
-      // train on the bounded deterministic sample (full when the corpus
-      // fits the budget); the final corpus assignment (assignCells at the
-      // consumers) still covers every vector
-      val trainSet = trainSampleOf(e, e.count(), sampleTarget)
-      (1 to LloydIters).foldLeft(toLocal(seeds)) { (c, _) =>
-        toLocal(lloydMeans(assignCells(c, trainSet, 1), "embedding", "cell"))
-      }
+      trainQuantizer(emb(spark, dir), cells, sampleTarget)
     }
+
+  /** [[lloydLocal]] when `e` has at most [[localLloydRows]]`(cells)`
+    * vectors, [[lloydSpark]] when it has more. */
+  private[graft] def trainQuantizer(e: DataFrame, cells: Int,
+      sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] = {
+    val vecs = e.select(col("vec_id"), col("embedding"))
+    graft.plans.BoundedCollect(vecs, localLloydRows(cells)) match {
+      case Some(rows) => lloydLocal(vecs, rows, cells, sampleTarget)
+      case None => lloydSpark(vecs, cells, sampleTarget)
+    }
+  }
+
+  /** The largest Lloyd pass run on the driver, in cosine evaluations
+    * (training vectors x cells): 16,384 vectors at the fixture's K=8.
+    * Measured at 64 dims on 4 cores (JDK 17, Spark 4.1.2, `local[4]`): a
+    * local pass costs about 1.2 µs per evaluation, one thread running the
+    * interpreted [[nearestCell]], so a pass at the bound takes about
+    * 0.25 s and the whole local train about 0.5 s, against 0.8 s for the
+    * Spark loop; at twice the bound the two tie, and at 100,000 vectors
+    * the Spark loop takes half the local time. The collected corpus costs
+    * about 1.8 KB of driver heap per 64-dim vector (boxed rows plus the
+    * local relation), about 30 MB at the bound at K=8, growing linearly
+    * with the dims. */
+  private[graft] val LocalLloydCosines: Long = 1L << 17
+
+  /** Vectors [[trainQuantizer]] collects at most for a K-cell quantizer. */
+  private[graft] def localLloydRows(cells: Int): Int =
+    (LocalLloydCosines / math.max(cells, 1)).toInt
+
+  /** The (cell, cvec) rows of a centroid frame, as local quantizer rows. */
+  private def centroidRows(c: DataFrame): Seq[(Long, Seq[Double])] = {
+    import c.sparkSession.implicits._
+    c.select(col("cell").cast("bigint"), col("cvec"))
+      .as[(Long, Seq[Double])].collect().toSeq
+  }
+
+  /** The seed centroids: vectors vec_id < `cells`, widened to double. */
+  private def seedsOf(e: DataFrame, cells: Int): DataFrame =
+    e.filter(col("vec_id") < cells)
+      .select(col("vec_id").as("cell"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cvec"))
+
+  /** Lloyd in Spark over the (vec_id, embedding) frame `e`: a count, a
+    * seed collect, then per pass one [[nearestCell]] projection and a
+    * [[lloydMeans]] shuffle. Each pass's centroids are collected to local
+    * rows before the next assignment: without the cut, every assignment
+    * embeds the full prior-iteration lineage and the corpus gets
+    * re-scored once per downstream action per iteration (the round-2 v4
+    * regression). */
+  private[graft] def lloydSpark(e: DataFrame, cells: Int,
+      sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] = {
+    // train on the bounded deterministic sample (full when the corpus
+    // fits the budget); the final corpus assignment (assignCells at the
+    // consumers) still covers every vector
+    val trainSet = trainSampleOf(e, e.count(), sampleTarget)
+    (1 to LloydIters).foldLeft(centroidRows(seedsOf(e, cells))) { (c, _) =>
+      centroidRows(lloydMeans(assignCells(c, trainSet, 1), "embedding", "cell"))
+    }
+  }
+
+  /** Lloyd on the driver over `rows`, the collected rows of the
+    * (vec_id, embedding) frame `e`. They become one local relation, so
+    * the seeds, the md5 slice and each pass's [[assignCells]] are the
+    * Spark loop's own expressions, folded by the optimizer
+    * (ConvertToLocalRelation) into local rows without a Spark job. Each
+    * pass's means are [[localMeans]]. */
+  private[graft] def lloydLocal(e: DataFrame, rows: Array[Row], cells: Int,
+      sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] = {
+    val spark = e.sparkSession
+    val corpus = spark.createDataFrame(java.util.Arrays.asList(rows: _*), e.schema)
+    val trainSet = trainSampleOf(corpus, rows.length.toLong, sampleTarget)
+    val trainRows = if (trainSet eq corpus) rows else trainSet.collect()
+    (1 to LloydIters).foldLeft(centroidRows(seedsOf(corpus, cells))) { (c, _) =>
+      // a local relation keeps its row order, so the i-th cell is the
+      // i-th training row's
+      val cellOf = assignCells(c, trainSet, 1).select(col("cell")).collect().map(_.getLong(0))
+      localMeans(spark, cellOf, trainRows)
+    }
+  }
+
+  /** [[lloydMeans]] on the driver: each cell's per-position mean of its
+    * members' non-null elements (`rows`' embeddings, member i in cell
+    * `cellOf(i)`), summed as doubles in row order and divided by their
+    * count, as Spark's `avg` does. A position with no element averages to
+    * null, and a cell with no position (every member null or empty) drops
+    * out. The 6-decimal rounding is Spark's own `round`, folded over a
+    * local relation, so no copy of its half-up rule lives here. Rows come
+    * back by cell. */
+  private def localMeans(spark: SparkSession, cellOf: Array[Long],
+      rows: Array[Row]): Seq[(Long, Seq[Double])] = {
+    import spark.implicits._
+    // per cell: the sums and counts of each position seen so far
+    val acc = scala.collection.mutable.TreeMap[Long, (Array[Double], Array[Long])]()
+    var i = 0
+    while (i < rows.length) {
+      if (!rows(i).isNullAt(1)) {
+        val v = rows(i).getSeq[Any](1)
+        val (s0, n0) = acc.getOrElse(cellOf(i), (Array.emptyDoubleArray, Array.emptyLongArray))
+        val (s, n) =
+          if (v.length <= s0.length) (s0, n0)
+          else (java.util.Arrays.copyOf(s0, v.length), java.util.Arrays.copyOf(n0, v.length))
+        if (s ne s0) acc(cellOf(i)) = (s, n)
+        var p = 0
+        while (p < v.length) {
+          val x = v(p)
+          if (x != null) { s(p) += x.asInstanceOf[Float].toDouble; n(p) += 1L }
+          p += 1
+        }
+      }
+      i += 1
+    }
+    val means: Seq[(Long, Seq[Option[Double]])] = acc.toSeq.collect {
+      case (cell, (s, n)) if s.nonEmpty =>
+        cell -> s.indices.map(p => if (n(p) == 0L) None else Some(s(p) / n(p)))
+    }
+    means.toDF("cell", "mean")
+      .select(col("cell"), transform(col("mean"), x => round(x, 6)).as("cvec"))
+      .as[(Long, Seq[Double])].collect().toSeq
+  }
 
   /** `df` with `outCol` = the [[nearestCell]] of `embCol`: one projection,
     * no shuffle, no state — streaming-legal, so the ingest gate, the cell
@@ -908,7 +1023,6 @@ object VectorQueries {
     val cents = quantizerRows(spark, dir)
     val assigned = assignCells(cents, emb(spark, dir), 1)
       .select(col("vec_id"), col("cell"))
-    val tot = assigned.agg(count(lit(1)).cast("bigint").as("n_total"))
     val fair = 1000000L / IvfCells
     // LEFT join from the quantizer's cell universe (r11 advice): a DEAD
     // cell — zero assigned vectors, arguably the strongest drift signal a
@@ -916,6 +1030,9 @@ object VectorQueries {
     // the full fair share, not silently vanish from the output.
     val counts = assigned.groupBy(col("cell"))
       .agg(count(lit(1)).cast("bigint").as("n_vecs"))
+    // the total is the counts' sum (cell -1, the null embeddings, is a
+    // group of its own), so both sides reuse one exchange: one corpus scan
+    val tot = counts.agg(sum(col("n_vecs")).cast("bigint").as("n_total"))
     cents.map(_._1).toDF("cell").join(counts, Seq("cell"), "left")
       .select(col("cell"), coalesce(col("n_vecs"), lit(0L)).as("n_vecs"))
       .crossJoin(broadcast(tot))

@@ -31,7 +31,9 @@ N pairs of `--trace 1` runs at the first N seeds, alternating which side
 goes first, and prints the median of every per-layer metric of
 BENCHMARK.json per side as base -> change, with each side's range, so the
 same command shows in which layer a saving landed; one traced run cannot
-tell a saving from run-to-run noise. It changes nothing under perfbench/.
+tell a saving from run-to-run noise. `plans.ckpt_bytes` sums over the
+units of a run, so it is also printed divided by each run's unit count
+(`plans.ckpt_bytes/unit`). It changes nothing under perfbench/.
 """
 import argparse
 import json
@@ -117,15 +119,25 @@ def traced(workload, runs, metrics):
     done = [(b, c) for b, c in runs if b is not None and c is not None]
     if not done:
         return
-    for m in metrics:
-        b = [r["metrics"][m["name"]]["value"] for r, _ in done if m["name"] in r["metrics"]]
-        c = [r["metrics"][m["name"]]["value"] for _, r in done if m["name"] in r["metrics"]]
+
+    def row(name, unit, b, c):
         if not b or not c:
-            continue
+            return
         bm, cm = statistics.median(b), statistics.median(c)
         rel = f"{(cm - bm) / abs(bm):+.1%}" if bm else ""
-        print(f"  {m['name']:<32}{bm:>12.4g} -> {cm:<12.4g}{rel:>8}  {m['unit']:<6}"
+        print(f"  {name:<32}{bm:>12.4g} -> {cm:<12.4g}{rel:>8}  {unit:<6}"
               f"[{min(b):.4g}, {max(b):.4g}; {min(c):.4g}, {max(c):.4g}]")
+
+    for m in metrics:
+        name = m["name"]
+        row(name, m["unit"], [r["metrics"][name]["value"] for r, _ in done if name in r["metrics"]],
+            [r["metrics"][name]["value"] for _, r in done if name in r["metrics"]])
+        if name == "plans.ckpt_bytes":
+            # the snapshot bytes of a run add up over its units, so a run
+            # that fits one more unit reads bigger; per unit they compare
+            row(name + "/unit", m["unit"],
+                *[[r["metrics"][name]["value"] / r["units"] for r in side
+                   if name in r["metrics"] and r["units"]] for side in zip(*done)])
 
 
 def main():
