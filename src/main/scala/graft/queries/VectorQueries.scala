@@ -331,8 +331,8 @@ object VectorQueries {
     * Spark: each Lloyd pass is one per-row [[nearestCell]] projection + one
     * groupBy shuffle over the sample (a corpus within
     * [[LocalLloydCosines]], like the fixtures, trains on the driver after
-    * one collect). The probe is a cell equi-join — no cross join, no
-    * corpus shuffle. */
+    * a count and one collect). The probe is a cell equi-join — no cross
+    * join, no corpus shuffle. */
   def v4IvfAnn(spark: SparkSession, dir: String): DataFrame =
     ivfAnn(spark, dir, nprobe = 1)
 
@@ -432,14 +432,16 @@ object VectorQueries {
     * x LloydIters; means rounded to 6 so the quantizer state is
     * cross-engine identical after every pass.
     *
-    * A corpus of at most [[localLloydRows]]`(cells)` vectors is trained
-    * on the driver ([[lloydLocal]]): ONE bounded collect of (vec_id,
-    * embedding), and no further Spark job. The collected corpus holds the
-    * seeds and is the training set, sliced by [[trainSampleOf]] when it
-    * has more than `sampleTarget` vectors. A larger corpus — the sampled
-    * branch at production scale, or any K x N past the bound — trains in
-    * Spark ([[lloydSpark]]), where the corpus never leaves the executors.
-    * Both loops assign through [[nearestCell]] and return the same rows. */
+    * The corpus is counted first, as the Spark loop always did. One of
+    * at most [[localLloydRows]]`(cells)` vectors is then trained on the
+    * driver ([[lloydLocal]]): ONE collect of (vec_id, embedding), and no
+    * further Spark job. The collected corpus holds the seeds and is the
+    * training set, sliced by [[trainSampleOf]] when it has more than
+    * `sampleTarget` vectors. A larger corpus — the sampled branch at
+    * production scale, or any K x N past the bound — trains in Spark
+    * ([[lloydSpark]], given the count), where the corpus never leaves the
+    * executors. Both loops assign through [[nearestCell]] and return the
+    * same rows. */
   private[graft] def quantizerRows(spark: SparkSession, dir: String,
       cells: Int = IvfCells,
       sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] =
@@ -448,14 +450,22 @@ object VectorQueries {
     }
 
   /** [[lloydLocal]] when `e` has at most [[localLloydRows]]`(cells)`
-    * vectors, [[lloydSpark]] when it has more. */
+    * vectors, [[lloydSpark]] when it has more. The path is picked by a
+    * count, not by a bounded collect that gives up past the bound: such a
+    * probe reads and ships up to bound + 1 vectors per partition only to
+    * throw them away, and made a train past the bound 6-10% slower than
+    * the Spark loop alone (32,768 and 100,000 vectors at K=8), while the
+    * count is the one the Spark loop needs anyway. Below the bound the
+    * count costs about 50 ms of a 0.1-0.15 s train (500 and 2,000
+    * vectors, against 0.25-0.30 s for the Spark loop;
+    * `plans/local_lloyd/train_paths.txt`). */
   private[graft] def trainQuantizer(e: DataFrame, cells: Int,
       sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] = {
     val vecs = e.select(col("vec_id"), col("embedding"))
-    graft.plans.BoundedCollect(vecs, localLloydRows(cells)) match {
-      case Some(rows) => lloydLocal(vecs, rows, cells, sampleTarget)
-      case None => lloydSpark(vecs, cells, sampleTarget)
-    }
+    val n = vecs.count()
+    // the count bounds the collect: both read the same file listing
+    if (n <= localLloydRows(cells)) lloydLocal(vecs, vecs.collect(), cells, sampleTarget)
+    else lloydSpark(vecs, cells, sampleTarget, Some(n))
   }
 
   /** The largest Lloyd pass run on the driver, in cosine evaluations
@@ -471,7 +481,8 @@ object VectorQueries {
     * with the dims. */
   private[graft] val LocalLloydCosines: Long = 1L << 17
 
-  /** Vectors [[trainQuantizer]] collects at most for a K-cell quantizer. */
+  /** Vectors [[trainQuantizer]] trains on the driver at most for a K-cell
+    * quantizer. */
   private[graft] def localLloydRows(cells: Int): Int =
     (LocalLloydCosines / math.max(cells, 1)).toInt
 
@@ -488,19 +499,20 @@ object VectorQueries {
       .select(col("vec_id").as("cell"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("cvec"))
 
-  /** Lloyd in Spark over the (vec_id, embedding) frame `e`: a count, a
-    * seed collect, then per pass one [[nearestCell]] projection and a
-    * [[lloydMeans]] shuffle. Each pass's centroids are collected to local
+  /** Lloyd in Spark over the (vec_id, embedding) frame `e`: a count
+    * (unless `knownCount` gives it), a seed collect, then per pass one
+    * [[nearestCell]] projection and a [[lloydMeans]] shuffle. Each pass's centroids are collected to local
     * rows before the next assignment: without the cut, every assignment
     * embeds the full prior-iteration lineage and the corpus gets
     * re-scored once per downstream action per iteration (the round-2 v4
     * regression). */
   private[graft] def lloydSpark(e: DataFrame, cells: Int,
-      sampleTarget: Long = TrainSampleTarget): Seq[(Long, Seq[Double])] = {
+      sampleTarget: Long = TrainSampleTarget,
+      knownCount: Option[Long] = None): Seq[(Long, Seq[Double])] = {
     // train on the bounded deterministic sample (full when the corpus
     // fits the budget); the final corpus assignment (assignCells at the
     // consumers) still covers every vector
-    val trainSet = trainSampleOf(e, e.count(), sampleTarget)
+    val trainSet = trainSampleOf(e, knownCount.getOrElse(e.count()), sampleTarget)
     (1 to LloydIters).foldLeft(centroidRows(seedsOf(e, cells))) { (c, _) =>
       centroidRows(lloydMeans(assignCells(c, trainSet, 1), "embedding", "cell"))
     }
@@ -1023,6 +1035,7 @@ object VectorQueries {
     val cents = quantizerRows(spark, dir)
     val assigned = assignCells(cents, emb(spark, dir), 1)
       .select(col("vec_id"), col("cell"))
+    val tot = assigned.agg(count(lit(1)).cast("bigint").as("n_total"))
     val fair = 1000000L / IvfCells
     // LEFT join from the quantizer's cell universe (r11 advice): a DEAD
     // cell — zero assigned vectors, arguably the strongest drift signal a
@@ -1030,9 +1043,6 @@ object VectorQueries {
     // the full fair share, not silently vanish from the output.
     val counts = assigned.groupBy(col("cell"))
       .agg(count(lit(1)).cast("bigint").as("n_vecs"))
-    // the total is the counts' sum (cell -1, the null embeddings, is a
-    // group of its own), so both sides reuse one exchange: one corpus scan
-    val tot = counts.agg(sum(col("n_vecs")).cast("bigint").as("n_total"))
     cents.map(_._1).toDF("cell").join(counts, Seq("cell"), "left")
       .select(col("cell"), coalesce(col("n_vecs"), lit(0L)).as("n_vecs"))
       .crossJoin(broadcast(tot))

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.VectorQueries
 
-/** The IVF quantizer's two Lloyd loops: on the driver over one bounded
-  * collect (`lloydLocal`) and in Spark (`lloydSpark`). Every consumer's
+/** The IVF quantizer's two Lloyd loops: on the driver over one collect
+  * (`lloydLocal`) and in Spark (`lloydSpark`). Every consumer's
   * oracle hash rests on the quantizer, so the two must return the same
   * rows wherever `trainQuantizer` may pick either. */
 class QuantizerSpec extends AnyFunSuite {
@@ -77,20 +77,22 @@ class QuantizerSpec extends AnyFunSuite {
     assert(bound.toLong * cells == VectorQueries.LocalLloydCosines && bound == 32)
     val at = e.filter(col("vec_id") < bound)
     val over = e.filter(col("vec_id") <= bound)
+    val countJobs = jobsOf(at.count())
     var atRows, overRows: Seq[(Long, Seq[Double])] = Nil
-    assert(jobsOf { atRows = VectorQueries.trainQuantizer(at, cells) } == 1,
-      "at the bound: one bounded collect, then no Spark job")
-    assert(jobsOf { overRows = VectorQueries.trainQuantizer(over, cells) } > 1,
-      "above the bound: the Spark loop")
+    assert(jobsOf { atRows = VectorQueries.trainQuantizer(at, cells) } == countJobs + 1,
+      "at the bound: the count, one collect, then no Spark job")
+    assert(jobsOf { overRows = VectorQueries.trainQuantizer(over, cells) } > countJobs + 1,
+      "above the bound: the count, then the Spark loop")
     assert(byCell(atRows) == byCell(VectorQueries.lloydSpark(at, cells)))
     assert(byCell(overRows) == byCell(local(over, cells)))
     assert(atRows.size == bound && overRows.size == bound + 1)
   }
 
-  test("a cold local train runs one Spark job") {
-    e.schema // resolved outside the count
+  test("a cold local train runs the count and one collect") {
+    e.schema // resolved outside the job counts
+    val countJobs = jobsOf(e.count())
     var q: Seq[(Long, Seq[Double])] = Nil
-    assert(jobsOf { q = VectorQueries.trainQuantizer(e, 8) } == 1)
+    assert(jobsOf { q = VectorQueries.trainQuantizer(e, 8) } == countJobs + 1)
     assert(q.size == 8)
   }
 
